@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SURVEY.md §2 query at the given scale
   * factor and prints one JSON line. Results are materialized through
   * the noop sink — full plan execution, no driver collect, and none of
@@ -62,6 +60,16 @@ object Bench {
     (1 to 2).map(_ => pass()).min
   }
 
+  /** The queries that stage one-time artifacts for the measured
+    * corpus (graph index + deltas, IVF index + delta, q27/q29/q36
+    * layouts, t20's BPE merge table — shared by t22/d23 — and the
+    * d16/d20 sweeps); [[main]] runs them once untimed at the bench SF.
+    * Every name is a registered query (QueriesSpec). */
+  val Stagers: Set[String] = Set("q27_bucketed_join", "q29_partition_prune",
+    "q36_zorder_skip", "t20_bpe_learned", "d16_manifest_admit",
+    "d20_cross_batch_cluster", "s11_ivf_persist", "s17_ivf_incremental",
+    "s27_graph_ann", "s29_graph_incremental", "s30_graph_delete")
+
   def main(args: Array[String]): Unit = {
     val mainT0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - mainT0) / 1e9
@@ -96,14 +104,7 @@ object Bench {
     val calibParMs = hostCalibParMs(parThreads)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     // ERROR, not WARN: the streaming queries emit several WARN lines
     // per trigger (checkpoint/AQE notices) late in the alphabetical
     // sweep, and BENCH_r12's 2 KB capture tail was ~85% WARN noise —
@@ -138,14 +139,11 @@ object Bench {
       .filter { case (n, _) => only.forall(_(n)) }
     // Untimed warm-up at the smallest SF: pays JIT/codegen compilation
     // once so the timed pass measures steady-state execution.
-    for ((_, fn) <- ordered)
+    for ((n, fn) <- ordered)
       try fn(spark, "/root/testdata/sf0.001").write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warm-up $n failed: ${e.getMessage}") }
     // Untimed STAGING touch at the bench SF (r20, VERDICT r19 #1):
-    // the queries that stage one-time artifacts for the measured
-    // corpus (graph index + deltas, IVF index + delta, q27/q29/q36
-    // layouts, t20's BPE merge table — shared by t22/d23 — and the
-    // d16/d20 sweeps) run once untimed, so the build cost never lands
+    // the [[Stagers]] run once untimed, so the build cost never lands
     // in a timed sample. A best-of-3 run absorbed that in the pass
     // minimum, but the driver's repeats=1 run priced s29's whole
     // index+delta staging into its only sample (10.53 s vs 2.9-3.3 s
@@ -154,13 +152,9 @@ object Bench {
     // 185 queries at the bench SF before the timed passes measured
     // 5-15% slower timed passes from the accumulated heap/GC pressure
     // (A/B in OPTIMIZATION_r20.md), so only the stagers run here.
-    val stagers = Set("q27_bucketed_join", "q29_partition_prune",
-      "q36_zorder_skip", "t20_bpe_learned", "d16_manifest_admit",
-      "d20_cross_batch_cluster", "s11_ivf_persist", "s17_ivf_incremental",
-      "s27_graph_ann", "s29_graph_incremental", "s30_graph_delete")
-    for ((n, fn) <- ordered if stagers(n))
+    for ((n, fn) <- ordered if Stagers(n))
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] stager $n failed: ${e.getMessage}") }
     // Best-of-N per query, N = whole-sweep passes (not back-to-back
     // reruns): host-contention windows on a shared box last minutes and
     // can inflate one query 10x+. Consecutive executions of the same
@@ -288,11 +282,10 @@ object Bench {
         "\"" + k + s"""":{"calib_ms":${c.toLong},"calib_par_ms":${p.toLong},"scale":${
           f(BenchGate.rawScale(c, p))}}"""
     }.mkString("{", ",", "}")
-    // run-level boolean for history consumers (VERDICT r18 #2): a run
-    // with ANY contended-classified trip is not a clean observation —
-    // bench_compare.py and budget re-bases exclude it mechanically
-    // instead of adjudicating prose
-    val contendedRun = verdicts.exists(_._4 == BenchGate.Contended)
+    // run-level boolean for history consumers (VERDICT r18 #2): see
+    // BenchGate.contendedRun
+    val contendedRun = BenchGate.contendedRun(calibMs.toDouble, calibParMs.toDouble,
+      verdicts.map(_._4))
     val full =
       s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","n_failed":$nFailed,"budget_gated":$budgetGated,"over_budget":$over,"contended":$contended,"trip_calib":$tripCalib,"contended_run":$contendedRun,"repeats":$repeats,"calib_ms":$calibMs,"calib_par_ms":$calibParMs,"calib_scale":${f(calibScale)}}"""
     // The stdout metric line stays SHORT (~150 bytes): BENCH_r09 came

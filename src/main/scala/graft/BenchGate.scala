@@ -53,6 +53,16 @@ object BenchGate {
   def gateScale(calibMs: Double, calibParMs: Double): Double =
     math.min(2.0, rawScale(calibMs, calibParMs))
 
+  /** Run-level flag for history consumers (VERDICT r18 #2): a run is
+    * not a clean observation when ANY trip was classified
+    * [[Contended]], or when its start-of-sweep calibration is itself
+    * beyond [[ContendedProbeScale]] (VERDICT r20 #1: the gate scale is
+    * clamped at 2.0, so a contended window that trips no query could
+    * never set the flag from trips alone). bench_compare.py and budget
+    * re-bases exclude such runs mechanically. */
+  def contendedRun(calibMs: Double, calibParMs: Double, verdicts: Seq[Verdict]): Boolean =
+    rawScale(calibMs, calibParMs) > ContendedProbeScale || verdicts.contains(Contended)
+
   sealed trait Verdict
   /** Under the host-normalized 2x budget. */
   case object Ok extends Verdict

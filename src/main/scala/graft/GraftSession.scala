@@ -26,6 +26,14 @@ object GraftSession {
       // catalog tables (bucketed-join path) land outside the repo
       .config("spark.sql.warehouse.dir",
         System.getProperty("java.io.tmpdir") + "/graft_warehouse")
+      // Hadoop caches one `file:` filesystem per scheme and user, not
+      // per conf: the class is fixed here, before the session's first
+      // `file:` access, never per query
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      // early testdata generations wrote events.ts as parquet
+      // TIMESTAMP(NANOS), which the vectorized reader rejects unless
+      // read as a Long (see Tables.events)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   def local(cpus: Int = 32): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()

@@ -22,7 +22,8 @@ object Tables {
   /** `events.ts` is normalized to an epoch-nanos Long at this boundary,
     * whatever the file's physical type: early testdata generations wrote
     * parquet TIMESTAMP(NANOS) (which Spark's vectorized reader rejects —
-    * `nanosAsLong` reads it as the Long directly), the round-10 refresh
+    * [[GraftSession]] sets `nanosAsLong`, which reads it as the Long
+    * directly), the round-10 refresh
     * writes timestamp[us] (read as TIMESTAMP_NTZ, converted here via the
     * session's UTC clock). All downstream event-time logic is pure
     * integer math on the nanos column, and the DuckDB oracles read the
@@ -30,7 +31,6 @@ object Tables {
     * timezone differences are confined to this one conversion.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw

@@ -31,8 +31,13 @@ object Dedup {
       // the corpus arrives as few dense files; spread rows across the
       // cluster BEFORE the expensive explode+hash work, not after
       .spreadToCores
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(1, length(text) - 4), i -> substring(text, i, 5))")).as("sh"))
+      // under 5 characters Spark's sequence(1, length - 4) runs
+      // DESCENDING (bogus shingles) where the oracles' generate_series
+      // yields none: such texts get the empty array
+      .select(col("doc_id"), explode(
+        when(length(col("text")) >= 5,
+          expr("transform(sequence(1, length(text) - 4), i -> substring(text, i, 5))"))
+          .otherwise(expr("CAST(array() AS array<string>)"))).as("sh"))
 
   /** Distinct (doc_id, shingle) pairs — one dedup shuffle on top. */
   private[graft] def shinglesDistinct(docs: DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft.genai
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QFn, Tables}
@@ -375,8 +375,11 @@ object GenAI {
     * end state relationally, so the driver literally checks
     * "run + resume over partial state ≡ one logical pass".
     *
-    * Scale: both runs are the two-job workflow (JSONL write + result
-    * save); the resume anti-join is a doc_id equi-join against the
+    * Scale: each run evaluates its input subtree once (see
+    * [[BatchWorkflow]]). The query runs 18 jobs while it is built —
+    * the corpus scan's schema read, the verdict materialization, the
+    * initial run's 7 and the resume's 9 — and 1 when executed; the
+    * resume anti-join is a doc_id equi-join against the
     * saved outputs, no driver-side id set. The staging write is priced
     * in-query (the q27 pattern).
     */
@@ -395,15 +398,17 @@ object GenAI {
     val docs = Tables.documents(s, d).filter(col("doc_id").isNotNull)
     // r20 (guide §2.4): the validation verdicts feed the valid-id
     // semi-join (which BOTH workflow runs re-read) and the rejected
-    // tail — materialized once (doc-level verdict metadata).
+    // tail — materialized once (doc-level verdict metadata). The corpus
+    // max id (one verdict per doc) is observed on the same job.
+    val corpusMax = Observation()
     val validated = Validation.validate(Requests.chatRequests(docs))
       .select(col("doc_id"), col("is_valid"), col("reason"))
+      .observe(corpusMax, max(col("doc_id")).as("mx"))
       .localCheckpoint()
     val validDocs = docs.join(
       validated.filter(col("is_valid")).select(col("doc_id")), Seq("doc_id"))
-    // corpus max id — a metadata-sized driver scalar (t10's documented
-    // pattern); division-first split form cannot ANSI-overflow
-    val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
+    // division-first split form cannot ANSI-overflow
+    val mx = corpusMax.get("mx").asInstanceOf[Long]
     val initial = BatchWorkflow.run(
       validDocs.filter(col("doc_id") <= lit(mx - mx / 5)), prefix.toString)
     val resumed = BatchWorkflow.resume(validDocs, prefix.toString)

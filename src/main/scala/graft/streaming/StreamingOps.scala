@@ -126,7 +126,6 @@ object StreamingOps {
     * keeps the marker out of the stream.
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = stageEventSplits(s, d, "graft_stream_", 1)
     s.readStream.schema(eventsSchema)
       .option("pathGlobFilter", "b*.parquet")
@@ -142,7 +141,6 @@ object StreamingOps {
     * therefore st8's oracle — is deterministic.
     */
   private def eventsStreamMulti(s: SparkSession, d: String, nFiles: Int): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = stageEventSplits(s, d, "graft_stream_multi_", nFiles)
     s.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1")
@@ -692,7 +690,6 @@ object StreamingOps {
     * time-ordered from the bus anyway).
     */
   private def eventsStreamTimeOrdered(s: SparkSession, d: String, nFiles: Int): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = java.nio.file.Paths.get(d, "events.parquet")
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),

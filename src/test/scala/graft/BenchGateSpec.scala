@@ -59,6 +59,20 @@ class BenchGateSpec extends AnyFunSuite {
       Some((1.0 * Ref, 1.4 * Ref))) == BenchGate.Contended)
   }
 
+  test("contended_run: a contended trip, or a start calibration beyond ContendedProbeScale") {
+    val quiet = Seq(BenchGate.Ok, BenchGate.OverBudget)
+    assert(!BenchGate.contendedRun(1.1 * Ref, 1.2 * Ref, quiet))
+    assert(BenchGate.contendedRun(1.1 * Ref, 1.2 * Ref, quiet :+ BenchGate.Contended))
+    // a synthetic high-calibration run with no trips at all: the gate
+    // scale clamps at 2.0, the flag reads the raw scale
+    assert(BenchGate.gateScale(1.0 * Ref, 4.0 * Ref) == 2.0)
+    assert(BenchGate.contendedRun(1.0 * Ref, 4.0 * Ref, Nil))
+    assert(BenchGate.contendedRun(4.0 * Ref, 1.0 * Ref, Seq(BenchGate.Ok)))
+    // boundary: exactly at the threshold is NOT beyond it
+    val at = BenchGate.ContendedProbeScale * Ref
+    assert(!BenchGate.contendedRun(at, at, Nil))
+  }
+
   test("gateScale clamps to [0.5, 2.0]; rawScale only floors") {
     assert(BenchGate.gateScale(0.1 * Ref, 0.1 * Ref) == 0.5)
     assert(BenchGate.gateScale(5 * Ref, 5 * Ref) == 2.0)

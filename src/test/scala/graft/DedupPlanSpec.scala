@@ -369,6 +369,20 @@ class DedupPlanSpec extends SparkSpec {
     assert(sh(4L) === Set("x x x"), "duplicate shingles must dedup")
   }
 
+  test("char shingles of sub-5-character texts: none, as the oracles' generate_series") {
+    import spark.implicits._
+    val texts = Seq(1L -> "", 2L -> "abcd", 3L -> "abcde", 4L -> "abcdef")
+    val got = dedup.Dedup.shingles(texts.toDF("doc_id", "text"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap.withDefaultValue(Nil)
+    // the d-query oracles' CharShingleCte: generate_series(1, length - 4)
+    // is empty below 1, and `1 to n` mirrors it
+    for ((id, t) <- texts)
+      assert(got(id) === (1 to t.length - 4).map(i => t.substring(i - 1, i + 4)),
+        s"doc $id '$t'")
+    assert(got(4L) === Seq("abcde", "bcdef"))
+  }
+
   test("d8 verifies hamming via codegen'd bit_count, not an interpreted per-bit fold") {
     val plan = SparkEntry.queries("d8_simhash_pairs")(spark, sf)
       .queryExecution.executedPlan.toString

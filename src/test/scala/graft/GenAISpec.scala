@@ -103,6 +103,96 @@ class GenAISpec extends SparkSpec {
     assert(r.results.isEmpty && r.errors.isEmpty)
   }
 
+  /** Spark jobs `f` submits: job ids are handed out in submission
+    * order, so they are the ids strictly between two marker jobs, read
+    * once the listener bus has delivered the second marker. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marks = new java.util.concurrent.ConcurrentHashMap[String, Int]
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("graft.test.mark")))
+          .foreach(marks.put(_, j.jobId))
+    }
+    def mark(m: String): Unit = {
+      sc.setLocalProperty("graft.test.mark", m)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.mark", null)
+    }
+    sc.addSparkListener(l)
+    try {
+      mark("before")
+      val r = f
+      mark("after")
+      val deadline = System.nanoTime() + 30000000000L
+      while (!marks.containsKey("after") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marks.containsKey("after"), "listener bus never delivered the marker job")
+      (r, marks.get("after") - marks.get("before") - 1)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("run and resume evaluate their input subtree once: pinned job counts") {
+    val base = java.nio.file.Files.createTempDirectory("graft_wf_jobs").toString
+    // materialization + JSONL write + manifest (map, result) + two
+    // saves; the pre-flight verdict and the status ride as observed
+    // metrics, not jobs of their own
+    // built outside the count: the parquet scan's schema read is a job
+    val (head, all) = (docs.filter(col("doc_id").between(1, 60)),
+      docs.filter(col("doc_id").between(1, 96)))
+    val (first, runJobs) = jobsOf(BatchWorkflow.run(head, base))
+    assert(first.finalStatus == "completed_with_errors") // doc 53
+    assert(runJobs == 6, s"run: $runJobs jobs")
+    // resume's input subtree adds the saved-JSONL scan, its distinct
+    // and the anti-join, all inside the one materialization
+    val (resumed, resumeJobs) = jobsOf(BatchWorkflow.resume(all, base))
+    assert(resumed.finalStatus == "completed")
+    assert(resumed.results.count() == 36)
+    assert(resumeJobs == 8, s"resume: $resumeJobs jobs")
+  }
+
+  test("pre-flight sample is the orderBy(doc_id).limit(1) row, nulls first") {
+    import spark.implicits._
+    val long = "slow " * 1000 // user_content over 4000 chars: prompt_too_long
+    val cases = Seq(
+      // null id sorts first: its invalid request halts although doc 1 is valid
+      Seq((None, long, "en"), (Some(1L), "fast", "en"), (Some(2L), "small", "fr")),
+      // null id sorts first and is valid: doc 0 (max_tokens 0) is not the sample
+      Seq((None, "fast", "en"), (Some(0L), "fast", "en"), (Some(1L), "big", "de")),
+      // lowest id invalid (97 % 97 = 0), the rest valid
+      Seq((Some(98L), "fast", "en"), (Some(97L), "slow", "es"), (Some(99L), "big", "en")),
+      // lowest id valid, a later one invalid: not the sample
+      Seq((Some(96L), "fast", "en"), (Some(97L), "slow", "es")))
+    for ((rows, i) <- cases.zipWithIndex) {
+      val in = rows.toDF("doc_id", "text", "lang")
+      val probe = Validation.validate(Requests.chatRequests(in).orderBy(col("doc_id")).limit(1))
+      val sampleInvalid = probe.filter(!col("is_valid")).count() > 0
+      val base = java.nio.file.Files.createTempDirectory("graft_wf_sample").toString
+      val r = BatchWorkflow.run(in, base)
+      assert((r.finalStatus == "validation_failed") == sampleInvalid,
+        s"case $i: ${r.finalStatus}, sample invalid = $sampleInvalid")
+    }
+    assert(Seq(true, false, true, false) == cases.map { rows =>
+      Validation.validate(Requests.chatRequests(rows.toDF("doc_id", "text", "lang"))
+        .orderBy(col("doc_id")).limit(1)).filter(!col("is_valid")).count() > 0
+    }, "the cases must cover both verdicts")
+  }
+
+  test("the workflow's observations do not collide with the caller's own") {
+    val base = java.nio.file.Files.createTempDirectory("graft_wf_obs").toString
+    // a caller observing its input under the names a workflow would
+    // pick for its own probes
+    val mine = org.apache.spark.sql.Observation("sample")
+    val in = docs.filter(col("doc_id").between(1, 40))
+      .observe(mine, count(lit(1)).as("n"))
+      .observe("preflight", count(lit(1)).as("n"))
+    val r = BatchWorkflow.run(in, base)
+    assert(r.finalStatus == "completed")
+    assert(r.results.count() == 40)
+    // the input subtree ran once, inside the workflow's materialization
+    assert(mine.get("n") == 40L)
+  }
+
   test("monitor polls to each terminal state and times out on a stuck job") {
     // virtual clock: each sleep advances time by the requested amount
     def fakeClockSleep(): (() => Long, Long => Unit, () => Long) = {

@@ -34,6 +34,13 @@ class QueriesSpec extends SparkSpec {
     assert(dangling.isEmpty, s"oracles without query: $dangling")
   }
 
+  test("every bench stager is a registered query") {
+    // a renamed stager would otherwise just stop staging: the bench's
+    // stager pass filters the registered names by this set
+    val unknown = Bench.Stagers -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"stagers without a query: $unknown")
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -17,7 +17,6 @@ class StreamingMultiBatchSpec extends SparkSpec {
 
   test("complete-mode window agg over two micro-batches equals the batch answer") {
     val s = spark
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = Tables.events(s, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     // split the corpus into two files by event_id parity — both halves
