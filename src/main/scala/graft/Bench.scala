@@ -124,8 +124,7 @@ object Bench {
         // ADVICE r14: an entry without '=' used to MatchError deep in a
         // pattern bind; fail fast with a readable message instead. Note
         // the top-level split is on ',' — comma-containing conf VALUES
-        // are unsupported by this passthrough (use a Dev-mode session
-        // for those).
+        // are unsupported by this passthrough.
         kv.split("=", 2) match {
           case Array(k, v) => spark.conf.set(k, v); s"$k=$v"
           case _ => sys.error(

@@ -1,121 +1,66 @@
 package graft
 
-/** Entry smoke probe (see README "Verifying a change"): prints the
-  * flagship query's row count; also a scratch main for environment
-  * probes and per-query plan/stage diagnostics.
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+
+/** The dev CLI, two modes:
+  *  - no arguments: the entry smoke (README "Verifying a change") —
+  *    prints the flagship query's row count;
+  *  - `explain <query...> [--sf dir]`: the formatted physical plan of
+  *    each registered query, after executing it (see [[explain]]).
+  *
+  * Per-query counters (jobs, stages, shuffle, records read) come from
+  * [[Profile]]; conf A/Bs go through [[Bench]]'s `SPARK_GRAFT_CONF`.
   */
 object Dev {
+  private val Usage = "usage: graft.Dev [explain <query...> [--sf <dir>]]"
+
+  private[graft] sealed trait Command
+  private[graft] case object Smoke extends Command
+  private[graft] final case class Explain(queries: Seq[String], sfDir: String) extends Command
+
+  /** Parses the arguments before any session is built, so a bad
+    * command line fails fast and never falls through to the smoke. */
+  private[graft] def parse(args: Seq[String]): Command = args match {
+    case Seq() => Smoke
+    case "explain" +: rest =>
+      val sfAt = rest.indexOf("--sf")
+      val sfDir = if (sfAt < 0) "/root/testdata/sf0.01"
+        else rest.lift(sfAt + 1).getOrElse(
+          throw new IllegalArgumentException(s"--sf needs a directory; $Usage"))
+      val names = if (sfAt < 0) rest else rest.patch(sfAt, Nil, 2)
+      if (names.isEmpty)
+        throw new IllegalArgumentException(s"explain needs a query name; $Usage")
+      names.filterNot(SparkEntry.queries.keySet).headOption.foreach { n =>
+        throw new IllegalArgumentException(s"unknown query '$n'; $Usage")
+      }
+      Explain(names, sfDir)
+    case cmd +: _ =>
+      throw new IllegalArgumentException(s"unknown subcommand '$cmd'; $Usage")
+  }
+
+  /** Executes `df`'s OWN QueryExecution, then renders its formatted
+    * plan. Executing first finalizes the adaptive plan, so the output
+    * shows AQE's runtime decisions (stage reuse, skew splits, coalesced
+    * partitions) as the Final Plan beside the Initial Plan. A sink
+    * write would run a fresh QueryExecution and leave this one
+    * unfinalized. */
+  private[graft] def explain(df: DataFrame): String = {
+    df.queryExecution.toRdd.count()
+    df.queryExecution.explainString(FormattedMode)
+  }
+
   def main(args: Array[String]): Unit = {
+    val cmd = parse(args.toSeq)
     val spark = GraftSession.local(8)
-    // same A/B conf passthrough as Bench (VERDICT r13 #2): lets the
-    // diag subcommands run with e.g. graft.skew.salted=false
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) }
-    args.headOption match {
-      case Some("d8diag") =>
-        // stage-cardinality dump for bench-regression diagnosis
-        // (BASELINE.md "Diagnosing a d8 regression")
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        dedup.Dedup.d8Diag(spark, sfDir).toSeq.sortBy(_._1)
-          .foreach { case (k, v) => println(s"$k=$v") }
-      case Some("d7diag") =>
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        dedup.Dedup.d7Diag(spark, sfDir).toSeq.sortBy(_._1)
-          .foreach { case (k, v) => println(s"$k=$v") }
-      case Some("s8diag") =>
-        // Lloyd loop observability: rounds to fixpoint, per-round
-        // moved-centroid counts, final cell count — a jump in
-        // s8_iterations toward the loud cap means the corpus's
-        // cluster structure deepened (see Knn.KmeansMaxRounds)
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        sim.Knn.s8Diag(spark, sfDir).toSeq.sortBy(_._1)
-          .foreach { case (k, v) => println(s"$k=$v") }
-      case Some("st8diag") =>
-        // per-micro-batch input rows + watermark trace for the
-        // multi-batch streaming oracle (st8) — diagnosis for a
-        // drop/emit mismatch against st8Sql's per-batch model
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-        streaming.StreamingOps.st8Diag(spark, sfDir).foreach(println)
-      case Some("streambench") =>
-        // Sustained streaming throughput at 2 vs 32 state partitions —
-        // the quantitative check of the §5 state-floor sizing rule
-        // (BASELINE.md "Streaming throughput"). Drives N landing files
-        // (maxFilesPerTrigger=1 → N real micro-batches) through the
-        // stateless admit path (st9), the Bloom prefilter (st10), and
-        // the stateful foreachBatch compaction (st11); prints
-        // rows/s = stream input rows / wall seconds, best of 2.
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val nFiles = args.lift(2).map(_.toInt).getOrElse(8)
-        val docRows = Tables.documents(spark, sfDir).count()
-        val batchRows = docRows / 5 // st9/st10 stream the newest ~20%
-        val eventRows = Tables.events(spark, sfDir).count()
-        def time(rows: Long)(body: => Unit): Double = {
-          val ts = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            body
-            (System.nanoTime() - t0) / 1e9
-          }
-          rows / ts.min
-        }
-        for (p <- Seq(2, 32)) {
-          spark.conf.set("graft.stream.partitions", p.toString)
-          val st9r = time(batchRows) {
-            streaming.StreamingOps.st9Multi(spark, sfDir, nFiles).collect() }
-          val st10r = time(batchRows) {
-            streaming.StreamingOps.st10Multi(spark, sfDir, nFiles).collect() }
-          val st11r = time(eventRows) {
-            streaming.StreamingOps.st11Multi(spark, sfDir, nFiles).collect() }
-          val st8r = time(eventRows) {
-            streaming.StreamingOps.st8Files(spark, sfDir, nFiles).collect() }
-          println(f"streambench partitions=$p%2d files=$nFiles " +
-            f"st9=${st9r}%.0f rows/s st10=${st10r}%.0f rows/s " +
-            f"st11=${st11r}%.0f rows/s st8=${st8r}%.0f rows/s")
-        }
-        spark.conf.unset("graft.stream.partitions")
-      case Some("q37diag") =>
-        // rule-on vs rule-off timing for LatestRewrite (q37's honesty
-        // check: is the rewrite actually faster than Spark's own
-        // WindowGroupLimit path on this host/scale?)
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.{Window => W}
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        def windowForm = Tables.events(spark, sfDir)
-          .select(col("user_id"), expr("ts div 1000").as("tus"),
-            col("event_id"), col("event_type"), col("value"))
-          .withColumn("rn", row_number().over(
-            W.partitionBy(col("user_id")).orderBy(col("tus").desc, col("event_id").desc)))
-          .filter(col("rn") === 1)
-          .select(col("user_id"), col("tus"), col("event_id"), col("event_type"), col("value"))
-        def time(tag: String): Unit = {
-          val ts = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            windowForm.write.mode("overwrite").format("noop").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"$tag%s best=${ts.min}%.3f s (${ts.map(t => f"$t%.2f").mkString(",")})")
-        }
-        // the rule is session-registered (GraftExtensions); rule_off
-        // disables it by name via the standard exclusion conf
-        spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.LatestRewrite")
-        time("rule_off")
-        spark.conf.unset("spark.sql.optimizer.excludedRules")
-        time("rule_on")
-      case Some("explain") =>
-        // formatted physical plan for any registered query — the plan
-        // audit the §5 discipline asks for after every operator lands
-        // ("explain and iterate until it's the plan you'd want")
-        val name = args.lift(1).getOrElse(
-          sys.error("usage: explain <query> [sfDir]"))
-        val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
-        val fn = SparkEntry.queries.getOrElse(name,
-          sys.error(s"unknown query '$name'"))
-        val df = fn(spark, sfDir)
-        df.write.mode("overwrite").format("noop").save()
-        println(df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==")(0))
-      case _ =>
+    cmd match {
+      case Smoke =>
         println(s"entry rows=${SparkEntry.entry(spark).count()}")
+      case Explain(names, sfDir) =>
+        for (n <- names) {
+          println(s"\n========== $n ==========")
+          println(explain(SparkEntry.queries(n)(spark, sfDir)))
+        }
     }
     spark.stop()
   }

@@ -49,14 +49,7 @@ object ScaleData {
     val dst = args.lift(1).getOrElse("/root/repo/testdata-sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     generate(spark, src, dst, copies)
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings"))

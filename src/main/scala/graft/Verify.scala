@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails is logged and skipped so the rest still dump; the run then
+  * names every failed query on stderr and exits 1. */
 object Verify {
   /** Confs that would silently de-synchronize query results from the
     * REGISTERED oracle SQL if overridden during a verify run:
@@ -26,6 +28,20 @@ object Verify {
         "Unset the conf(s) for verify runs, or skip the oracle gate for this session.")
   }
 
+  /** Writes each query's result to `outDir/<name>` as one parquet file
+    * and returns the names of the queries that failed. */
+  private[graft] def dumpResults(spark: SparkSession, queries: Seq[(String, QFn)],
+      sfDir: String, outDir: String): Seq[String] =
+    queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName...] — names filter the dump
     // (iterating on one operator shouldn't re-run all 50+)
@@ -35,15 +51,9 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     assertOracleSafeConfs(spark)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = dumpResults(spark,
+      SparkEntry.queries.toSeq.filter { case (name, _) => only.isEmpty || only(name) },
+      sfDir, outDir)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -70,5 +80,9 @@ object Verify {
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/rows_only.json"), rowsOnlyJson)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -907,19 +907,11 @@ object Dedup {
         >= ClusterEdgeMinJaccard)
       .select(col("root"), col("doc_id"))
 
-  /** Converged min-label cluster assignment (doc_id, cluster_id) —
-    * d7's propagation loop, factored out so d10's keep-best decision
-    * consumes the same clustering. `stats`, when given, receives the
-    * loop diagnostics ([[d7Diag]]) at diag-only cost — the production
-    * path passes None and runs no extra job. */
-  private def clusterAssignments(s: SparkSession, d: String,
-      stats: Option[scala.collection.mutable.Map[String, Long]] = None): DataFrame =
-    clusterAssignmentsOf(Tables.documents(s, d), stats)
-
-  /** [[clusterAssignments]] over ANY documents relation — d13 clusters
-    * the existing-corpus subset only, d7/d10 the whole table. */
-  private def clusterAssignmentsOf(docs: DataFrame,
-      stats: Option[scala.collection.mutable.Map[String, Long]] = None): DataFrame = {
+  /** Converged min-label cluster assignment (doc_id, cluster_id) over
+    * a documents relation — d7's propagation loop, factored out so
+    * d10's keep-best decision consumes the same clustering. d7/d10
+    * cluster the whole table, d13 the existing-corpus subset only. */
+  private def clusterAssignmentsOf(docs: DataFrame): DataFrame = {
     val long = bandLong(minhashBandsFrom(shingles(docs)))
     // Star contraction per band bucket: every member connects to the
     // bucket's min doc_id, both directions. Connectivity-equivalent to
@@ -943,12 +935,8 @@ object Dedup {
     val edges = verified.select(col("root").as("src"), col("doc_id").as("dst"))
       .unionAll(verified.select(col("doc_id").as("src"), col("root").as("dst")))
       .localCheckpoint() // computed once, re-read every iteration
-    stats.foreach { m =>
-      m("d7_star_candidates") = rooted.count()
-      m("d7_verified_edges") = edges.count() / 2
-    }
-    val labels = propagateMinLabels(
-      docs.filter(col("doc_id").isNotNull).select(col("doc_id")), edges, stats)
+    val (labels, _) = propagateMinLabels(
+      docs.filter(col("doc_id").isNotNull).select(col("doc_id")), edges)
     labels.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -956,8 +944,8 @@ object Dedup {
     * components loop, factored out so d20's condensed incremental
     * graph reuses the exact machinery. `nodes` has one `doc_id` row
     * per vertex; `edges` is the BOTH-DIRECTIONS (src, dst) relation,
-    * already checkpointed by the caller. Returns (doc_id, label) with
-    * label = component-min vertex id.
+    * already checkpointed by the caller. Returns the (doc_id, label)
+    * relation, label = component-min vertex id, and the rounds run.
     *
     * Seeded with the one-hop minimum: with initial labels = doc_id the
     * first propagation round needs no labels join at all — it is just
@@ -972,8 +960,7 @@ object Dedup {
     * rounds — the 50-round loud cap then covers any physically
     * possible component, and tripping it means a logic bug, not a
     * deep graph; fail loudly rather than emit wrong cluster ids. */
-  private[graft] def propagateMinLabels(nodes: DataFrame, edges: DataFrame,
-      stats: Option[scala.collection.mutable.Map[String, Long]] = None): DataFrame = {
+  private[graft] def propagateMinLabels(nodes: DataFrame, edges: DataFrame): (DataFrame, Int) = {
     val seed = edges.groupBy(col("dst")).agg(min(col("src")).as("nlabel"))
     var labels = nodes
       .join(seed.select(col("dst").as("doc_id"), col("nlabel")), Seq("doc_id"), "left")
@@ -1021,35 +1008,17 @@ object Dedup {
       throw new IllegalStateException(
         s"label propagation did not converge within $iter iterations — " +
           "component diameter exceeds the cap; raise it or pre-split the graph")
-    stats.foreach(_.update("d7_iterations", iter.toLong))
-    labels
-  }
-
-  /** d7 regression diagnosis, the [[d8Diag]] sibling: runs the
-    * clustering with loop diagnostics (star-contraction candidate
-    * pairs, Jaccard-surviving edges, propagation rounds to fixpoint,
-    * resulting docs/clusters). Interpretation mirrors d8's: stable
-    * counts + inflated wall-time = host pressure; a jump in
-    * `d7_iterations` means deeper components (chained near-dup
-    * families — propagation cost is rounds x edge scan); a jump in
-    * `d7_star_candidates` with flat `d7_verified_edges` means band
-    * collisions the Jaccard gate is absorbing. */
-  def d7Diag(s: SparkSession, d: String): Map[String, Long] = {
-    val m = scala.collection.mutable.Map.empty[String, Long]
-    val labels = clusterAssignments(s, d, Some(m))
-    m("d7_docs") = labels.count()
-    m("d7_clusters") = labels.select(col("cluster_id")).distinct().count()
-    m.toMap
+    (labels, iter)
   }
 
   /** d7 output: cluster_size via groupBy+join, not a per-cluster
     * Window (a converged mega-cluster would buffer in one window task;
     * the aggregate+join shape scales). The labels relation is
-    * localCheckpoint-ed by [[clusterAssignments]], so both branches
+    * localCheckpoint-ed by [[clusterAssignmentsOf]], so both branches
     * read the same materialized RDD — no recompute.
     */
   private def d7(s: SparkSession, d: String): DataFrame = {
-    val labels = clusterAssignments(s, d)
+    val labels = clusterAssignmentsOf(Tables.documents(s, d))
     val sizes = labels.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("cluster_id"))
@@ -1058,7 +1027,7 @@ object Dedup {
   }
 
   /** Shared oracle CTE chain ending in clusters(doc_id, cluster_id):
-    * the DuckDB mirror of [[clusterAssignments]] (via full transitive
+    * the DuckDB mirror of [[clusterAssignmentsOf]] (via full transitive
     * closure — exact at the driver's sf0.01 gate; tools/parity.py
     * swaps in iterative propagation for larger SFs). Shared by d7 and
     * d10. */
@@ -1124,7 +1093,7 @@ object Dedup {
     // 5-regex per-doc pass) and the label join re-executed under each
     // consumer. One localCheckpoint (doc-level metadata: id, cluster,
     // score — never text) runs them once.
-    val joined = clusterAssignments(s, d).join(scored, Seq("doc_id"))
+    val joined = clusterAssignmentsOf(Tables.documents(s, d)).join(scored, Seq("doc_id"))
       .localCheckpoint()
     val perCluster = joined.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"), max(rankKey).as("best_key"))
@@ -1642,19 +1611,7 @@ object Dedup {
     * packed longs. No n² compare, no signature flips, no interpreted
     * per-bit loop.
     */
-  private def d8(s: SparkSession, d: String): DataFrame =
-    d8Build(s, d, (df, _) => df).orderBy(col("da"), col("db"))
-
-  /** d8 with per-stage observation taps ([[d8Diag]]), WITHOUT the
-    * final presentation sort: a global sort's range-partitioner
-    * sampling pass re-executes the child pipeline, which would count
-    * every observed row twice. The default path passes an identity
-    * tap and adds the sort back, so the production plan is
-    * byte-identical (no CollectMetrics node to defeat the one-scan
-    * AQE-reuse guard).
-    */
-  private def d8Build(s: SparkSession, d: String,
-      tap: (DataFrame, String) => DataFrame): DataFrame = {
+  private def d8(s: SparkSession, d: String): DataFrame = {
     val sigs = simhashSigLong(s, d)
     // Collapse identical signatures BEFORE the block join: exact-dup
     // families are exactly the hot buckets (sf0.1: one 16-bit block
@@ -1672,53 +1629,25 @@ object Dedup {
     // verify FIRST (codegen'd xor+popcount), dedup the survivors: most
     // candidates fail the hamming test, so the distinct shuffles only
     // true near-dup signature pairs
-    val sigPairs = tap(blocks.as("a").join(blocks.as("b"),
+    val sigPairs = blocks.as("a").join(blocks.as("b"),
         col("a.block_id") === col("b.block_id") && col("a.bbits") === col("b.bbits") &&
           col("a.sig") < col("b.sig"))
       .select(col("a.sig").as("siga"), col("b.sig").as("sigb"))
       .filter(expr("bit_count(siga ^ sigb) <= 3"))
-      .distinct(), "d8_sig_pairs")
+      .distinct()
       .withColumn("hamming", expr("cast(bit_count(siga ^ sigb) as bigint)"))
     // expand signature pairs back to document pairs
-    val diff = tap(sigPairs
+    val diff = sigPairs
       .join(sigs.select(col("sig").as("siga"), col("doc_id").as("ida")), Seq("siga"))
       .join(sigs.select(col("sig").as("sigb"), col("doc_id").as("idb")), Seq("sigb"))
       .select(least(col("ida"), col("idb")).as("da"),
-        greatest(col("ida"), col("idb")).as("db"), col("hamming")), "d8_pairs_expand")
+        greatest(col("ida"), col("idb")).as("db"), col("hamming"))
     // hamming-0 pairs (same signature, different docs) are output rows
     // by definition — Σ C(m,2) per family is the answer's own size
-    val same = tap(sigs.as("x").join(sigs.as("y"),
+    val same = sigs.as("x").join(sigs.as("y"),
         col("x.sig") === col("y.sig") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"), lit(0L).as("hamming")),
-      "d8_pairs_same")
-    same.unionAll(diff)
-  }
-
-  /** d8 regression diagnosis (VERDICT r6/r7: the 9.6 s driver-bench
-    * inflation vanished unexplained because no per-stage cardinalities
-    * existed). Runs d8 with `observe` taps on the linear stages —
-    * verified signature pairs out of the block self-join, expanded
-    * cross-family doc pairs, same-signature family pairs — plus the
-    * block-join input size as a metadata-sized side job, and returns
-    * all cardinalities. Interpretation: cardinalities unchanged vs a
-    * healthy run + inflated wall-time = host/GC pressure, not a plan
-    * or data regression; a blown-up `d8_sig_pairs` or `d8_blocks`
-    * means the corpus (or a code change) broke the multi-index
-    * contract. Taps sit only on LINEAR stages — the shared
-    * sigs/blocks subtree is counted by the side job — so the metric
-    * is well-defined whether or not AQE reuses the exchange.
-    */
-  def d8Diag(s: SparkSession, d: String): Map[String, Long] = {
-    val obs = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.Observation]
-    val out = d8Build(s, d, (df, name) => {
-      val o = org.apache.spark.sql.Observation(name)
-      obs(name) = o
-      df.observe(o, count(lit(1)).as("rows"))
-    })
-    out.write.mode("overwrite").format("noop").save()
-    val stages = obs.map { case (k, o) => k -> o.get("rows").asInstanceOf[Long] }.toMap
-    val nSigs = simhashSigLong(s, d).select(col("sig")).distinct().count()
-    stages ++ Seq("d8_distinct_sigs" -> nSigs, "d8_blocks" -> nSigs * 4)
+      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"), lit(0L).as("hamming"))
+    same.unionAll(diff).orderBy(col("da"), col("db"))
   }
 
   private val d8Sql = SimhashCte +
@@ -2295,7 +2224,7 @@ object Dedup {
     val nodes = condEdges.select(col("src").as("doc_id"))
       .unionByName(docs.crossJoin(broadcast(mx)).filter(isNewCol).select(col("doc_id")))
       .distinct()
-    val condLabels = propagateMinLabels(nodes, condEdges)
+    val (condLabels, _) = propagateMinLabels(nodes, condEdges)
     val newFinal = docs.crossJoin(broadcast(mx)).filter(isNewCol).select(col("doc_id"))
       .join(condLabels, Seq("doc_id"), "left")
       .select(col("doc_id"),

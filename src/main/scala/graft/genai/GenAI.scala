@@ -687,7 +687,7 @@ object GenAI {
     * Scale shape: one partial+final count/min aggregate on fp, then
     * an equi-join back on fp. Catalyst picks the join strategy by the
     * aggregate's size estimate: on small corpora the groups side
-    * broadcasts (observed in PlanAudit — correct, it IS small); at
+    * broadcasts (seen in `graft.Dev explain` — correct, it IS small); at
     * scale the estimate exceeds the broadcast threshold and the join
     * becomes a shuffle join whose exchanged rows are the 32-hex fp +
     * two small columns, never the request bodies. The probe side

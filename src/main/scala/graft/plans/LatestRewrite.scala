@@ -21,8 +21,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * native path still pays is SORT work — a per-partition sort in the
   * partial limit, a final per-key sort under the Window — all to keep
   * one row. The aggregate form does the same candidate thinning with
-  * compare semantics and no per-key ordering work. MEASURED (Dev
-  * q37diag, noop sink, best-of-3, r12 struct-max form): 0.56 → 0.41 s
+  * compare semantics and no per-key ordering work. MEASURED (q37's
+  * window form, rule off → on, noop sink, best-of-3): 0.56 → 0.41 s
   * at sf0.1 and 1.09 → 0.79 s at sf1 — ~27% over the native window
   * path at both scales (the single struct buffer also beats the old
   * per-column max_by form, which measured a wash at sf0.1); the gap
@@ -61,8 +61,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Registered session-wide via [[graft.plans.GraftExtensions]]
   * (`spark.sql.extensions`) so plan shape never depends on which
-  * query ran first; `Dev q37diag` disables it per-run through
-  * `spark.sql.optimizer.excludedRules` for the honesty measurement.
+  * query ran first. The rule-off side of the A/B is a [[graft.Bench]]
+  * run with `SPARK_GRAFT_BENCH_ONLY=q37_latest_rewrite` and
+  * `SPARK_GRAFT_CONF=spark.sql.optimizer.excludedRules=graft.plans.LatestRewrite`.
   *
   * Output attributes keep their original `exprId`s (aliases pin
   * them), so parent operators resolve unchanged; the `rn` output is

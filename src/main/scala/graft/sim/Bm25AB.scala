@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Dev probe (PlanAudit-style, not part of the query API): times the
+/** Dev probe (not part of the query API): times the
   * candidate pass shapes behind s14's plan — split+explode vs
   * explode_outer vs regex alternation vs columnar HOF vs columnar
   * regexp_count — best-of-3 on the raw RDD so the numbers in

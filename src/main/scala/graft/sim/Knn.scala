@@ -1005,7 +1005,7 @@ object Knn {
     * literals; the corpus is persisted ONCE as primitive arrays and
     * never collected, and no per-round lineage accumulates, so there
     * is nothing to checkpoint. d7's loop discipline carries over:
-    * per-round movement diagnostic, loud cap ([[KmeansMaxRounds]]).
+    * a per-round movement count, a loud cap ([[KmeansMaxRounds]]).
     *
     * Convergence = exact centroid equality (doubles round-trip the
     * driver bit-identically; deterministic arithmetic makes the
@@ -1015,9 +1015,7 @@ object Knn {
     *
     * Returns (final assignments, learned centroid frame, rounds).
     */
-  private[graft] def lloyd(e: DataFrame,
-      stats: Option[scala.collection.mutable.Map[String, Long]] = None)
-      : (DataFrame, DataFrame, Int) = {
+  private[graft] def lloyd(e: DataFrame): (DataFrame, DataFrame, Int) = {
     val s = e.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("cell",
@@ -1052,7 +1050,6 @@ object Knn {
       val next = cent.map { case (cell, arr) => (cell, byCell.getOrElse(cell, arr)) }
       val moved = next.zip(cent).count { case ((_, a1), (_, a2)) =>
         !java.util.Arrays.equals(a1, a2) }
-      stats.foreach(_.update(s"s8_centroid_moved_r${iter + 1}", moved.toLong))
       converged = moved == 0
       cent = next
       iter += 1
@@ -1063,7 +1060,6 @@ object Knn {
         s"s8 Lloyd did not converge within $iter rounds — the oracle unrolls " +
           s"exactly $KmeansMaxRounds rounds, so a deeper corpus must raise " +
           "KmeansMaxRounds in BOTH engines, never ship a moving clustering")
-    stats.foreach(_.update("s8_iterations", iter.toLong))
     val finalAssign = eMat
       .select(col("vec_id"), argminCell(cent).as("_m"))
       .select(col("vec_id"), col("_m.cell").as("cell"), col("_m.dist").as("dist"))
@@ -1167,20 +1163,6 @@ object Knn {
          |  CAST(SUM(CAST(round(dist * 1e9) AS BIGINT)) AS BIGINT) AS sum_dist_nano
          |FROM afin GROUP BY cell ORDER BY cell""".stripMargin)
     sb.toString
-  }
-
-  /** s8 regression diagnosis (the d7Diag sibling): per-round moved
-    * counts, rounds to fixpoint, final cell count. A jump in
-    * `s8_iterations` means the corpus's cluster structure deepened;
-    * a round whose moved count plateaus without reaching 0 would be
-    * the oscillation case the loud cap converts into a failure. */
-  def s8Diag(s: SparkSession, d: String): Map[String, Long] = {
-    val m = scala.collection.mutable.Map.empty[String, Long]
-    val e = Tables.embeddings(s, d)
-      .spreadToCores
-    val (assigned, _, _) = lloyd(e, Some(m))
-    m("s8_cells") = assigned.select(col("cell")).distinct().count()
-    m.toMap
   }
 
   /** IVF probe recall with LEARNED cells (KnnRankSpec): s4's probe

@@ -87,12 +87,11 @@ object StreamingOps {
     // the file COUNT is part of the staged artifact's identity
     // (stagedAdmitInputs' `_n` tag discipline): the glob reader admits
     // every b*.parquet, so an 8-file staging sharing a 4-file dir
-    // would silently turn st8/st11 into 8-micro-batch queries — a
-    // found-in-round-14 hazard (a streambench st8Files(8) run left
-    // b0..b7 behind, the b0..b3 freshness check passed, and st8's
-    // sf0.1 wall DOUBLED while computing a different watermark
-    // trajectory). Separate dirs per count, plus the exact-set check
-    // below as defense in depth.
+    // would silently turn st8/st11 into 8-micro-batch queries (an
+    // 8-file run leaves b0..b7 behind, the b0..b3 freshness check
+    // passes, and st8 computes a different watermark trajectory at
+    // double the wall). Separate dirs per count, plus the exact-set
+    // check below as defense in depth.
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
       prefix + graft.StagePath.corpusToken(d) + s"_n$nFiles")
@@ -383,16 +382,10 @@ object StreamingOps {
 
   /** Full per-micro-batch progress trace of each query's last run —
     * (numInputRows, eventTime map incl. watermark, stateOperators'
-    * numRowsDroppedByWatermark) rendered as strings. Diagnosis surface
-    * for st8's per-batch oracle model (`graft.Dev st8diag`). */
+    * numRowsDroppedByWatermark) rendered as strings, for the specs of
+    * st8's per-batch oracle model. */
   private[graft] val lastRunTrace =
     scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
-
-  /** Runs st8 and returns its per-batch trace (Dev st8diag). */
-  private[graft] def st8Diag(s: SparkSession, d: String): Seq[String] = {
-    st8(s, d).collect()
-    lastRunTrace.getOrElse("graft_st8", Seq("<no trace>"))
-  }
 
   /** st1: streaming tumbling 1-hour window aggregation (event-time from
     * the epoch-nanos column, 10-min watermark). Complete mode so the
@@ -579,7 +572,7 @@ object StreamingOps {
     *    range, so later batches DO carry rows for already-closed
     *    windows — real drops, not a vacuous pass);
     *  - Spark keeps TWO watermarks per stateful operator (measured via
-    *    st8Diag, visible as numRowsDroppedByWatermark): EVICTION uses
+    *    [[lastRunTrace]]'s numRowsDroppedByWatermark): EVICTION uses
     *    the current batch's value (max event time over batches < k,
     *    ms floor, − 10 min), but the LATE-ROW FILTER uses the PREVIOUS
     *    batch's (max over batches < k−1) — so a row arriving in the
@@ -596,15 +589,8 @@ object StreamingOps {
     * On an unbounded production feed this IS the operating regime —
     * st8 pins those semantics with a hash-checked oracle.
     */
-  private def st8(s: SparkSession, d: String): DataFrame = st8Files(s, d, 4)
-
-  /** st8 with a caller-chosen landing-file count — 4 is the registered
-    * query; [[graft.Dev]] streambench drives more files through the
-    * SAME stateful windowed aggregate to measure the per-micro-batch
-    * state-commit floor (it is the only suite query with a true state
-    * store per shuffle partition on the multi-batch path). */
-  private[graft] def st8Files(s: SparkSession, d: String, nFiles: Int): DataFrame = {
-    val agg = eventsStreamMulti(s, d, nFiles)
+  private def st8(s: SparkSession, d: String): DataFrame = {
+    val agg = eventsStreamMulti(s, d, 4)
       .withColumn("ets", timestamp_micros(expr("ts div 1000")))
       .withWatermark("ets", "10 minutes")
       .groupBy(window(col("ets"), "1 hour"), col("event_type"))
@@ -1000,8 +986,8 @@ object StreamingOps {
     bloomPipeline(s, stagedAdmitInputs(s, d), "graft_st10")
 
   /** st10 under the multi-batch regime (st9Multi's sibling) — same
-    * semantics, nFiles landing files with maxFilesPerTrigger=1. Spec/
-    * bench surface only, not a registered query. */
+    * semantics, nFiles landing files with maxFilesPerTrigger=1. Spec
+    * surface only, not a registered query. */
   private[graft] def st10Multi(s: SparkSession, d: String, nFiles: Int,
       filesPerTrigger: Int = 1): DataFrame =
     bloomPipeline(s, stagedAdmitInputs(s, d, nFiles, filesPerTrigger), "graft_st10multi")
@@ -1031,17 +1017,6 @@ object StreamingOps {
       .sortWithinPartitions(col("doc_id"))
     releaseManifests(staged)
     out
-  }
-
-  /** st11 under an nFiles multi-batch regime into fresh temp dirs —
-    * the streambench surface ([[graft.Dev]]): returns the final store
-    * view after the full compaction run. */
-  private[graft] def st11Multi(s: SparkSession, d: String, nFiles: Int): DataFrame = {
-    import java.nio.file.Files
-    val store = Files.createTempDirectory("graft_st11b_store_")
-    val ckpt = Files.createTempDirectory("graft_st11b_ckpt_")
-    st11Compact(s, eventsStreamMulti(s, d, nFiles), store, ckpt, "graft_st11multi")
-    st11StoreRead(s, store)
   }
 
   private val st10Sql = graft.dedup.Dedup.oracles("d17_bloom_admit")

@@ -109,7 +109,7 @@ class DedupPlanSpec extends SparkSpec {
     val condEdges = Seq((1L, 9L), (9L, 1L), (5L, 9L), (9L, 5L))
       .toDF("src", "dst").localCheckpoint()
     val nodes = Seq(1L, 5L, 9L).toDF("doc_id")
-    val labels = dedup.Dedup.propagateMinLabels(nodes, condEdges)
+    val labels = dedup.Dedup.propagateMinLabels(nodes, condEdges)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == Map(1L -> 1L, 5L -> 1L, 9L -> 1L),
       s"bridge must merge both old components: $labels")
@@ -119,7 +119,7 @@ class DedupPlanSpec extends SparkSpec {
       (20L, 42L), (42L, 20L), (42L, 30L), (30L, 42L))
       .toDF("src", "dst").localCheckpoint()
     val chainNodes = Seq(10L, 20L, 30L, 41L, 42L).toDF("doc_id")
-    val chainLabels = dedup.Dedup.propagateMinLabels(chainNodes, chain)
+    val chainLabels = dedup.Dedup.propagateMinLabels(chainNodes, chain)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(chainLabels.values.toSet == Set(10L), s"chain did not converge: $chainLabels")
   }
@@ -134,11 +134,9 @@ class DedupPlanSpec extends SparkSpec {
         Seq((i.toLong, (i + 1).toLong), ((i + 1).toLong, i.toLong)))
       .toDF("src", "dst").localCheckpoint()
     val nodes = (0 until n).map(_.toLong).toDF("doc_id")
-    val stats = scala.collection.mutable.Map.empty[String, Long]
-    val labels = dedup.Dedup.propagateMinLabels(nodes, edges, Some(stats))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (labelDf, rounds) = dedup.Dedup.propagateMinLabels(nodes, edges)
+    val labels = labelDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.values.toSet == Set(0L), s"path did not converge: $labels")
-    val rounds = stats("d7_iterations")
     assert(rounds <= 10,
       s"deep chain took $rounds rounds — pointer jumping not engaged (O(n) regression)")
   }

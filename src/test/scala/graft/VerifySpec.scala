@@ -1,0 +1,20 @@
+package graft
+
+import java.nio.file.Files
+
+/** Verify's dump keeps going past a failed query and reports it. */
+class VerifySpec extends SparkSpec {
+
+  test("a failed query is reported by name while the others still dump") {
+    val out = Files.createTempDirectory("graft_verify_spec").toString
+    val queries: Seq[(String, QFn)] = Seq(
+      "ok_before" -> ((s, _) => s.range(3).toDF("id")),
+      "broken" -> ((_, _) => throw new IllegalStateException("boom")),
+      "ok_after" -> ((s, _) => s.range(2).toDF("id")))
+    val failed = Verify.dumpResults(spark, queries, sf, out)
+    assert(failed == Seq("broken"))
+    assert(spark.read.parquet(s"$out/ok_before").count() == 3)
+    assert(spark.read.parquet(s"$out/ok_after").count() == 2)
+    assert(!Files.exists(java.nio.file.Paths.get(out, "broken")))
+  }
+}
