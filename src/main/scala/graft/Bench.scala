@@ -70,6 +70,22 @@ object Bench {
     "d20_cross_batch_cluster", "s11_ivf_persist", "s17_ivf_incremental",
     "s27_graph_ann", "s29_graph_incremental", "s30_graph_delete")
 
+  /** `SPARK_GRAFT_CONF`'s comma-separated k=v pairs (comma-containing
+    * values unsupported). Fails fast with a readable message on an
+    * entry without '=' and on a `graft.*` key: the engine reads no
+    * such conf except the top-k key guard, so a stale A/B on a removed
+    * knob would otherwise silently measure the default twice. */
+  private[graft] def parsePassConf(raw: Option[String]): Seq[(String, String)] =
+    raw.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, _) if k.trim.startsWith("graft.") => sys.error(
+          s"SPARK_GRAFT_CONF entry '$kv' sets a graft.* key; the engine has no graft.* tuning confs")
+        case Array(k, v) => (k, v)
+        case _ => sys.error(
+          s"SPARK_GRAFT_CONF entry '$kv' is not k=v (comma-separated k=v pairs; comma-containing values unsupported)")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val mainT0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - mainT0) / 1e9
@@ -110,27 +126,13 @@ object Bench {
     // sweep, and BENCH_r12's 2 KB capture tail was ~85% WARN noise —
     // crowding out the metric lines this main exists to deliver
     spark.sparkContext.setLogLevel("ERROR")
-    // A/B conf passthrough (VERDICT r13 #2): runtime confs the engine
-    // reads at plan-build time (graft.skew.salted, graft.bloom.bits,
-    // graft.pack.bucket, …) were unreachable from a bench run, so the
-    // salted join-back's unskewed premium could not be measured as a
-    // number. SPARK_GRAFT_CONF=k=v[,k=v…] sets each before any query
-    // builds. A/B runs are deliberately non-default measurements, so a
-    // run with confs set is treated like a filtered run: no history
-    // append (see below).
-    val passConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        // ADVICE r14: an entry without '=' used to MatchError deep in a
-        // pattern bind; fail fast with a readable message instead. Note
-        // the top-level split is on ',' — comma-containing conf VALUES
-        // are unsupported by this passthrough.
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v); s"$k=$v"
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not k=v (comma-separated k=v pairs; comma-containing values unsupported)")
-        }
-      }
+    // A/B conf passthrough: SPARK_GRAFT_CONF=k=v[,k=v…] sets Spark
+    // runtime confs (rule on/off, shuffle partitions, AQE knobs) before
+    // any query builds. A/B runs are deliberately non-default
+    // measurements, so a run with confs set is treated like a filtered
+    // run: no history append (see below).
+    val passConf = parsePassConf(sys.env.get("SPARK_GRAFT_CONF"))
+    passConf.foreach { case (k, v) => spark.conf.set(k, v) }
     // local-iteration filter: SPARK_GRAFT_BENCH_ONLY=d8_simhash_pairs,d2_minhash_lsh
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -505,7 +507,8 @@ object Bench {
       // tagged with the run's filter/conf state so a full clean gate is
       // distinguishable from a filtered or A/B measurement.
       val confJson =
-        if (passConf.isEmpty) "[]" else passConf.mkString("[\"", "\",\"", "\"]")
+        if (passConf.isEmpty) "[]"
+        else passConf.map { case (k, v) => s"$k=$v" }.mkString("[\"", "\",\"", "\"]")
       // r18: the line carries the run's host-speed scale so the BAND
       // derivation (BudgetsSpec) can normalize raw sf1 seconds the
       // same way the trip condition does (sec > band × scale ⇔

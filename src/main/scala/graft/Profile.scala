@@ -95,8 +95,8 @@ object Profile {
         catch { case e: Throwable =>
           System.err.println(s"[profile] $n failed: ${e.getMessage}"); false }
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus is async; give queued task-end events a moment
-      Thread.sleep(200)
+      // the listener bus is asynchronous: deliver queued task-end events
+      org.apache.spark.graftbridge.ListenerBusBridge.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(acc)
       jlog.foreach(spark.sparkContext.removeSparkListener)
       if (ok) {

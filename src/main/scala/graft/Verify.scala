@@ -6,28 +6,6 @@ import java.nio.file.{Files, Paths}
   * fails is logged and skipped so the rest still dump; the run then
   * names every failed query on stderr and exits 1. */
 object Verify {
-  /** Confs that would silently de-synchronize query results from the
-    * REGISTERED oracle SQL if overridden during a verify run:
-    * `graft.lsh.signBits` is baked into the s2/s5 oracle strings at
-    * class load (Knn.lshDims — the SQL cannot follow a session
-    * override), and `graft.stream.partitions` defines the bounded-run
-    * state regime the streaming oracle equalities were validated
-    * under; `graft.bloom.bits` is baked into d17's oracle the same way
-    * (Dedup.d17Sql embeds the default bitmap width at class load).
-    * Overriding any while emitting oracle SQL would turn an
-    * intentional re-configuration into a spurious driver correctness
-    * failure — refuse loudly instead.
-    */
-  private[graft] def assertOracleSafeConfs(spark: SparkSession): Unit = {
-    val pinned = Seq("graft.lsh.signBits", "graft.stream.partitions",
-      "graft.bloom.bits")
-    val overridden = pinned.filter(k => spark.conf.getOption(k).isDefined)
-    if (overridden.nonEmpty) throw new IllegalStateException(
-      s"refusing to emit oracle SQL with ${overridden.mkString(", ")} overridden: " +
-        "the registered oracles are pinned to the defaults and would mismatch. " +
-        "Unset the conf(s) for verify runs, or skip the oracle gate for this session.")
-  }
-
   /** Writes each query's result to `outDir/<name>` as one parquet file
     * and returns the names of the queries that failed. */
   private[graft] def dumpResults(spark: SparkSession, queries: Seq[(String, QFn)],
@@ -49,7 +27,6 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    assertOracleSafeConfs(spark)
     new java.io.File(outDir).mkdirs()
     val failed = dumpResults(spark,
       SparkEntry.queries.toSeq.filter { case (name, _) => only.isEmpty || only(name) },

@@ -892,6 +892,18 @@ object Analytics {
       |  RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, tus, event_id""".stripMargin
 
+  /** q27's bucket count: the one scale-sensitive layout constant in
+    * the query family. At 100 TB you size it as table size / target
+    * bucket-file size (e.g. 100 TB / ~1 GB ≈ 10⁵ buckets) so each
+    * bucket file stays in the maxPartitionBytes sweet spot; both join
+    * sides MUST use the same count or the co-located read degrades to
+    * a shuffle. Output-invariant (bucketing is layout, not semantics).
+    */
+  private[graft] val Q27Buckets = 8
+
+  /** Hand-bumped with any change to q27's staged bucketed layout. */
+  private[graft] val Q27LayoutVersion = "q27b1"
+
   /** q27: the bucketed co-located join as a driver-checked query —
     * previously proven at library level only (BucketedJoinSpec). Both
     * sides are written ONCE bucketed+sorted on the join key into
@@ -900,9 +912,8 @@ object Analytics {
     * PlanShapeSpec with broadcast disabled). At 100 TB this converts
     * the dominant repeated join shuffle into a one-off write-time
     * layout decision — the pattern a production deployment lives on
-    * for its hot join keys; the bucket count is conf-driven
-    * ([[bucketCount]], `graft.bucket.n`) with the 100 TB sizing rule
-    * documented there.
+    * for its hot join keys; [[Q27Buckets]] documents the 100 TB
+    * sizing rule.
     *
     * Since round 13 the layout write is STAGED behind a `_src_meta`
     * freshness marker (the d16 discipline): "written ONCE" is now
@@ -910,47 +921,22 @@ object Analytics {
     * every later run attaches the existing layout as external tables
     * (catalog-only, zero data IO) before the co-located join. The
     * marker covers both source files, the layout version, and the
-    * bucket-count conf; a corpus change, a version bump, or a
-    * different `graft.bucket.n` forces the re-write (spec-pinned).
-    * Re-runs stay idempotent either way (drop + overwrite / drop +
-    * re-attach).
+    * bucket count; a corpus change, a version bump, or a different
+    * count forces the re-write. Re-runs stay idempotent either way
+    * (drop + overwrite / drop + re-attach).
     */
-  /** q27's bucket count (conf `graft.bucket.n`, default 8): the one
-    * scale-sensitive layout constant in the query family. At 100 TB
-    * you size it as table size / target bucket-file size (e.g. 100 TB
-    * / ~1 GB ≈ 10⁵ buckets) so each bucket file stays in the
-    * maxPartitionBytes sweet spot; both join sides MUST use the same
-    * count or the co-located read degrades to a shuffle. Validated at
-    * parse time like graft.pack.bucket — bucketBy(0) would throw deep
-    * inside the write with an opaque error. Output-invariant
-    * (bucketing is layout, not semantics), so the conf is oracle-safe.
-    */
-  private def bucketCount(s: SparkSession): Int =
-    s.conf.getOption("graft.bucket.n").map { v =>
-      val b = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.bucket.n must be a positive integer, got '$v'")
-      }
-      require(b > 0, s"graft.bucket.n must be > 0, got $b")
-      b
-    }.getOrElse(8)
-
-  /** Hand-bumped with any change to q27's staged bucketed layout. */
-  private[graft] val Q27LayoutVersion = "q27b1"
-
   private def q27(s: SparkSession, d: String): DataFrame = {
     val stage = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
       "graft_bucketed_" + graft.StagePath.corpusToken(d))
-    val nBuckets = bucketCount(s)
     java.nio.file.Files.createDirectories(stage)
     // the d16 staging discipline (r13): a production bucketed table is
     // written ONCE and queried many times — re-writing both sides on
     // every execution priced the layout into every query. The marker
-    // covers BOTH source files and the bucket-count conf (a different
-    // graft.bucket.n is a different layout, not a stale one).
+    // covers BOTH source files and the bucket count (a layout staged
+    // under another count is stale).
     val marker = stage.resolve("_src_meta")
-    val ver = s"$Q27LayoutVersion:n$nBuckets"
+    val ver = s"$Q27LayoutVersion:n$Q27Buckets"
     val meta =
       graft.StagePath.srcMeta(d, java.nio.file.Paths.get(d, "lineitem.parquet"), ver) +
         "|" + graft.StagePath.srcMeta(d, java.nio.file.Paths.get(d, "orders.parquet"), ver)
@@ -968,7 +954,7 @@ object Analytics {
       s.sql(s"DROP TABLE IF EXISTS $table")
       if (!fresh)
         dfF().write.mode("overwrite")
-          .bucketBy(nBuckets, key).sortBy(key)
+          .bucketBy(Q27Buckets, key).sortBy(key)
           .option("path", stage.resolve(table).toString)
           .saveAsTable(table)
       else
@@ -977,7 +963,7 @@ object Analytics {
         // standard part-file naming, so the join still reads
         // co-located buckets; plan-pinned in PlanShapeSpec)
         s.sql(s"CREATE TABLE $table (${dfF().schema.toDDL}) USING parquet " +
-          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS " +
+          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Q27Buckets BUCKETS " +
           s"LOCATION '${stage.resolve(table)}'")
     }
     if (!fresh) java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))

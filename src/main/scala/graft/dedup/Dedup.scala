@@ -781,7 +781,7 @@ object Dedup {
     import graft.functions.VectorFunctions
     val e = Tables.embeddings(s, d)
       .withColumn("bucket",
-        VectorFunctions.signBucket("embedding", VectorFunctions.sessionSignDims(s)))
+        VectorFunctions.signBucket("embedding", VectorFunctions.defaultSignDims))
     // norms once per vector (not per pair)
     val a = e.select(col("vec_id").as("va"), col("bucket"), col("embedding").as("ea"))
       .withColumn("norm_a", sqrt(VectorFunctions.dot("ea", "ea")))
@@ -1454,25 +1454,37 @@ object Dedup {
     admitJoin(newb, kfp, simhashSigsOf(newDocs), ksig)
   }
 
-  /** d17's Bloom width as log2(bits) — conf `graft.bloom.bits`, default
-    * 14 (16 Ki bits = 256 long words). Validated at parse time like
-    * graft.pack.bucket; 6..26 keeps the word table between 1 row and
-    * 1 Gi bit. Sizing rule at 100 TB: bits ≈ −n·ln(p)/ln(2)² for n
+  /** d17's Bloom width as log2(bits): 14 (16 Ki bits = 256 long
+    * words). Sizing rule at 100 TB: bits ≈ −n·ln(p)/ln(2)² for n
     * history keys at target false-positive rate p (10¹⁰ docs at 1% →
     * ~12 GiB — shipped once per executor, vs an equi-join probing the
-    * full manifest for EVERY new document). NOTE the oracle SQL embeds
-    * the default at class load; [[graft.Verify]] refuses oracle
-    * emission when this conf is overridden (the lsh.signBits rule).
+    * full manifest for EVERY new document). Both the engine plan and
+    * the oracle SQL are built from this one constant, and st9/st10's
+    * staged `bloom_manifest` carries it in its `_src_meta` marker.
     */
-  private[graft] def bloomBitsLog2(s: SparkSession): Int =
-    s.conf.getOption("graft.bloom.bits").map { v =>
-      val b = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.bloom.bits must be an integer in 6..26, got '$v'")
-      }
-      require(b >= 6 && b <= 26, s"graft.bloom.bits must be in 6..26, got $b")
-      b
-    }.getOrElse(14)
+  private[graft] val BloomBitsLog2 = 14
+
+  /** d17's bitmap width in bits. */
+  private[graft] val BloomM: Int = 1 << BloomBitsLog2
+
+  /** Hash i (0..3) of the Bloom construction: the i-th disjoint 16-bit
+    * hex slice of the md5 fingerprint column `fp`, folded onto the
+    * m-bit bitmap. Shared by the batch build/probe (d17) and the
+    * stateless per-row stream probe (st10). */
+  private[graft] def bloomSliceSql(i: Int, m: Int): String =
+    s"cast(conv(substring(fp, ${1 + 4 * i}, 4), 16, 10) as int) % $m"
+
+  /** The Bloom bitmap as a (word, bits) relation — ≤ m/64 rows — built
+    * from a fingerprint column by one bit_or aggregate (map-side
+    * partials). The ONE admission structure that is supposed to
+    * broadcast: bounded by a constant width, independent of corpus
+    * cardinality. */
+  private[graft] def bloomWordsOf(fps: DataFrame, m: Int): DataFrame =
+    fps.select(explode(array((0 until 4).map(i =>
+        expr(bloomSliceSql(i, m))): _*)).as("pos"))
+      .select((col("pos") / 64).cast("int").as("word"),
+        expr("shiftleft(1L, cast(pos % 64 as int))").as("mask"))
+      .groupBy(col("word")).agg(expr("bit_or(mask)").as("bits"))
 
   /** d17: Bloom-filter admission PREFILTER — the memory-bounded sibling
     * of d12's exact fingerprint manifest. The manifest relation is
@@ -1495,7 +1507,7 @@ object Dedup {
     * bitmap, and the bitmap is a ≤ m/64-row (word, bits) relation built
     * by one `bit_or` aggregate — map-side partials, then a BROADCAST to
     * the probe join (the bitmap is the one admission structure that is
-    * SUPPOSED to broadcast: bounded by conf at build time, independent
+    * SUPPOSED to broadcast: bounded by a constant width, independent
     * of corpus cardinality). Spark ships `bloom_filter_agg`/
     * `might_contain` natively, but its register layout is
     * engine-internal — this md5-slice construction is bit-identical
@@ -1503,30 +1515,8 @@ object Dedup {
     * driver-checked; a production deployment could swap the codegen'd
     * built-in behind the same columns.
     */
-  /** d17's bitmap width in bits: `1 << graft.bloom.bits`. */
-  private[graft] def bloomM(s: SparkSession): Int = 1 << bloomBitsLog2(s)
-
-  /** Hash i (0..3) of the Bloom construction: the i-th disjoint 16-bit
-    * hex slice of the md5 fingerprint column `fp`, folded onto the
-    * m-bit bitmap. Shared by the batch build/probe (d17) and the
-    * stateless per-row stream probe (st10). */
-  private[graft] def bloomSliceSql(i: Int, m: Int): String =
-    s"cast(conv(substring(fp, ${1 + 4 * i}, 4), 16, 10) as int) % $m"
-
-  /** The Bloom bitmap as a (word, bits) relation — ≤ m/64 rows — built
-    * from a fingerprint column by one bit_or aggregate (map-side
-    * partials). The ONE admission structure that is supposed to
-    * broadcast: bounded by conf at build time, independent of corpus
-    * cardinality. */
-  private[graft] def bloomWordsOf(fps: DataFrame, m: Int): DataFrame =
-    fps.select(explode(array((0 until 4).map(i =>
-        expr(bloomSliceSql(i, m))): _*)).as("pos"))
-      .select((col("pos") / 64).cast("int").as("word"),
-        expr("shiftleft(1L, cast(pos % 64 as int))").as("mask"))
-      .groupBy(col("word")).agg(expr("bit_or(mask)").as("bits"))
-
   private def d17(s: SparkSession, d: String): DataFrame = {
-    val m = bloomM(s)
+    val m = BloomM
     val docs = Tables.documents(s, d).filter(col("doc_id").isNotNull)
     val mx = docs.agg(max(col("doc_id")).as("mx"))
     val flagged = docs.crossJoin(broadcast(mx))
@@ -1560,7 +1550,7 @@ object Dedup {
     * DuckDB's `<<` RAISES on the sign bit — the mask spells that one
     * case out so both engines set bit 63 identically. */
   private val d17Sql: String = {
-    val m = 1 << 14 // the graft.bloom.bits default — Verify guards the conf
+    val m = BloomM
     def hex4(off: Int): String =
       (0 until 4).map { k =>
         val w = 1 << (4 * (3 - k))
@@ -1736,7 +1726,7 @@ object Dedup {
     * instead re-run the scan+explode). df over the collapsed rows is
     * exactly the DISTINCT-doc count, position counts are preserved in
     * the multiplicities, and the join-back on the 16-byte gram key
-    * runs through [[graft.operators.Salted.dfJoinBack]] — hot
+    * runs through [[graft.operators.Salted.hotLookupJoin]] — hot
     * boilerplate grams ARE the skew case, and the fused aggregate
     * shape is AQE-skew-exempt (SkewSpec), so grams in ≥5% of docs are
     * salted over 16 reducers while the cold gram tail (the vast
@@ -1771,7 +1761,7 @@ object Dedup {
       .groupBy(col("g")).agg(count(lit(1)).as("df"))
     val n = Tables.documents(s, d).filter(col("doc_id").isNotNull)
       .agg(count(lit(1)).as("n_docs"))
-    Salted.dfJoinBack(gcnt, gdf, "g", "df", n, "n_docs", saltBy = col("doc_id"))
+    Salted.hotLookupJoin(gcnt, gdf, "g", "df", n, "n_docs", saltBy = col("doc_id"))
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_grams"),
         sum(when(col("df") >= 2, col("cnt")).otherwise(0L)).as("n_repeated"))
@@ -1823,9 +1813,9 @@ object Dedup {
     * distributed relaxation; both keep exactly the min-id member of
     * every mutually-similar group.)
     *
-    * Blocking = the d5/s2 hyperplane-sign bucket (conf-sized width,
-    * within-block work n²/2^b — widen `graft.lsh.signBits` as the
-    * corpus grows; see [[graft.functions.VectorFunctions.signBitsFor]]).
+    * Blocking = the d5/s2 hyperplane-sign bucket (within-block work
+    * n²/2^b — the width's sizing rule as the corpus grows is on
+    * [[graft.functions.VectorFunctions.defaultSignDims]]).
     * A near-dup pair split across blocks is missed — the LSH recall
     * trade-off, measured by the spec against the planted truth (the
     * perturbation leaves 6 of the 8 default bucket dims moved by
@@ -1856,7 +1846,7 @@ object Dedup {
           .as("embedding"))
     val aug = base.unionByName(planted)
       .withColumn("bucket",
-        VectorFunctions.signBucket("embedding", VectorFunctions.sessionSignDims(s)))
+        VectorFunctions.signBucket("embedding", VectorFunctions.defaultSignDims))
     val a = aug.select(col("vec_id").as("va"), col("bucket"), col("embedding").as("ea"))
       .withColumn("norm_a", sqrt(VectorFunctions.dot("ea", "ea")))
     val b = aug.select(col("vec_id").as("vb"), col("bucket"), col("embedding").as("eb"))
@@ -1958,7 +1948,7 @@ object Dedup {
     * pass); the join-back on the hash is t17's shape — boilerplate
     * grams ARE the hot-key case and the fused form is AQE-skew-exempt
     * (SkewSpec) — so it runs through
-    * [[graft.operators.Salted.dfJoinBack]] like its siblings; the
+    * [[graft.operators.Salted.hotLookupJoin]] like its siblings; the
     * covered-index expansion is ≤ k× the marked positions; token
     * cut + reassembly shuffle on (doc_id, idx)/doc_id — everything
     * corpus-proportional, nothing pairwise, no driver state. The
@@ -2005,7 +1995,7 @@ object Dedup {
     // through the selective hot-key salting; df (distinct docs per
     // gram) bounds the per-gram probe rows up to within-doc repeats
     val n = docs.agg(count(lit(1)).as("n_docs"))
-    val covered = Salted.dfJoinBack(occ, stats, "g", "df", n, "n_docs",
+    val covered = Salted.hotLookupJoin(occ, stats, "g", "df", n, "n_docs",
         saltBy = col("doc_id"))
       .filter(col("df") >= 2 && col("owner") =!= col("doc_id"))
       .select(col("doc_id"), explode(expr(s"sequence(p, p + ${k - 1})")).as("i"))

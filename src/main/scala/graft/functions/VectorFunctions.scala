@@ -59,39 +59,13 @@ object VectorFunctions {
     (0 until bits).map(i => 1 + i * vecLen / bits)
   }
 
-  /** The default sign-bucket dims shared by s2 (ANN probe) and d5
-    * (embedding near-dup blocking): 8 bits → 256 buckets (expected
-    * occupancy n/256). Round 4 used 4 fixed bits — n²/16 within-bucket
-    * work, quadratic-ish at 100× corpus growth. */
+  /** The sign-bucket dims shared by s2 (ANN probe) and d5 (embedding
+    * near-dup blocking): 8 bits → 256 buckets (expected occupancy
+    * n/256). Round 4 used 4 fixed bits — n²/16 within-bucket work,
+    * quadratic-ish at 100× corpus growth. Sizing rule as the corpus
+    * grows: the smallest b (clamped to [4, 32]) whose expected bucket
+    * occupancy n/2^b is at most 256, i.e. ⌈log2(n/256)⌉ — within-bucket
+    * pair work then scales as 256·n (linear in n) instead of n². The
+    * d5/d18/s2 oracle SQL is generated from this same constant. */
   val defaultSignDims: Seq[Int] = signDims(8)
-
-  /** Sign-LSH width for an n-vector corpus: the smallest b (clamped to
-    * [4, 32]) whose expected bucket occupancy n/2^b is at most
-    * `targetOccupancy` — within-bucket pair work then scales as
-    * n·targetOccupancy (linear in n) instead of n². Use this to pick
-    * the value for the `graft.lsh.signBits` conf when the corpus
-    * outgrows the 8-bit default. */
-  def signBitsFor(n: Long, targetOccupancy: Long = 256L): Int = {
-    require(n >= 0 && targetOccupancy >= 1, "need n >= 0 and targetOccupancy >= 1")
-    val b = math.ceil(
-      math.log(math.max(1.0, n.toDouble / targetOccupancy.toDouble)) / math.log(2.0)).toInt
-    math.min(32, math.max(4, b))
-  }
-
-  /** Session-configurable sign-bucket dims (conf `graft.lsh.signBits`,
-    * default 8) — the blocking width of d5 and s2. The DuckDB oracle
-    * SQL is generated against the DEFAULT width, so set the conf only
-    * in deployments that don't run the oracle gate (size it with
-    * [[signBitsFor]]). Validated at parse time: a non-numeric or
-    * out-of-range width fails loudly HERE, not as a confusing
-    * element_at error (or silent mis-blocking) deep in the d5/s2 plan. */
-  def sessionSignDims(s: org.apache.spark.sql.SparkSession): Seq[Int] =
-    signDims(s.conf.getOption("graft.lsh.signBits").map { v =>
-      val b = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.lsh.signBits must be an integer in 1..64, got '$v'")
-      }
-      require(b >= 1 && b <= 64, s"graft.lsh.signBits must be in 1..64, got $b")
-      b
-    }.getOrElse(8))
 }

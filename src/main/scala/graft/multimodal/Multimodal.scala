@@ -145,7 +145,7 @@ object Multimodal {
     * de-windowed d3/d7/d10/t4/t7: one hot stream at 100× event scale
     * is one spilling task). This is t10's two-level bucketed
     * prefix-sum instead: events bucket by `tus div B` (B sized so the
-    * bucket count ≈ √n, conf-overridable via `graft.frame.bucket`),
+    * bucket count ≈ √n, derived in-plan from the input's span),
     * bucket COUNTS aggregate with map-side partials, a per-user
     * running sum over the bucket-count METADATA rows (≤ √n rows per
     * user) yields each bucket's starting offset, and a local
@@ -163,18 +163,10 @@ object Multimodal {
     // action (the standalone stats job measured ~2× m2's total as a
     // second scan + job round-trip; as a broadcast scalar it is one
     // shuffle-free reduce inside the same DAG, the d12/q28 pattern).
-    // Conf override validated at parse time, like graft.pack.bucket:
-    // width ≤ 0 would NULL the bucket key and collapse both stages.
-    val widthExpr = s.conf.getOption("graft.frame.bucket").map { v =>
-      val b = try v.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.frame.bucket must be a positive integer (µs), got '$v'")
-      }
-      require(b > 0, s"graft.frame.bucket must be > 0, got $b")
-      lit(b)
-    }.getOrElse(
-      greatest(lit(1L), ceil((col("mx_t") - col("mn_t") + 1).cast("double") /
-        sqrt(col("n_t").cast("double")))))
+    // Floored at 1: a width ≤ 0 would NULL the bucket key and collapse
+    // both stages.
+    val widthExpr = greatest(lit(1L),
+      ceil((col("mx_t") - col("mn_t") + 1).cast("double") / sqrt(col("n_t").cast("double"))))
     val stats = base.agg(min(col("tus")).as("mn_t"), max(col("tus")).as("mx_t"),
       count(lit(1)).as("n_t"))
     val tb = base.crossJoin(broadcast(stats))

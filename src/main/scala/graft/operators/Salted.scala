@@ -144,25 +144,6 @@ object Salted {
     factS.join(dictS, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** The conf-gated df join-back: [[hotLookupJoin]] when
-    * `graft.skew.salted` is unset or true (the default — the skew
-    * exposure is structural, see [[lookupJoin]]'s AQE note), the plain
-    * equi-join when explicitly false (for A/B measurement; results are
-    * identical either way, which SkewSpec pins on a constructed
-    * stopword corpus). */
-  def dfJoinBack(fact: DataFrame, dict: DataFrame, key: String, dfCol: String,
-      total: DataFrame, totalCol: String, saltBy: Column): DataFrame = {
-    val enabled = fact.sparkSession.conf.getOption("graft.skew.salted")
-      .forall {
-        case v if v.equalsIgnoreCase("true") => true
-        case v if v.equalsIgnoreCase("false") => false
-        case v => throw new IllegalArgumentException(
-          s"graft.skew.salted must be true or false, got '$v'")
-      }
-    if (enabled) hotLookupJoin(fact, dict, key, dfCol, total, totalCol, saltBy)
-    else fact.join(dict, Seq(key))
-  }
-
   /** [[sumByKey]] generalized to a row count plus several summed
     * measures at once (same two-phase shape, one salted shuffle for
     * all of them). Counts re-sum and sums re-sum, so any measure whose

@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, UnspecifiedDistribution}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Input-aware scan spread (r20; guide §2 parallelism, VERDICT r19
   * "what's wrong" #2): the r19 spreads unconditionally
@@ -18,11 +21,20 @@ import org.apache.spark.sql.DataFrame
   * would run on fewer partitions than the session's shuffle-partition
   * target. At bench scale the decision (1 < 32) produces the identical
   * plan the r19 form produced — same Exchange, same timings; on an
-  * already-parallel input the Exchange disappears. The probe
-  * (`df.rdd.getNumPartitions`) only PLANS the frame — no job runs —
-  * and the decision is a deterministic function of the input layout
-  * and session conf, so identical call sites still canonicalize to
-  * identical subtrees and AQE stage reuse is preserved.
+  * already-parallel input the Exchange disappears. The decision is a
+  * deterministic function of the input layout and session conf, so
+  * identical call sites still canonicalize to identical subtrees and
+  * AQE stage reuse is preserved.
+  *
+  * No job runs to decide. A frame whose width a shuffle sets already
+  * runs at the shuffle-partition count and is returned as is. Probing
+  * it with `df.rdd` would be the expensive part: under AQE that
+  * finalizes the adaptive plan, which runs its shuffle and broadcast
+  * stages. A broadcast join runs on its streamed side's partitions, so
+  * the width is read from that side (d13/d16/d20/d23 spread a scan
+  * joined to a broadcast scalar). An exchange-free (sub)plan — a scan
+  * plus per-row work — is probed with its RDD's partition count, which
+  * only lists its input splits.
   */
 object Spread {
   implicit class SpreadOps(private val df: DataFrame) extends AnyVal {
@@ -30,7 +42,26 @@ object Spread {
       * physical plan would otherwise run on fewer partitions. */
     def spreadToCores: DataFrame = {
       val target = df.sparkSession.sessionState.conf.numShufflePartitions
-      if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+      if (width(df.queryExecution.sparkPlan).exists(_ < target)) df.repartition(target) else df
     }
   }
+
+  /** Partitions the planned (pre-AQE) physical plan runs on, or None
+    * when a shuffle sets them. */
+  private def width(plan: SparkPlan): Option[Int] =
+    if (!plan.exists(needsExchange)) Some(plan.execute().getNumPartitions)
+    else if (plan.isInstanceOf[Exchange]) None
+    else {
+      val reqs = plan.requiredChildDistribution
+      val streamed = plan.children.zip(reqs).collect { case (c, UnspecifiedDistribution) => c }
+      if (streamed.size == 1 && reqs.forall(r =>
+          r == UnspecifiedDistribution || r.isInstanceOf[BroadcastDistribution]))
+        width(streamed.head)
+      else None
+    }
+
+  /** An Exchange, or a node whose child distribution requirement will
+    * insert one. */
+  private def needsExchange(p: SparkPlan): Boolean =
+    p.isInstanceOf[Exchange] || p.requiredChildDistribution.exists(_ != UnspecifiedDistribution)
 }

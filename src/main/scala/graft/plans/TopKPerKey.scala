@@ -40,43 +40,23 @@ case class TopKPerKeyLogical(keys: Seq[Expression], order: Expression,
   * the heap, is the bottleneck.) Top-k is a semigroup — merging
   * per-partition top-k sets and re-heaping is exact.
   *
-  * Degenerate-key caveat + bypass (conf `graft.topk.partial`, default
-  * on): when keys are NEAR-UNIQUE (rows/key ≲ k, e.g. top-k "per
-  * doc_id"), the partial stage thins nothing — every row survives its
-  * own heap — and its cost is pure overhead. That overhead is bounded:
-  * the stage adds NO shuffle (it runs on the child's partitioning), so
-  * the worst case is one hash-map probe + O(log k) heap insert + one
-  * UnsafeRow copy per row — a single extra narrow pass, ~5-10% of the
-  * operator's runtime in the all-unique-keys worst case, while the
-  * upside when keys repeat is shuffling partitions·keys·k rows instead
-  * of ALL rows. Hence partial stays ON by default; a caller that KNOWS
-  * its key is near-unique sets `graft.topk.partial=false` and plans
-  * only the final stage (results are identical — the semigroup merge
-  * of singleton sets is the identity).
-  *
-  * `graft.topk.partial` is read at PHYSICAL-PLANNING time, not
-  * execution time: a DataFrame planned under one setting keeps that
-  * plan if executed (or its plan reused) after the conf changes —
-  * set the conf BEFORE building the DataFrame. Results are identical
-  * either way; only the plan shape differs.
+  * Degenerate-key caveat: when keys are NEAR-UNIQUE (rows/key ≲ k,
+  * e.g. top-k "per doc_id"), the partial stage thins nothing — every
+  * row survives its own heap — and its cost is pure overhead. That
+  * overhead is bounded: the stage adds NO shuffle (it runs on the
+  * child's partitioning), so the worst case is one hash-map probe +
+  * O(log k) heap insert + one UnsafeRow copy per row — a single extra
+  * narrow pass, ~5-10% of the operator's runtime in the all-unique-keys
+  * worst case, while the upside when keys repeat is shuffling
+  * partitions·keys·k rows instead of ALL rows. Hence the partial stage
+  * is always planned (results are identical either way — the semigroup
+  * merge of singleton sets is the identity).
   */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyLogical(keys, order, tie, k, child) =>
-      val raw = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("graft.topk.partial", "true")
-      // Locale.ROOT: the default toLowerCase is locale-sensitive
-      // (Turkish dotless-i turns "TRUE" into something unmatchable)
-      val partialOn = raw.toLowerCase(java.util.Locale.ROOT) match {
-        case "true" => true
-        case "false" => false
-        case other => throw new IllegalArgumentException(
-          s"graft.topk.partial must be true or false, got '$other'")
-      }
-      val base = planLater(child)
-      val inner = if (partialOn) TopKPerKeyExec(keys, order, tie, k, base, partial = true)
-                  else base
-      TopKPerKeyExec(keys, order, tie, k, inner) :: Nil
+      val partial = TopKPerKeyExec(keys, order, tie, k, planLater(child), partial = true)
+      TopKPerKeyExec(keys, order, tie, k, partial) :: Nil
     case _ => Nil
   }
 }

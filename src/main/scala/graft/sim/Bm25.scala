@@ -65,9 +65,9 @@ object Bm25 {
     // for adjacent occurrences). |Q| is a literal constant, so the
     // explode + corpus-sized (doc, tok) shuffle the textbook plan
     // pays is avoided entirely; this never shuffles document rows.
-    // Measured per-pass at sf0.1 (Bm25AB probe, best of 3): this
-    // projection 0.23 s vs 0.35 s for split+explode_outer+agg and
-    // 0.51 s for split+explode (the non-outer explode makes the
+    // Measured per-pass at sf0.1 with a since-removed probe (best of
+    // 3): this projection 0.23 s vs 0.35 s for split+explode_outer+agg
+    // and 0.51 s for split+explode (the non-outer explode makes the
     // optimizer infer a size(ts) > 0 filter that re-tokenizes every
     // row) — the per-term regexes are cheap because they build no
     // token array.

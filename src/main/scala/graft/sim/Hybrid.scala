@@ -33,8 +33,9 @@ import graft.{QFn, Tables}
   * term set is data-dependent, so the literal-regexp_count plan is
   * unavailable — this is the explode shape, with explode_outer to
   * avoid the optimizer's inferred size(ts)>0 filter that would
-  * re-tokenize every row (measured in Bm25AB). df/idf/avgdl collapse
-  * to a vocab-sized broadcast; both arms end in bounded top-k (s14's
+  * re-tokenize every row (measured at sf0.1 with a since-removed
+  * probe, see [[Bm25]]). df/idf/avgdl collapse to a vocab-sized
+  * broadcast; both arms end in bounded top-k (s14's
   * TakeOrdered / s1's partial+final heaps), so the fusion join is
   * ArmK × ArmK rows — driver-trivial at any corpus size.
   */
@@ -64,7 +65,8 @@ object Hybrid {
       .filter(col("tok").isNotNull).distinct()
     // corpus token stream, thinned to the query vocabulary by the
     // broadcast join BEFORE any shuffle; explode_outer avoids the
-    // inferred re-tokenizing filter (Bm25AB: 0.51 -> 0.35 s/pass)
+    // inferred re-tokenizing filter (0.51 -> 0.35 s/pass, measured at
+    // sf0.1 with a since-removed probe)
     val hits = docs
       .select(col("doc_id"), expr(TsE).as("ts"))
       .select(col("doc_id"), size(col("ts")).cast("long").as("len"),

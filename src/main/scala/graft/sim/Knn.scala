@@ -121,15 +121,9 @@ object Knn {
        |QUALIFY rank <= 10
        |ORDER BY q_id, rank""".stripMargin
 
-  /** Oracle-side bucket dims: pinned to the DEFAULT width, because the
-    * SQL string is generated once at class load. The query side reads
-    * the same default unless `graft.lsh.signBits` overrides it (sized
-    * via [[VectorFunctions.signBitsFor]] for larger corpora — only in
-    * deployments that don't run the oracle gate). */
-  private val lshDims = VectorFunctions.defaultSignDims
-
-  /** s2: LSH-bucketed ANN — hyperplane-sign bucket (sessionSignDims,
-    * default 8 bits), then brute-force only within the query's bucket.
+  /** s2: LSH-bucketed ANN — hyperplane-sign bucket
+    * ([[VectorFunctions.defaultSignDims]], 8 bits, shared with the
+    * oracle SQL), then brute-force only within the query's bucket.
     * The bucket key is a per-row expression; the probe join is an
     * equi-join on it.
     */
@@ -137,7 +131,7 @@ object Knn {
     val e = Tables.embeddings(s, d)
       .spreadToCores
       .withColumn("bucket",
-        VectorFunctions.signBucket("embedding", VectorFunctions.sessionSignDims(s)))
+        VectorFunctions.signBucket("embedding", VectorFunctions.defaultSignDims))
       .withColumn("norm_e", sqrt(VectorFunctions.dot("embedding", "embedding")))
       .filter(col("norm_e") > 0) // ANSI zero-norm guard (see s1)
     val q = e.filter(col("vec_id") < 5)
@@ -153,7 +147,7 @@ object Knn {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  private[sim] val s2BucketSql = lshDims
+  private[sim] val s2BucketSql = VectorFunctions.defaultSignDims
     .map(i => s"(CASE WHEN embedding[$i] > 0 THEN '1' ELSE '0' END)").mkString(" || ")
 
   private val s2Sql =
@@ -886,8 +880,7 @@ object Knn {
     * never empty at round 0, and balanced from round 0 (cold
     * data-point seeds produced lopsided cells that made nprobe
     * recall unmeasurable — see KnnRankSpec). k = label cardinality
-    * (10 here); unlike q27's layout-only bucket conf, k changes the
-    * OUTPUT, so it is not conf-overridable. */
+    * (10 here). */
   private def kmeansSeeds(e: DataFrame): DataFrame =
     centroidArrays(e).select(col("cell").cast("long").as("cell"), col("carr"))
 

@@ -208,7 +208,7 @@ object StreamingOps {
     * vertex_ai_batch_processor.py:298). Materializing the manifests at
     * staging time also means the batch-side aggregation runs under the
     * session's full parallelism, not the stream's reduced
-    * [[streamPartitions]] regime. The split scalar is a metadata-sized
+    * [[StreamPartitions]] regime. The split scalar is a metadata-sized
     * driver aggregate (same class as t10's documented max-id scalar) —
     * staging is an eager filesystem write anyway. A `_src_meta` marker
     * keeps re-staging idempotent and stale-proof ([[eventsStreamMulti]]).
@@ -229,13 +229,12 @@ object StreamingOps {
     // source identity PLUS manifest-logic version (ADVICE r9): without
     // the token, a d12Manifests/signature change silently reuses stale
     // staged manifests and st9 fails its d12-verbatim oracle confusingly.
-    // PLUS the Bloom width (ADVICE r10): bloom_manifest is built under
-    // the session's graft.bloom.bits, so a width change must force a
-    // re-stage — st10 probing a bitmap of the wrong width yields wrong
-    // bloom_maybe values, including Bloom FALSE NEGATIVES.
+    // PLUS the Bloom width (ADVICE r10): a bloom_manifest staged under
+    // another width must force a re-stage — st10 probing a bitmap of
+    // the wrong width yields wrong bloom_maybe values, including Bloom
+    // FALSE NEGATIVES.
     val meta = graft.StagePath.srcMeta(d, src,
-      graft.dedup.Dedup.manifestLogicToken + ":b" +
-        graft.dedup.Dedup.bloomBitsLog2(s))
+      graft.dedup.Dedup.manifestLogicToken + ":b" + graft.dedup.Dedup.BloomBitsLog2)
     val fresh = java.nio.file.Files.exists(marker) &&
       new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
       (0 until nFiles).forall(k => java.nio.file.Files.exists(dir.resolve(s"new_docs_$k.parquet"))) &&
@@ -253,8 +252,7 @@ object StreamingOps {
       sigM.write.mode("overwrite").parquet(mdir.resolve("sig_manifest").toString)
       // the sweep also leaves the Bloom bitmap behind (st10's prefilter
       // state — d17's build over the same fp manifest)
-      graft.dedup.Dedup.bloomWordsOf(
-          fpM.select(col("fp")), graft.dedup.Dedup.bloomM(s))
+      graft.dedup.Dedup.bloomWordsOf(fpM.select(col("fp")), graft.dedup.Dedup.BloomM)
         .write.mode("overwrite").parquet(mdir.resolve("bloom_manifest").toString)
       java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
     }
@@ -292,15 +290,10 @@ object StreamingOps {
     // a 1.22x host median); the isolated A/B confirmed on≈off at both
     // sf0.1 and sf1 for the single-file regime. Multi-file runs
     // (st9Multi/st10Multi, and any unbounded production landing dir)
-    // re-read the manifests every trigger and keep the persist. The
-    // conf (graft.stream.persistManifests) still overrides both ways
-    // for A/B measurement.
-    val persistManifests = s.conf
-      .getOption("graft.stream.persistManifests")
-      .map(_.equalsIgnoreCase("true")).getOrElse(nFiles > 1)
+    // re-read the manifests every trigger and keep the persist.
     def manifest(name: String): DataFrame = {
       val df = s.read.parquet(mdir.resolve(name).toString)
-      if (persistManifests &&
+      if (nFiles > 1 &&
           df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df
@@ -309,30 +302,18 @@ object StreamingOps {
       manifest("fp_manifest"), manifest("sig_manifest"), manifest("bloom_manifest"))
   }
 
-  /** State-store partition count for the bounded streaming queries
-    * (conf `graft.stream.partitions`). Stateful operators commit one
-    * delta file per state partition per store per micro-batch — at the
-    * session default of 32 partitions, st6's interval join (4 state
-    * stores x 32 partitions x data+watermark batches) pays ~256 file
-    * commits of pure fixed overhead while the DATA per batch is tiny.
-    * 2 partitions cut that floor 16x (measured: 21.6 s -> 10.8 s for
-    * the seven-query subset at sf0.1; 4 partitions left ~0.8 s on the
-    * table vs 2); the stateful work itself is keyed and sharded
-    * identically (results are partitioning-invariant), and an
-    * unbounded production feed — where state volume, not commit count,
-    * dominates — would raise this back up. */
-  private def streamPartitions(s: SparkSession): String =
-    s.conf.getOption("graft.stream.partitions").map { v =>
-      // validated at parse time (the ADVICE r6 conf contract): an
-      // invalid value would otherwise surface as an opaque planner
-      // error at stream start
-      val n = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.stream.partitions must be a positive integer, got '$v'")
-      }
-      require(n >= 1, s"graft.stream.partitions must be >= 1, got $n")
-      n.toString
-    }.getOrElse("2")
+  /** State-store partition count for the bounded streaming queries.
+    * Stateful operators commit one delta file per state partition per
+    * store per micro-batch — at the session default of 32 partitions,
+    * st6's interval join (4 state stores x 32 partitions x data+watermark
+    * batches) pays ~256 file commits of pure fixed overhead while the
+    * DATA per batch is tiny. 2 partitions cut that floor 16x (measured:
+    * 21.6 s -> 10.8 s for the seven-query subset at sf0.1; 4 partitions
+    * left ~0.8 s on the table vs 2); the stateful work itself is keyed
+    * and sharded identically (results are partitioning-invariant), and
+    * an unbounded production feed — where state volume, not commit
+    * count, dominates — would raise this back up. */
+  private val StreamPartitions = "2"
 
   /** Runs a bounded streaming query to completion into a memory sink
     * and returns its result table.
@@ -358,7 +339,7 @@ object StreamingOps {
     // plan would need building against that session from the start —
     // DataFrames are session-bound).
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamPartitions(s))
+    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
     try {
       val q = out.writeStream.outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -995,7 +976,7 @@ object StreamingOps {
   private def bloomPipeline(s: SparkSession,
       staged: (DataFrame, DataFrame, DataFrame, DataFrame), name: String): DataFrame = {
     val (stream, fpManifest, _, bloom) = staged
-    val m = graft.dedup.Dedup.bloomM(s)
+    val m = graft.dedup.Dedup.BloomM
     var probe = stream.withColumn("fp", md5(col("text").cast("binary")))
     val hits = (0 until 4).map { i =>
       probe = probe
@@ -1066,7 +1047,7 @@ object StreamingOps {
           count(lit(1)).as("n_events"))
     s.streams.active.filter(_.name == name).foreach(_.stop())
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamPartitions(s))
+    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
     try {
       val q = stream.writeStream.queryName(name)
         .option("checkpointLocation", ckpt.toString)

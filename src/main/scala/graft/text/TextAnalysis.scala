@@ -401,8 +401,7 @@ object TextAnalysis {
     * is `maxId`: ⌈√(maxId+1)⌉, floored at 64. The bucket-offset window
     * then reads ≈ maxId/width ≤ √n metadata rows and each
     * within-bucket cumsum partition holds ≤ width ≈ √n docs — at 10⁹
-    * docs both stages are ~32k rows. Overridable per session via the
-    * `graft.pack.bucket` conf. */
+    * docs both stages are ~32k rows. */
   private[graft] def derivePackBucket(maxId: Long): Long =
     math.max(64L, math.ceil(math.sqrt((maxId + 1).toDouble)).toLong)
 
@@ -413,16 +412,7 @@ object TextAnalysis {
     // stages
     val maxRow = docs.agg(max(col("doc_id"))).head()
     val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-    // validated at parse time: bucket ≤ 0 would make `doc_id div 0`
-    // yield NULL buckets and silently collapse both prefix-sum stages
-    val packBucket = s.conf.getOption("graft.pack.bucket").map { v =>
-      val b = try v.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.pack.bucket must be a positive integer, got '$v'")
-      }
-      require(b > 0, s"graft.pack.bucket must be > 0, got $b")
-      b
-    }.getOrElse(derivePackBucket(maxId))
+    val packBucket = derivePackBucket(maxId)
     val base = docs
       .select(col("doc_id"), tokenCount(col("text")).as("n_tokens"))
       .withColumn("pbucket", expr(s"doc_id div $packBucket"))
@@ -516,11 +506,11 @@ object TextAnalysis {
     * which at web scale is billions of distinct tokens. A hot
     * ubiquitous token is NOT covered by AQE here (the fused df-agg
     * join-back is exempt from OptimizeSkewedJoin — SkewSpec), so the
-    * join-back RUNS through [[graft.operators.Salted.dfJoinBack]]:
+    * join-back RUNS through [[graft.operators.Salted.hotLookupJoin]]:
     * stopword-grade keys (df ≥ 5% of docs) get their probe rows
     * salted over 16 reducers with dictionary copies to match, cold
-    * keys pay nothing (conf `graft.skew.salted`; SkewSpec pins
-    * on/off equality and the reducer spread). The only
+    * keys pay nothing (SkewSpec pins row identity with the plain
+    * join and the reducer spread). The only
     * broadcast is the one-row corpus count (same scalar pattern as
     * d12/d13's max-id). Everything stays integer until the final
     * per-row division, so the oracle compare is exact (no cross-row
@@ -542,7 +532,7 @@ object TextAnalysis {
       .select(col("doc_id"), lower(col("tok")).as("tok"))
       .distinct()
     val df = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    Salted.dfJoinBack(toks, df, "tok", "df", n, "n_docs", saltBy = col("doc_id"))
+    Salted.hotLookupJoin(toks, df, "tok", "df", n, "n_docs", saltBy = col("doc_id"))
       .crossJoin(broadcast(n))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_distinct"),
@@ -586,7 +576,7 @@ object TextAnalysis {
     * Scale shape: tf and df are map-side-partial aggregates; the
     * df join-back is the t12/d14 shuffle equi-join on the token key
     * (never a vocabulary broadcast), routed through
-    * [[graft.operators.Salted.dfJoinBack]] because the fused form is
+    * [[graft.operators.Salted.hotLookupJoin]] because the fused form is
     * AQE-skew-exempt (SkewSpec) — hot stopword tokens are salted,
     * cold vocabulary is not; the scalar corpus count broadcasts;
     * and per-doc top-5 runs on TopKPerKey's partial+final bounded
@@ -602,7 +592,7 @@ object TextAnalysis {
       .select(col("doc_id"), lower(col("tok")).as("tok"))
     val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val scored = Salted.dfJoinBack(tf, dfreq, "tok", "df", n, "n_docs",
+    val scored = Salted.hotLookupJoin(tf, dfreq, "tok", "df", n, "n_docs",
         saltBy = col("doc_id"))
       .crossJoin(broadcast(n))
       .select(col("doc_id"), col("tok"), col("tf"), col("df"),
@@ -1215,7 +1205,7 @@ object TextAnalysis {
     * HASH (md5 — the shuffle carries 16-byte keys, never line text);
     * the DF join-back is a shuffle equi-join on that hash (both sides
     * corpus-proportional — the t12/t14 IDF join-back shape) routed
-    * through [[graft.operators.Salted.dfJoinBack]], because
+    * through [[graft.operators.Salted.hotLookupJoin]], because
     * boilerplate hashes are exactly the AQE-exempt hot-key case: a
     * line in every 3rd document otherwise lands its whole probe set
     * on one reducer (line df counts DISTINCT docs, a lower bound on
@@ -1243,7 +1233,7 @@ object TextAnalysis {
       .withColumn("lh", md5(col("line")))
     val lineDf = lines.groupBy(col("lh")).agg(countDistinct(col("doc_id")).as("df"))
     val total = docs.agg(count(lit(1)).as("total_docs"))
-    Salted.dfJoinBack(lines, lineDf, "lh", "df", total, "total_docs",
+    Salted.hotLookupJoin(lines, lineDf, "lh", "df", total, "total_docs",
         saltBy = col("doc_id"))
       .crossJoin(broadcast(total))
       .withColumn("keep", col("df") * 50 <= col("total_docs"))

@@ -153,7 +153,7 @@ class DedupPlanSpec extends SparkSpec {
     val p = out.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(!p.contains("Window"), p)
     assert(!p.contains("CartesianProduct"), p)
-    // the only nested-loop shape is dfJoinBack's one-row scalar cross
+    // the only nested-loop shape is hotLookupJoin's one-row scalar cross
     // (the d14/t12 pattern, ≤1 distinct identity build)
     val bnlj = "BroadcastNestedLoopJoin[^\\n]*".r.findAllIn(p).toSeq
     assert(bnlj.forall(_.contains("Cross")), s"non-scalar nested loop:\n$p")
@@ -526,35 +526,42 @@ class DedupPlanSpec extends SparkSpec {
   }
 
   test("d17 Bloom prefilter: no false negatives; a tiny bitmap forces measurable FPs") {
+    import org.apache.spark.sql.functions._
     import spark.implicits._
-    // 40 distinct existing docs; new batch (ids > 50 - 50 div 5 = 40):
-    // one exact dup of doc 7 + nine genuinely new docs
-    val docs = (1L to 40L).map(i => (i, s"existing document body number $i")) ++
-      Seq((41L, "existing document body number 7")) ++
-      (42L to 50L).map(i => (i, s"genuinely new content $i"))
-    val dir = java.nio.file.Files.createTempDirectory("d17fp").toString
-    docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // bits=6 → a 64-bit bitmap; 40 fps × 4 slices saturate it, so the
-    // false-positive path genuinely fires (deterministic: md5 is fixed)
-    spark.conf.set("graft.bloom.bits", "6")
-    try {
-      val out = SparkEntry.queries("d17_bloom_admit")(spark, dir).collect()
+    def admit(dir: String): Map[Long, (Boolean, Boolean, Boolean)] =
+      SparkEntry.queries("d17_bloom_admit")(spark, dir).collect()
         .map(r => r.getLong(0) -> ((r.getBoolean(2), r.getBoolean(3), r.getBoolean(4)))).toMap
-      assert(out.keySet == (41L to 50L).toSet, s"new batch rows: ${out.keySet}")
-      // the Bloom guarantee: an exact dup can NEVER be bloom-negative
-      val (bm41, ed41, fp41) = out(41L)
-      assert(bm41 && ed41 && !fp41, s"dup row: ${out(41L)}")
-      // false_positive is definitionally bloom_maybe ∧ ¬exact_dup
-      for ((id, (bm, ed, fp)) <- out)
-        assert(fp == (bm && !ed), s"doc $id: bloom=$bm exact=$ed fp=$fp")
-      assert(out.values.count(_._3) > 0,
-        s"expected false positives under a saturated 64-bit bitmap: $out")
-    } finally spark.conf.unset("graft.bloom.bits")
-    // at the real default width the same corpus has zero FPs (m=16Ki
-    // bits vs 160 set positions) — the sizing rule in action
-    val wide = SparkEntry.queries("d17_bloom_admit")(spark, dir).collect()
-      .map(r => (r.getBoolean(2), r.getBoolean(3), r.getBoolean(4)))
-    assert(wide.count(_._3) == 0, s"default-width FPs: ${wide.toSeq}")
+    // 8,000 distinct history docs; new batch (ids > 10000 - 10000 div 5
+    // = 8000): one exact dup of doc 7 + 1,999 genuinely new docs. 8,000
+    // fps × 4 slices into the 16 Ki-bit bitmap set ~86% of its bits
+    // (1 − e^(−32000/16384)), so the false-positive path genuinely
+    // fires (deterministic: md5 is fixed)
+    val full = java.nio.file.Files.createTempDirectory("d17fp").toString
+    spark.range(1L, 10001L).select(col("id").as("doc_id"),
+        when(col("id") === 8001L, lit("existing document body number 7"))
+          .when(col("id") <= 8000L, concat(lit("existing document body number "), col("id")))
+          .otherwise(concat(lit("genuinely new content "), col("id"))).as("text"))
+      .write.mode("overwrite").parquet(s"$full/documents.parquet")
+    val out = admit(full)
+    assert(out.keySet == (8001L to 10000L).toSet, s"new batch: ${out.size} rows")
+    // the Bloom guarantee: an exact dup can NEVER be bloom-negative
+    val (bm, ed, fp) = out(8001L)
+    assert(bm && ed && !fp, s"dup row: ${out(8001L)}")
+    // false_positive is definitionally bloom_maybe ∧ ¬exact_dup
+    for ((id, (bm, ed, fp)) <- out)
+      assert(fp == (bm && !ed), s"doc $id: bloom=$bm exact=$ed fp=$fp")
+    val fps = out.values.count(_._3)
+    assert(fps > 0, "expected false positives under a saturated bitmap")
+    // a 40-doc history at the same width has zero FPs (m = 16 Ki bits
+    // vs 160 set positions) — the sizing rule in action
+    val small = java.nio.file.Files.createTempDirectory("d17small").toString
+    ((1L to 40L).map(i => (i, s"existing document body number $i")) ++
+      Seq((41L, "existing document body number 7")) ++
+      (42L to 50L).map(i => (i, s"genuinely new content $i")))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$small/documents.parquet")
+    val wide = admit(small)
+    assert(wide.keySet == (41L to 50L).toSet && wide.values.count(_._3) == 0,
+      s"small-history FPs: $wide")
   }
 
   test("per-row SimHash fold equals the batch explode signature on real corpus data") {
@@ -661,12 +668,11 @@ class DedupPlanSpec extends SparkSpec {
     assert(d13(20L) == (true, "admitted"), s"d13 20: ${d13(20L)}")
   }
 
-  test("st10 re-stages its persisted Bloom bitmap when graft.bloom.bits changes") {
-    // ADVICE r10 (medium): the staged bloom_manifest is built under the
-    // session's graft.bloom.bits, so the _src_meta freshness marker must
-    // encode the width — otherwise a width change reuses the stale
-    // bitmap and st10 probes at the wrong modulus (wrong bloom_maybe,
-    // including Bloom FALSE NEGATIVES).
+  test("st10 re-stages a Bloom bitmap staged under another width") {
+    // ADVICE r10 (medium): the _src_meta freshness marker must encode
+    // the Bloom width — otherwise a bitmap staged under another width
+    // is reused and st10 probes at the wrong modulus (wrong
+    // bloom_maybe, including Bloom FALSE NEGATIVES).
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("bloomw").toString
     (1L to 20L).map(i => (i, s"bloom width regression doc $i body ${i * 17}"))
@@ -679,19 +685,17 @@ class DedupPlanSpec extends SparkSpec {
       System.getProperty("java.io.tmpdir"),
       "graft_stream_docs_" + StagePath.corpusToken(dir) + "_manifests", "_src_meta")
     def meta(): String = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-    runBloom("st10_stream_bloom") // stage under the default width
+    runBloom("st10_stream_bloom")
     // the srcMeta payload ends with the corpus path (ADVICE r13); the
     // width token sits just before it
-    assert(meta().endsWith(s":b14:$dir"), s"marker must encode the default width: ${meta()}")
-    spark.conf.set("graft.bloom.bits", "6")
-    try {
-      val d17 = runBloom("d17_bloom_admit")
-      val st10 = runBloom("st10_stream_bloom")
-      // the width change must have forced a re-stage...
-      assert(meta().endsWith(s":b6:$dir"), s"marker must track the new width: ${meta()}")
-      // ...so the persisted bitmap st10 probes matches d17's live build
-      assert(st10 == d17, s"st10 diverged from d17 after a width change: $st10 vs $d17")
-    } finally spark.conf.unset("graft.bloom.bits")
+    assert(meta().endsWith(s":b14:$dir"), s"marker must encode the width: ${meta()}")
+    // a marker left by a layout staged under another width is stale
+    java.nio.file.Files.write(marker, meta().replace(s":b14:$dir", s":b6:$dir").getBytes("UTF-8"))
+    val st10 = runBloom("st10_stream_bloom")
+    assert(meta().endsWith(s":b14:$dir"), s"stale width did not force a re-stage: ${meta()}")
+    // the persisted bitmap st10 probes matches d17's live build
+    val d17 = runBloom("d17_bloom_admit")
+    assert(st10 == d17, s"st10 diverged from d17: $st10 vs $d17")
   }
 
   test("d18 semantic dedup: planted near-dups dominated by their source, blocked join, no window") {

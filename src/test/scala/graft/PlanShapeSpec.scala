@@ -293,7 +293,7 @@ class PlanShapeSpec extends SparkSpec {
     // AQE may still convert at runtime when the actual size is tiny,
     // which is correct and scale-dependent; the t12 rule); the
     // declared hints are the one-row corpus count (one direct use +
-    // dfJoinBack's two temperature predicates) and dfJoinBack's
+    // hotLookupJoin's two temperature predicates) and hotLookupJoin's
     // bounded hot-key set — every one is metadata-sized by construction
     val hints = df.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
@@ -478,7 +478,7 @@ class PlanShapeSpec extends SparkSpec {
     val p = plan("d14_repeated_ngrams")
     assert(!"Window \\[".r.findAllIn(p).hasNext, p)
     assert(!p.contains("CartesianProduct"), p)
-    // the only nested-loop shape is dfJoinBack's one-row scalar cross
+    // the only nested-loop shape is hotLookupJoin's one-row scalar cross
     // (IdentityBroadcastMode — the t12/q28 pattern, ≤1 distinct build);
     // no corpus-sized relation ever rides a nested loop
     val identityBuilds = p.linesIterator.count(l =>
@@ -524,8 +524,8 @@ class PlanShapeSpec extends SparkSpec {
     // the DF table must NOT be broadcast-HINTED (web-scale vocabulary
     // — AQE may still convert at runtime when the actual size is tiny,
     // which is correct and scale-dependent); the declared hints are
-    // the one-row corpus count (direct + dfJoinBack's two temperature
-    // predicates) and dfJoinBack's bounded hot-key set
+    // the one-row corpus count (direct + hotLookupJoin's two temperature
+    // predicates) and hotLookupJoin's bounded hot-key set
     val hints = df.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
     }
@@ -601,7 +601,7 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("q27 layout is staged: warm runs attach without rewriting, a conf change re-writes") {
+  test("q27 layout is staged; a stale bucket-count marker re-writes") {
     val out1 = SparkEntry.queries("q27_bucketed_join")(spark, sf).collect().toSeq
     val stage = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
@@ -613,19 +613,18 @@ class PlanShapeSpec extends SparkSpec {
     val warm = SparkEntry.queries("q27_bucketed_join")(spark, sf).collect().toSeq
     assert(java.nio.file.Files.exists(probe), "warm run re-wrote the bucketed layout")
     assert(warm == out1, "warm attach diverged from the staging run")
-    // a different bucket count is a DIFFERENT layout, not a stale one —
-    // the marker encodes it, so the run must re-write
-    spark.conf.set("graft.bucket.n", "4")
-    try {
-      val rebuilt = SparkEntry.queries("q27_bucketed_join")(spark, sf).collect().toSeq
-      assert(!java.nio.file.Files.exists(probe),
-        "bucket-count change did not force a layout re-write")
-      assert(rebuilt == out1, "bucket count changed the RESULT (layout must be semantics-free)")
-    } finally spark.conf.unset("graft.bucket.n")
-    // and the default-count run after it re-writes once more (marker
-    // now encodes n=4), converging back to the default layout
-    val back = SparkEntry.queries("q27_bucketed_join")(spark, sf).collect().toSeq
-    assert(back == out1)
+    // a layout staged under another bucket count is stale — the marker
+    // encodes the count, so the run must re-write
+    val marker = stage.resolve("_src_meta")
+    val meta = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
+    val token = s":n${graft.analytics.Analytics.Q27Buckets}:"
+    assert(meta.contains(token), s"marker lacks the bucket count: $meta")
+    java.nio.file.Files.write(marker, meta.replace(token, ":n4:").getBytes("UTF-8"))
+    val rebuilt = SparkEntry.queries("q27_bucketed_join")(spark, sf).collect().toSeq
+    assert(!java.nio.file.Files.exists(probe),
+      "a marker with another bucket count did not force a layout re-write")
+    assert(rebuilt == out1, "the re-written layout changed the RESULT")
+    assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta)
   }
 
   test("s12 range search is rank-free: no window, no top-k heap, broadcast probes") {
@@ -841,7 +840,7 @@ class PlanShapeSpec extends SparkSpec {
   test("t17 line-DF join-back is salted on the line hash, reassembly is window-free") {
     val p = plan("t17_line_dedup")
     // the DF join-back: both sides corpus-proportional, routed through
-    // Salted.dfJoinBack — the executed equi-join runs on
+    // Salted.hotLookupJoin — the executed equi-join runs on
     // (lh, __salt), so a boilerplate line hash cannot own a reducer.
     // The dict side carries no broadcast HINT (AQE may still convert
     // at runtime when the actual size is tiny — the t12/t14 rule; the

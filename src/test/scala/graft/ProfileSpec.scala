@@ -9,10 +9,8 @@ class ProfileSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(acc)
     try SparkEntry.queries("q1_agg")(spark, sf).write.mode("overwrite").format("noop").save()
     finally {
-      // the listener bus is asynchronous: let queued task-end events land
-      val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(10)
-      while (acc.records.get < lineitemRows && System.nanoTime() < deadline) Thread.sleep(50)
-      Thread.sleep(200)
+      // the listener bus is asynchronous: deliver queued task-end events
+      org.apache.spark.graftbridge.ListenerBusBridge.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(acc)
     }
     assert(acc.records.get == lineitemRows)

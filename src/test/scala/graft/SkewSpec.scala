@@ -173,26 +173,27 @@ class SkewSpec extends SparkSpec {
   }
 
   test("the wired df join-backs: salted on vs off is row-identical on the skew corpus") {
-    // t12/t14/t17/d14 ROUTE through Salted.dfJoinBack (r12 verdict #1)
-    // — the conf flip is a plan change only. On the stopword corpus
-    // every tf/df/gram row rides the hot key, so this exercises the
-    // salted path for real (hot key df = 10000 of 10003 docs >= 5%).
+    // t12/t14/t17/d14/d19 call Salted.hotLookupJoin with its default
+    // hotInv/salt in place of the plain join on the key; on the
+    // stopword corpus every tf row rides the hot key (df = 10000 of
+    // 10003 docs >= 5%), so this exercises the salted path for real.
+    val fact = spark.read.parquet(s"$stagedDir/tf")
+    val dict = spark.read.parquet(s"$stagedDir/dfreq")
+    val total = fact.select(countDistinct(col("doc_id")).as("n_docs"))
+    val cols = Seq("doc_id", "tok", "tf", "df").map(col)
+    val plain = fact.join(dict, Seq("tok")).select(cols: _*).collect().toSet
+    val salted = Salted.hotLookupJoin(fact, dict, "tok", "df", total, "n_docs",
+      saltBy = col("doc_id")).select(cols: _*).collect().toSet
+    assert(salted == plain, "the salted join-back changed the result")
     val wired = Seq("t12_doc_frequency", "t14_tfidf_top",
       "t17_line_dedup", "d14_repeated_ngrams", "d19_substring_remove")
     for (q <- wired) {
-      // set compare: every query's rows are key-unique, and the two
-      // conf settings are different physical plans with no shared
-      // collect order
-      val on = SparkEntry.queries(q)(spark, skewDir).collect().toSet
-      val off = try {
-        spark.conf.set("graft.skew.salted", "false")
-        SparkEntry.queries(q)(spark, skewDir).collect().toSet
-      } finally spark.conf.unset("graft.skew.salted")
-      assert(on == off, s"$q: salted join-back changed the result")
-      assert(on.size >= 10003 || q == "t14_tfidf_top", s"$q returned ${on.size} rows")
-      // and the default path really is the salted one
-      val p = SparkEntry.queries(q)(spark, skewDir).queryExecution.executedPlan.toString
-      assert(p.contains("__salt"), s"$q default plan is not salted:\n$p")
+      val df = SparkEntry.queries(q)(spark, skewDir)
+      val n = df.collect().length
+      assert(n >= 10003 || q == "t14_tfidf_top", s"$q returned $n rows")
+      // and the query's join-back really is the salted one
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("__salt"), s"$q plan is not salted:\n$p")
     }
   }
 
@@ -231,7 +232,7 @@ class SkewSpec extends SparkSpec {
       }.min
     bestOf3(f.join(dd, Seq("tok"))) // warm-up: pays codegen/JIT once
     val tPlain = bestOf3(f.join(dd, Seq("tok")))
-    val tSalted = bestOf3(Salted.dfJoinBack(f, dd, "tok", "df",
+    val tSalted = bestOf3(Salted.hotLookupJoin(f, dd, "tok", "df",
       total, "n_docs", saltBy = col("doc_id")))
     // ADVICE r14: floor the plain side at 0.5 s before applying the 2x
     // band — when tPlain is tens of milliseconds the bound used to be
@@ -243,19 +244,6 @@ class SkewSpec extends SparkSpec {
     assert(tSalted <= math.max(tPlain, 0.5) * 2 + 0.5,
       f"salted join-back cost $tSalted%.2fs vs plain $tPlain%.2fs — " +
         "past the insurance band, check for blanket replication")
-  }
-
-  test("dfJoinBack rejects a non-boolean graft.skew.salted loudly") {
-    val fact = spark.read.parquet(s"$stagedDir/tf")
-    val dict = spark.read.parquet(s"$stagedDir/dfreq")
-    val total = fact.select(countDistinct(col("doc_id")).as("n_docs"))
-    try {
-      spark.conf.set("graft.skew.salted", "maybe")
-      val e = intercept[IllegalArgumentException] {
-        Salted.dfJoinBack(fact, dict, "tok", "df", total, "n_docs", col("doc_id"))
-      }
-      assert(e.getMessage.contains("graft.skew.salted"))
-    } finally spark.conf.unset("graft.skew.salted")
   }
 
   test("skew-split results equal the unsplit plan's results") {

@@ -95,42 +95,31 @@ class TopKPerKeySpec extends SparkSpec {
     assert(execs.head.metrics("numOutputRows").value == n.toLong)
   }
 
-  test("graft.topk.partial=false bypasses the partial stage with identical results") {
+  test("TopK.perKey plans one partial stage under the final one") {
     val o = Tables.orders(spark, sf)
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
-    def run() = TopK.perKey(o, Seq("o_orderpriority"), "o_totalprice", "o_orderkey", 5)
-    def partialCount(df: org.apache.spark.sql.DataFrame): Int =
-      collectInPlan(df.queryExecution.executedPlan) {
-        case t: graft.plans.TopKPerKeyExec if t.partial => t
-      }.size
-    val withPartial = run()
-    val expected = withPartial
-      .orderBy(col("o_orderpriority"), col("o_totalprice").desc, col("o_orderkey"))
-      .collect().toSeq
-    assert(partialCount(withPartial) === 1)
-    spark.conf.set("graft.topk.partial", "false")
-    try {
-      val bypassed = run()
-      val got = bypassed
-        .orderBy(col("o_orderpriority"), col("o_totalprice").desc, col("o_orderkey"))
-        .collect().toSeq
-      assert(partialCount(bypassed) === 0, "bypass must plan only the final stage")
-      assert(got === expected, "bypass must not change results")
-    } finally spark.conf.unset("graft.topk.partial")
+    val plan = TopK.perKey(o, Seq("o_orderpriority"), "o_totalprice", "o_orderkey", 5)
+      .queryExecution.executedPlan
+    val execs = collectInPlan(plan) { case t: graft.plans.TopKPerKeyExec => t }
+    assert(execs.count(_.partial) === 1, plan.toString)
+    assert(execs.count(!_.partial) === 1, plan.toString)
   }
 
-  test("bypass agrees with default on a NEAR-UNIQUE key (the degenerate case it exists for)") {
+  test("near-unique key: partial+final equals the window reference") {
     import spark.implicits._
     // every key has exactly one row: the partial stage thins nothing
     val df = (1L to 1000L).map(i => (s"k$i", i.toDouble, i)).toDF("k", "v", "id")
-    val expected = TopK.perKey(df, Seq("k"), "v", "id", 3)
+    val w = Window.partitionBy(col("k")).orderBy(col("v").desc, col("id"))
+    val expected = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3).drop("rn")
       .orderBy(col("k"), col("id")).collect().toSeq
-    spark.conf.set("graft.topk.partial", "false")
-    try {
-      val got = TopK.perKey(df, Seq("k"), "v", "id", 3)
-        .orderBy(col("k"), col("id")).collect().toSeq
-      assert(got === expected)
-    } finally spark.conf.unset("graft.topk.partial")
+    val top = TopK.perKey(df, Seq("k"), "v", "id", 3)
+    val got = top.orderBy(col("k"), col("id")).collect().toSeq
+    assert(got === expected)
+    top.collect()
+    val partials = collectInPlan(top.queryExecution.executedPlan) {
+      case t: graft.plans.TopKPerKeyExec if t.partial => t
+    }
+    assert(partials.map(_.metrics("numOutputRows").value) === Seq(1000L))
   }
 
   test("TopK.perKey fails fast when keys-per-partition exceeds the guard") {

@@ -72,29 +72,4 @@ class VectorFunctionsSpec extends SparkSpec {
     val maxOcc = occ.map(_._2).max
     assert(maxOcc < n / 50, s"hot bucket of $maxOcc rows out of $n — bits are correlated")
   }
-
-  test("signBitsFor keeps within-bucket pair work linear in the corpus") {
-    // the sizing contract: at the chosen width, expected occupancy
-    // n/2^b ≤ target, so pair work Σ occ² ≈ n·target — linear in n,
-    // never n². Checked across nine orders of magnitude of corpus size.
-    for (n <- Seq(1L, 1000L, 100000L, 10000000L, 1000000000L, 1000000000000L)) {
-      val b = VectorFunctions.signBitsFor(n)
-      assert(b >= 4 && b <= 32, s"n=$n b=$b")
-      if (b < 32)
-        assert(n.toDouble / (1L << b) <= 256.0, s"n=$n b=$b occupancy ${n.toDouble / (1L << b)}")
-    }
-    // monotone: a bigger corpus never gets a narrower key
-    val widths = Seq(1000L, 100000L, 10000000L, 1000000000L).map(VectorFunctions.signBitsFor(_))
-    assert(widths == widths.sorted, widths.toString)
-    // custom occupancy target shifts the width accordingly
-    assert(VectorFunctions.signBitsFor(1L << 20, 1L) == 20)
-    intercept[IllegalArgumentException](VectorFunctions.signBitsFor(-1L))
-  }
-
-  test("sessionSignDims follows the graft.lsh.signBits conf") {
-    assert(VectorFunctions.sessionSignDims(spark) == VectorFunctions.signDims(8))
-    spark.conf.set("graft.lsh.signBits", "12")
-    try assert(VectorFunctions.sessionSignDims(spark) == VectorFunctions.signDims(12))
-    finally spark.conf.unset("graft.lsh.signBits")
-  }
 }
