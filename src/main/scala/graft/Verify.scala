@@ -1,20 +1,23 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * fails is logged and skipped so the rest still dump; the run then
   * names every failed query on stderr and exits 1. */
 object Verify {
   /** Writes each query's result to `outDir/<name>` as one parquet file
-    * and returns the names of the queries that failed. */
+    * and returns the names of the queries that failed. A fatal error
+    * (out of memory, an interrupt) propagates: the JVM is not fit to
+    * go on. */
   private[graft] def dumpResults(spark: SparkSession, queries: Seq[(String, QFn)],
       sfDir: String, outDir: String): Seq[String] =
     queries.flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         None
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         Some(name)
       }
@@ -31,31 +34,16 @@ object Verify {
     val failed = dumpResults(spark,
       SparkEntry.queries.toSeq.filter { case (name, _) => only.isEmpty || only(name) },
       sfDir, outDir)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // declared rows-only queries (VERDICT r10 #7): the driver reads an
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.render(Json.obj(SparkEntry.oracleSql.toSeq: _*)))
+    // declared rows-only queries: an oracle compare reads an
     // oracle-free query as `err: no_oracle`, which pattern-matches to
     // failure; this sidecar states each omission is a design decision
     // and names the companion query that oracle-checks its accuracy
-    // contract, so the round's correctness report reads clean.
-    val rowsOnlyJson = SparkEntry.rowsOnly
-      .map { case (k, v) =>
-        s"${q(k)}: {${q("rows_only")}: true, ${q("accuracy_contract")}: ${q(v)}}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/rows_only.json"), rowsOnlyJson)
+    // contract
+    Files.writeString(Paths.get(s"$outDir/rows_only.json"),
+      Json.render(Json.obj(SparkEntry.rowsOnly.toSeq.map { case (k, v) =>
+        k -> Json.obj("rows_only" -> true, "accuracy_contract" -> v) }: _*)))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")

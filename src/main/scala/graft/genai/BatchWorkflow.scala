@@ -161,12 +161,15 @@ object BatchWorkflow {
     val idSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType)))
+    // Only a missing output means "nothing saved"; any other failure
+    // propagates, since reprocessing would duplicate saved work. The
+    // reader globs its path and the writer does not, so the prefix's
+    // glob metacharacters are escaped for the read.
     val processed = Seq("results.jsonl", "errors.jsonl").flatMap { f =>
-      scala.util.Try {
-        val df = Jsonl.read(spark, s"$outputPathPrefix/$f", idSchema)
-        df.queryExecution.assertAnalyzed() // missing path -> None, as before
-        df.select(col("doc_id"))
-      }.toOption
+      val path = new org.apache.hadoop.fs.Path(s"$outputPathPrefix/$f")
+      if (!path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)) None
+      else Some(Jsonl.read(spark, path.toString.replaceAll("""([\\\[\]{}*?])""", """\\$1"""),
+        idSchema).select(col("doc_id")))
     }
     val remaining = processed.reduceOption(_ unionByName _) match {
       case Some(p) => documents.join(p.distinct(), Seq("doc_id"), "left_anti")

@@ -1,6 +1,6 @@
 package graft.genai
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic stand-in for the external model endpoint. Model
@@ -23,21 +23,8 @@ object Simulator {
     val pos = regexp_count(col("user_content"), lit("fast|small|value"))
     val neg = regexp_count(col("user_content"), lit("slow|error|big"))
     val label = when(pos >= neg, lit("positive")).otherwise(lit("negative"))
-    val promptTokens = expr("(length(system_content) + length(user_content) + 3) div 4")
-    val failed = col("doc_id") % 53 === 0
-    requests.select(
-      col("custom_id"),
-      when(failed, lit(500)).otherwise(lit(200)).as("status_code"),
-      when(failed, lit(null).cast("string")).otherwise(
-        to_json(struct(
-          col("model"),
-          array(struct(
-            struct(lit("assistant").as("role"), label.as("content")).as("message")
-          )).as("choices"),
-          struct(
-            promptTokens.as("prompt_tokens"),
-            lit(1L).as("completion_tokens")).as("usage")))).as("body_json"),
-      when(failed, lit("Internal server error")).otherwise(lit(null).cast("string")).as("error_message"))
+    envelope(requests, label,
+      expr("(length(system_content) + length(user_content) + 3) div 4"), 1L)
   }
 
   /** Visual-exam responder (for Requests.visualRequests): the fake
@@ -51,22 +38,8 @@ object Simulator {
     // strip the 22-char "data:image/png;base64," prefix, decode
     val truth = length(unbase64(expr("substring(data_url, 23)"))) % 4 + 1
     val answer = when(col("doc_id") % 13 === 0, (truth % 4) + 1).otherwise(truth)
-    val promptTokens = expr("(length(prompt_text) + length(data_url) div 4 + 3) div 4")
-    val failed = col("doc_id") % 53 === 0
-    requests.select(
-      col("custom_id"),
-      when(failed, lit(500)).otherwise(lit(200)).as("status_code"),
-      when(failed, lit(null).cast("string")).otherwise(
-        to_json(struct(
-          col("model"),
-          array(struct(
-            struct(lit("assistant").as("role"),
-              concat(lit("{\"answer\": \""), answer, lit("\"}")).as("content")).as("message")
-          )).as("choices"),
-          struct(
-            promptTokens.as("prompt_tokens"),
-            lit(9L).as("completion_tokens")).as("usage")))).as("body_json"),
-      when(failed, lit("Internal server error")).otherwise(lit(null).cast("string")).as("error_message"))
+    envelope(requests, answerJson(answer),
+      expr("(length(prompt_text) + length(data_url) div 4 + 3) div 4"), 9L)
   }
 
   /** Exam responder that DISOBEYS the json_object contract on
@@ -97,22 +70,8 @@ object Simulator {
         .when(col("doc_id") % 23 === 6, lit("{\"answer\": \"7\"}"))
         .when(col("doc_id") % 29 === 8,
           concat(lit("{\"verdict\": \""), solved, lit("\"}")))
-        .otherwise(concat(lit("{\"answer\": \""), solved, lit("\"}")))
-    val promptTokens = expr("aggregate(messages, 3L, (acc, m) -> acc + length(m.content)) div 4")
-    val failed = col("doc_id") % 53 === 0
-    requests.select(
-      col("custom_id"),
-      when(failed, lit(500)).otherwise(lit(200)).as("status_code"),
-      when(failed, lit(null).cast("string")).otherwise(
-        to_json(struct(
-          col("model"),
-          array(struct(
-            struct(lit("assistant").as("role"), content.as("content")).as("message")
-          )).as("choices"),
-          struct(
-            promptTokens.as("prompt_tokens"),
-            lit(7L).as("completion_tokens")).as("usage")))).as("body_json"),
-      when(failed, lit("Internal server error")).otherwise(lit(null).cast("string")).as("error_message"))
+        .otherwise(answerJson(solved))
+    examResponder(requests, content)
   }
 
   /** Exam-request responder (for Requests.examRequests): the fake
@@ -125,7 +84,7 @@ object Simulator {
   def respondExam(requests: DataFrame): DataFrame = {
     val solved = examSolved
     examResponder(requests,
-      when(col("doc_id") % 11 === 0, (solved % 4) + 1).otherwise(solved))
+      answerJson(when(col("doc_id") % 11 === 0, (solved % 4) + 1).otherwise(solved)))
   }
 
   /** A SECOND exam judge for agreement measurement (g21): same exam,
@@ -138,16 +97,29 @@ object Simulator {
   def respondExamB(requests: DataFrame): DataFrame = {
     val solved = examSolved
     examResponder(requests,
-      when(col("doc_id") % 13 === 0, ((solved + 1) % 4) + 1).otherwise(solved))
+      answerJson(when(col("doc_id") % 13 === 0, ((solved + 1) % 4) + 1).otherwise(solved)))
   }
 
   private def examSolved =
     regexp_extract(expr("element_at(messages, 2).content"), "equals (\\d)", 1)
       .cast("long")
 
-  private def examResponder(requests: DataFrame,
-      answer: org.apache.spark.sql.Column): DataFrame = {
-    val promptTokens = expr("aggregate(messages, 3L, (acc, m) -> acc + length(m.content)) div 4")
+  /** `{"answer": "<answer>"}`, the json_object content the exam
+    * prompts ask for. */
+  private def answerJson(answer: Column): Column =
+    concat(lit("{\"answer\": \""), answer, lit("\"}"))
+
+  private def examResponder(requests: DataFrame, content: Column): DataFrame =
+    envelope(requests, content,
+      expr("aggregate(messages, 3L, (acc, m) -> acc + length(m.content)) div 4"), 7L)
+
+  /** The response line every responder returns: custom_id, the
+    * doc_id % 53 transport-error rule (status 500, NULL body, an error
+    * message), and otherwise status 200 with a body holding the model,
+    * `choices[0].message` {role assistant, `content`} and the usage
+    * counts. */
+  private def envelope(requests: DataFrame, content: Column, promptTokens: Column,
+      completionTokens: Long): DataFrame = {
     val failed = col("doc_id") % 53 === 0
     requests.select(
       col("custom_id"),
@@ -156,12 +128,11 @@ object Simulator {
         to_json(struct(
           col("model"),
           array(struct(
-            struct(lit("assistant").as("role"),
-              concat(lit("{\"answer\": \""), answer, lit("\"}")).as("content")).as("message")
+            struct(lit("assistant").as("role"), content.as("content")).as("message")
           )).as("choices"),
           struct(
             promptTokens.as("prompt_tokens"),
-            lit(7L).as("completion_tokens")).as("usage")))).as("body_json"),
+            lit(completionTokens).as("completion_tokens")).as("usage")))).as("body_json"),
       when(failed, lit("Internal server error")).otherwise(lit(null).cast("string")).as("error_message"))
   }
 }

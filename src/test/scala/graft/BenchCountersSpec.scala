@@ -1,0 +1,55 @@
+package graft
+
+import org.apache.spark.graftbridge.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Bench's per-query counters checked against known inputs. */
+class BenchCountersSpec extends SparkSpec {
+
+  /** The counters of the second of two timed samples of `fn`, taken as
+    * the sweep takes them (the first stages and compiles, as Bench's
+    * warm-up does); `probe` wraps the second sample's function. */
+  private def warmSample(fn: QFn, probe: QFn => QFn = identity): Bench.Counters = {
+    val listener = new Bench.CounterListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Bench.sample(spark, listener, fn, sf)
+      Bench.sample(spark, listener, probe(fn), sf)._2
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("q1: records_read is lineitem's row count; one build job reads the schema") {
+    val lineitemRows = Tables.lineitem(spark, sf).count()
+    val c = warmSample(SparkEntry.queries("q1_agg"))
+    assert(c.recordsRead == lineitemRows)
+    // Tables.lineitem infers the parquet schema from the file footer:
+    // that read is a job, run while the query is built
+    assert(c.buildJobs == 1, c)
+    assert(c.jobs > 0 && c.stages > 0 && c.tasks >= c.stages, c)
+  }
+
+  test("g14: build_jobs are the jobs started before the query's function returned") {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    var (before, atReturn) = (0, 0)
+    val probe: QFn => QFn = fn => (s, d) => {
+      ListenerBusBridge.drain(sc)
+      before = started.get
+      val df = fn(s, d)
+      ListenerBusBridge.drain(sc)
+      atReturn = started.get
+      df
+    }
+    sc.addSparkListener(seen)
+    val c =
+      try warmSample(SparkEntry.queries("g14_workflow_run"), probe)
+      finally sc.removeSparkListener(seen)
+    assert(atReturn > before, "g14 materializes while it is built")
+    assert(c.buildJobs == atReturn - before, c)
+    assert(c.jobs == started.get - before, c)
+    assert(c.buildS > 0, c)
+  }
+}

@@ -88,4 +88,54 @@ class BenchHistorySpec extends AnyFunSuite {
     assert(Set(1786877276L, 1786897551L, 1787113283L).subsetOf(flagged),
       s"the adjudicated non-clean lines must remain flagged; found $flagged")
   }
+
+  /** Every line that carries `counters` has one entry per `queries`
+    * key, each with every counter. */
+  private def assertCountersComplete(n: com.fasterxml.jackson.databind.JsonNode): Unit = {
+    import scala.jdk.CollectionConverters._
+    val queries = n.path("queries").fieldNames.asScala.toList
+    val counted = n.path("counters").fieldNames.asScala.toList
+    assert(counted.sorted == queries.sorted, s"ts ${n.path("ts")}: counters keys differ from queries keys")
+    counted.foreach { q =>
+      val keys = n.path("counters").path(q).fieldNames.asScala.toList
+      assert(keys == Bench.CounterKeys, s"ts ${n.path("ts")}: $q counters $keys")
+    }
+  }
+
+  private def sweep(sfDir: String) = Bench.Sweep(sfDir, Seq(
+    "q1_agg" -> Some(Bench.Best(1.2345, Bench.Counters(3, 4, 9, 2.5, 0.01, 0.5, 0.25, 6000, 0.0005, 0), None)),
+    "g14_workflow_run" -> None),
+    budgetGated = false, repeats = 2, calibMs = 400, calibParMs = 450)
+
+  test("every line with counters has one entry per query and every counter key") {
+    nodes.filter(_.has("counters")).foreach(assertCountersComplete)
+    val built = Bench.stamped(Bench.fullLine(sweep("/data/sf0.001")), 1L)
+    assertCountersComplete(built)
+    assert(built.path("counters").path("g14_workflow_run").path("build_jobs").asLong == -1)
+    assert(built.path("counters").path("q1_agg").path("records_read").asLong == 6000)
+  }
+
+  test("an sf path or conf value holding a quote and a backslash round-trips through the lines") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val odd = "/data/a\"b\\c/sf0.001"
+    val full = Bench.fullLine(sweep(odd))
+    val history = mapper.readTree(Json.render(Bench.stamped(full, 7L)))
+    assert(history.path("sf").asText == odd && history.path("ts").asLong == 7L)
+    assert(history.path("queries").path("q1_agg").decimalValue == new java.math.BigDecimal("1.235"))
+    assert(history.path("queries").path("g14_workflow_run").asInt == -1)
+    assert(Json.render(full.path("queries")).contains("\"q1_agg\":1.235"))
+    val metric = mapper.readTree(Json.render(Bench.metricLine(full)))
+    assert(metric.path("sf").asText == odd && !metric.has("queries") && !metric.has("counters"))
+    assert(mapper.readTree(Json.render(Bench.queriesLine(sweep(odd)))).path("sf").asText == odd)
+    val in = Bench.Inputs.parse(Map("SPARK_GRAFT_CONF" -> "spark.x=\"q\\v\"").get)
+    val sf1 = Bench.sf1Full(odd, Seq(Bench.Sf1Row("q1_agg", ok = true, 2.0, 1.62, trip = false)))
+    val sf1Line = mapper.readTree(Json.render(Bench.sf1HistoryLine(sf1, in, sweep(odd), 9L)))
+    assert(sf1Line.path("sf1").asText == odd)
+    assert(sf1Line.path("conf").get(0).asText == "spark.x=\"q\\v\"")
+    assert(sf1Line.path("ratios").path("q1_agg").path("ratio").asDouble == 1.62)
+    assert(!Bench.sf1Short(sf1).has("ratios") && Bench.sf1Short(sf1).path("sf1").asText == odd)
+    val (deltas, trend) = Bench.sf1Trend(Seq(Bench.Sf1Row("q1_agg", ok = true, 3.0, 2.5, trip = false)), sf1Line)
+    assert(deltas.path("vs_ts").asLong == 9L && trend.path("n_compared").asInt == 1)
+    assert(Json.render(trend).contains("\"movers\":{\"q1_agg\":0.880}"), Json.render(trend))
+  }
 }

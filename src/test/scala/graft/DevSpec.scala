@@ -1,7 +1,7 @@
 package graft
 
 /** The dev CLI: its argument parsing fails loudly, and `explain`
-  * prints the plan the query actually executed. */
+  * prints the plan the query actually executed and its job log. */
 class DevSpec extends SparkSpec {
 
   test("no arguments run the entry smoke") {
@@ -28,5 +28,12 @@ class DevSpec extends SparkSpec {
     val plan = Dev.explain(SparkEntry.queries("q1_agg")(spark, sf))
     assert(plan.contains("isFinalPlan=true"), plan)
     assert(plan.contains("== Final Plan ==") && plan.contains("== Initial Plan =="), plan)
+  }
+
+  test("the job log lists the jobs and stages a query built and ran") {
+    val (plan, log) = Dev.withJobLog(spark)(Dev.explain(SparkEntry.queries("q1_agg")(spark, sf)))
+    assert(plan.contains("isFinalPlan=true"), plan)
+    assert(log.exists(_.trim.startsWith("job ")), log.mkString("\n"))
+    assert(log.exists(_.trim.startsWith("stage ")), log.mkString("\n"))
   }
 }

@@ -95,6 +95,17 @@ class GenAISpec extends SparkSpec {
     assert(again.results.count() + again.errors.count() == 0)
   }
 
+  test("resume reads saved outputs under a prefix holding glob metacharacters") {
+    // the writer takes the path literally and the reader globs it: a
+    // saved output the read cannot resolve must not read as "nothing
+    // saved" and reprocess every document
+    val base = java.nio.file.Files.createTempDirectory("graft_resume[1").toString
+    BatchWorkflow.run(docs.filter(col("doc_id").between(1, 50)), base)
+    val r = BatchWorkflow.resume(docs.filter(col("doc_id").between(1, 96)), base)
+    assert(r.results.count() + r.errors.count() == 46)
+    assert(r.results.agg(org.apache.spark.sql.functions.min(col("doc_id"))).head().getLong(0) >= 51)
+  }
+
   test("batch workflow halts when the sample request fails validation") {
     val base = java.nio.file.Files.createTempDirectory("graft_wf_halt").toString
     // doc 0 has max_tokens=0 → pre-flight fails → halt, like the reference

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-/** Verify's dump keeps going past a failed query and reports it. */
+/** Verify's dump keeps going past a failed query and reports it; a
+  * fatal error stops it. */
 class VerifySpec extends SparkSpec {
 
   test("a failed query is reported by name while the others still dump") {
@@ -16,5 +17,14 @@ class VerifySpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/ok_before").count() == 3)
     assert(spark.read.parquet(s"$out/ok_after").count() == 2)
     assert(!Files.exists(java.nio.file.Paths.get(out, "broken")))
+  }
+
+  test("a fatal error propagates out of the dump instead of counting as one failed query") {
+    val out = Files.createTempDirectory("graft_verify_fatal").toString
+    val queries: Seq[(String, QFn)] = Seq(
+      "interrupted" -> ((_, _) => throw new InterruptedException("stop")),
+      "never_run" -> ((s, _) => s.range(1).toDF("id")))
+    intercept[InterruptedException](Verify.dumpResults(spark, queries, sf, out))
+    assert(!Files.exists(java.nio.file.Paths.get(out, "never_run")))
   }
 }

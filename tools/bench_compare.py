@@ -11,7 +11,9 @@ the r12 judge could not reconstruct from driver artifacts alone.
 
 Prints total ratio and the top-N per-query swings — the first thing to
 check when a sweep regresses: a uniform swing is host contention, a
-single-query swing is a plan regression.
+single-query swing is a plan regression. When both lines carry
+per-query `counters`, each swing also shows its Spark job count a -> b:
+a wall swing with a job-count change is a plan change.
 """
 import json
 import sys
@@ -56,8 +58,12 @@ def main():
             print(f"  {k}: missing/failed (a={va}, b={vb})")
             continue
         rows.append((max(va, vb) / min(va, vb), k, va, vb))
+    ca, cb = a.get("counters", {}), b.get("counters", {})
     for r, k, va, vb in sorted(rows, reverse=True)[:top_n]:
-        print(f"  {k:28s} {va:6.2f} -> {vb:6.2f}  ({r:.1f}x)")
+        jobs = ""
+        if k in ca and k in cb:
+            jobs = f"  jobs {ca[k]['jobs']} -> {cb[k]['jobs']}"
+        print(f"  {k:28s} {va:6.2f} -> {vb:6.2f}  ({r:.1f}x){jobs}")
 
 if __name__ == "__main__":
     main()
