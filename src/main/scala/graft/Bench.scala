@@ -430,6 +430,13 @@ object Bench {
     spark.stop()
   }
 
+  /** Whether `sfDir` is the pricing corpus the budgets are priced at:
+    * its normalized path's final component is `sf0.1` (so
+    * `/data/mysf0.1` is not). The one test for Bench's gate and the
+    * history's readers. */
+  private[graft] def isPricingSf(sfDir: String): Boolean =
+    Option(Paths.get(sfDir).normalize.getFileName).exists(_.toString == "sf0.1")
+
   /** The timed sweep: best of up to `in.repeats` whole-sweep passes.
     * Passes, not back-to-back reruns: contention windows on a shared
     * host last minutes, and spacing a query's samples a sweep apart
@@ -443,12 +450,12 @@ object Bench {
     * sample (cached 60 s: windows last minutes and trips arrive in
     * bursts). The gate applies only at the pricing corpus: budgets are
     * priced at sf0.1, and a streaming query's fixed micro-batch cost
-    * does not shrink with the data (BenchHistorySpec locks this).
-    * Detection compares the normalized path's final component. */
+    * does not shrink with the data (BenchHistorySpec locks this);
+    * see [[isPricingSf]]. */
   private def timedPasses(spark: SparkSession, in: Inputs, ordered: Seq[(String, QFn)],
       calibMs: Long, calibParMs: Long, parThreads: Int, mainT0: Long): Sweep = {
     val startScale = BenchGate.gateScale(calibMs.toDouble, calibParMs.toDouble)
-    val budgetGated = Paths.get(in.sfDir).normalize.getFileName.toString == "sf0.1"
+    val budgetGated = isPricingSf(in.sfDir)
     var lastTripCalib: Option[(Long, Long, Long)] = None // (ms, parMs, takenNanos)
     def atTripCalib(): (Long, Long) = lastTripCalib match {
       case Some((c, p, taken)) if System.nanoTime() - taken < BenchGate.AtTripCacheNanos => (c, p)

@@ -55,11 +55,13 @@ object Dev {
   }
 
   /** One line per Spark job (id, wall, what ran it) and per completed
-    * stage (id, tasks, name), in delivery order: which of a query's
-    * jobs carry its wall when the job count is the cost. A job is named
-    * by its description if set, else by the call site of its SQL
-    * execution (adaptive stages are submitted from a pool thread whose
-    * own call site names no caller), else by its result stage. */
+    * stage (id, tasks, operators), in delivery order: which of a
+    * query's jobs carry its wall when the job count is the cost. A job
+    * is named by its description if set, else by the call site of its
+    * SQL execution (adaptive stages are submitted from a pool thread
+    * whose own call site names no caller), else by its result stage. A
+    * stage is named by the operation scopes of its RDDs (`Exchange`,
+    * `WholeStageCodegen (3)`, ...), else by its call site. */
   private final class JobLog extends SparkListener {
     private val starts = new java.util.concurrent.ConcurrentHashMap[Int, SparkListenerJobStart]
     private val sqlCallSite = new java.util.concurrent.ConcurrentHashMap[String, String]
@@ -80,7 +82,9 @@ object Dev {
       }
     override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
       val i = st.stageInfo
-      lines.add(f"    stage ${i.stageId}%4d ${i.numTasks}%4d tasks  ${i.name.take(90)}")
+      val ops = ListenerBusBridge.scopeNames(i)
+      val name = if (ops.isEmpty) i.name else ops.mkString(", ")
+      lines.add(f"    stage ${i.stageId}%4d ${i.numTasks}%4d tasks  ${name.take(90)}")
     }
   }
 

@@ -1,8 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QFn, Tables}
+import graft.functions.ShingleSketch
 import graft.operators.Salted
 import graft.operators.Spread._
 
@@ -16,10 +17,11 @@ import graft.operators.Spread._
   */
 object Dedup {
 
-  /** Char-5-gram shingles per document (with duplicates): a generate-
-    * positions transform + explode — linear in corpus size, no
-    * shuffle. Min-based consumers (MinHash) use this directly;
-    * set-based consumers dedup via [[shinglesDistinct]].
+  /** Char-5-gram shingles per document (with duplicates), as strings:
+    * a generate-positions transform + explode — linear in corpus size,
+    * no shuffle. Only d6 needs the grams themselves (it joins them
+    * against a benchmark's grams); the MinHash and set consumers read
+    * [[sketches]] instead.
     */
   private[graft] def shingles(docs: DataFrame): DataFrame =
     docs
@@ -43,30 +45,42 @@ object Dedup {
   private[graft] def shinglesDistinct(docs: DataFrame): DataFrame =
     shingles(docs).distinct()
 
-  /** Distinct word-3-gram shingles per document — the word-level
-    * sibling of [[shinglesDistinct]] and the common production choice
-    * for fuzzy text dedup (char grams catch edit-level noise; word
-    * grams catch reordered/rewritten boilerplate at ~10x fewer
-    * shingles per document). Same linear shape: tokenize, slide a
-    * 3-token window, explode, dedup. Documents under 3 tokens yield
-    * no shingles (and so join nothing downstream).
-    */
-  private[graft] def wordShingles(docs: DataFrame): DataFrame =
-    docs
-      .filter(col("doc_id").isNotNull)
-      .spreadToCores
-      .select(col("doc_id"),
-        filter(split(col("text"), "\\s+"), t => t =!= "").as("toks"))
-      .select(col("doc_id"), explode(
-        when(size(col("toks")) >= 3,
-          expr("transform(sequence(1, size(toks) - 2), i -> concat_ws(' ', slice(toks, i, 3)))"))
-          .otherwise(expr("CAST(array() AS array<string>)"))).as("sh"))
+  /** At least three non-empty `split(text, '\\s+')` tokens: a match
+    * starts only at a token start, so a text with fewer tokens is
+    * rejected in one linear scan. */
+  private val ThreeTokens = "(?<!\\S)\\S+\\s+\\S+\\s+\\S"
 
-  /** Distinct form — consumers whose arithmetic does NOT dedup by
-    * itself (set semantics downstream); min/collect_set consumers use
-    * [[wordShingles]] directly (r19, see [[minhashSig]]). */
-  private[graft] def wordShinglesDistinct(docs: DataFrame): DataFrame =
-    wordShingles(docs).distinct()
+  /** Per-document shingle sketch (doc_id, s0..s7, shs, sz), one row
+    * per document with at least one gram: the MinHash signature and
+    * the hashed shingle set of its char 5-grams, or of its word
+    * 3-grams when `words` (see [[graft.functions.ShingleSketch]] for
+    * the exact contract). The MinHash/LSH queries read s0..s7; the
+    * Jaccard verifiers read shs/sz.
+    *
+    * Documents without a gram are filtered on the INPUT, below the
+    * spread, where the test is cheap and matches the sketch's empty
+    * result exactly. A filter on the sketch itself would be pushed
+    * below the round-robin exchange and hash the corpus on one core
+    * before the fan-out.
+    *
+    * The sketches leave by one doc_id exchange: every consumer in a
+    * query that reads the same fields then reads one reused shuffle
+    * stage, so the sketch runs once per field set (bands, sets), not
+    * once per branch that joins or aggregates it.
+    */
+  private[graft] def sketches(docs: DataFrame, words: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val hasGram =
+      if (words) col("text").rlike(ThreeTokens)
+      else length(col("text")) >= ShingleSketch.CharGramK
+    docs
+      .filter(col("doc_id").isNotNull && hasGram)
+      .spreadToCores
+      .select(col("doc_id"), ColumnBridge.column(
+        ShingleSketch(ColumnBridge.expression(col("text")), words)).as("k"))
+      .select(col("doc_id") +: ShingleSketch.Schema.fieldNames.toSeq.map(f => col(s"k.$f")): _*)
+      .repartition(col("doc_id"))
+  }
 
   /** d1: exact dedup by md5 content hash — keep-min-id per group. */
   private def d1(s: SparkSession, d: String): DataFrame =
@@ -81,58 +95,31 @@ object Dedup {
 
   /** MinHash signature (k=8 hash functions over shingles) → 4 LSH band
     * keys per document. Shared by d2 (candidate counts) and d7 (cluster
-    * edges). One pass + one agg; downstream joins touch band keys only.
+    * edges); downstream joins touch band keys only.
     *
-    * dedup BEFORE hashing: hashing duplicate shingles costs far more
-    * than the dedup shuffle of tiny (doc_id, 5-char) rows (measured
-    * 5x at sf0.1). TWO md5s per distinct shingle (plain + salted); the
-    * 8 hash functions are disjoint 8-hex-char slices of the two
-    * digests — 32 bits each. Width matters: the min of n uniform
-    * W-bit values concentrates near 2^W/n, so 16-bit slices (round 3)
-    * leave a shingle-rich document's minima crowded near 0 and its LSH
-    * bands collide with unrelated large documents; at 32 bits the min
-    * of even a million shingles keeps ~12 bits of spread per function
-    * (band collision odds ~2^-48). Lexicographic MIN over fixed-width
-    * lowercase hex equals numeric min, identically in Spark and DuckDB.
+    * The 8 hash functions are disjoint 8-hex-char slices of two md5
+    * digests per shingle (plain + salted), 32 bits each, and
+    * [[sketches]] takes their minima in its one pass over the text.
+    * Width matters: the min of n uniform W-bit values concentrates near
+    * 2^W/n, so 16-bit slices leave a shingle-rich document's minima
+    * crowded near 0 and its LSH bands collide with unrelated large
+    * documents; at 32 bits the min of even a million shingles keeps
+    * ~12 bits of spread per function (band collision odds ~2^-48).
+    * Lexicographic MIN over fixed-width lowercase hex equals numeric
+    * min, identically in Spark and DuckDB.
     */
   private def minhashBands(s: SparkSession, d: String): DataFrame =
-    minhashBandsFrom(shingles(Tables.documents(s, d)))
+    minhashBandsFrom(sketches(Tables.documents(s, d)))
 
-  /** [[minhashBands]] over ANY distinct (doc_id, sh) shingle relation —
-    * char grams (d2/d7) and word grams (d11) share the whole
-    * signature+banding pipeline; only the shingle source differs. */
-  private def minhashBandsFrom(shDistinct: DataFrame): DataFrame =
-    minhashSig(shDistinct).select(col("doc_id"),
+  /** Band keys (doc_id, b0..b3) from a [[sketches]] relation — char
+    * grams (d2/d7) and word grams (d11) share the banding; only the
+    * sketch's gram mode differs. Band k is md5 of components 2k, 2k+1. */
+  private def minhashBandsFrom(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"),
       md5(concat(col("s0"), col("s1"))).as("b0"),
       md5(concat(col("s2"), col("s3"))).as("b1"),
       md5(concat(col("s4"), col("s5"))).as("b2"),
       md5(concat(col("s6"), col("s7"))).as("b3"))
-
-  /** The raw 8-component MinHash signature (doc_id, s0..s7) —
-    * [[minhashBandsFrom]]'s first stage, also consumed directly by
-    * d15's estimate-vs-exact accuracy measurement.
-    *
-    * r19: consumes the DUPLICATE-INCLUSIVE shingle relation — MIN over
-    * a multiset equals MIN over its distinct set, so the corpus-wide
-    * DISTINCT Exchange the old path paid before this aggregate was
-    * mathematically redundant. Because explode keeps every document's
-    * grams in one partition, the map-side partial aggregate already
-    * collapses to ONE row per document, so the remaining exchange
-    * ships 8 hex slices per doc instead of every distinct gram row
-    * (guide §2.3/§2.4: aggregate before you shuffle, remove shuffles
-    * outright). The trade: md5 now runs on duplicate grams too —
-    * pure codegen'd map-side CPU, measured cheaper than the distinct
-    * shuffle it replaces at sf0.1 (see OPTIMIZATION_r19.md). */
-  private def minhashSig(sh0: DataFrame): DataFrame = {
-    val sh = sh0
-      .withColumn("h1", md5(col("sh")))
-      .withColumn("h2", md5(concat(lit("x"), col("sh"))))
-    val mins = (0 until 8).map { j =>
-      val src = if (j < 4) col("h1") else col("h2")
-      min(substring(src, 1 + 8 * (j % 4), 8)).as(s"s$j")
-    }
-    sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-  }
 
   /** (doc_id, band_id, bkey) long form of [[minhashBands]]. */
   private def bandLong(bands: DataFrame): DataFrame =
@@ -211,8 +198,8 @@ object Dedup {
       .sortWithinPartitions(col("doc_id"))
   }
 
-  /** DuckDB mirror of [[shinglesDistinct]]: distinct char-5-gram
-    * relation `sh(doc_id, s)`. */
+  /** DuckDB mirror of the char grams [[sketches]] hashes: distinct
+    * char-5-gram relation `sh(doc_id, s)`. */
   private val CharShingleCte =
     """sh AS (
       |  SELECT DISTINCT doc_id, s FROM (
@@ -220,7 +207,7 @@ object Dedup {
       |      i -> substring(text, i, 5))) AS s
       |    FROM documents))""".stripMargin
 
-  /** DuckDB mirror of [[wordShinglesDistinct]]: distinct word-3-gram
+  /** DuckDB mirror of word-mode [[sketches]]' grams: distinct word-3-gram
     * relation `sh(doc_id, s)` (same CTE name, so the downstream
     * minhash chain is shared verbatim). */
   private val WordShingleCte =
@@ -246,7 +233,7 @@ object Dedup {
       |  UNION ALL SELECT doc_id, 2, b2 FROM bands
       |  UNION ALL SELECT doc_id, 3, b3 FROM bands)""".stripMargin
 
-  /** hashed+sig CTE pair (DuckDB mirror of [[minhashSig]]) — shared by
+  /** hashed+sig CTE pair (DuckDB mirror of [[sketches]]' s0..s7) — shared by
     * the band chain above and d15's accuracy oracle. */
   private val MinhashSigCtePart =
     """,
@@ -293,13 +280,13 @@ object Dedup {
   private val d2Sql = "WITH " + MinhashCteBody + CandidateCountsSqlTail
 
   /** d11: d2's MinHash/LSH candidate counting over WORD-3-gram
-    * signatures ([[wordShinglesDistinct]]) — the production fuzzy-dedup
+    * signatures (word-mode [[sketches]]) — the production fuzzy-dedup
     * configuration for rewritten/templated text. Entire pipeline
     * (signatures, banding, family collapse, bucket cap, candidate
     * arithmetic) is shared with d2; only the shingle source differs.
     */
   private def d11(s: SparkSession, d: String): DataFrame =
-    candidateCounts(minhashBandsFrom(wordShingles(Tables.documents(s, d))))
+    candidateCounts(minhashBandsFrom(sketches(Tables.documents(s, d), words = true)))
 
   private val d11Sql = "WITH " + minhashCteFrom(WordShingleCte) + CandidateCountsSqlTail
 
@@ -421,58 +408,23 @@ object Dedup {
     * shingle sets of just those pairs. Top-100 most similar pairs.
     */
   /** Candidate pairs joined to both documents' shingle-set arrays —
-    * the shared engine of d4 (Jaccard) and d9 (containment).
+    * the shared engine of d4 (Jaccard), d9 (containment) and the
+    * d15/d24/d25 truth sets, over a [[sketches]] relation.
     *
-    * Shingle identity is all set overlap needs — each 5-char string is
-    * replaced with its 64-bit xxhash immediately after the dedup, so
-    * every downstream shuffle, set array and intersection moves
+    * Shingle identity is all set overlap needs, so each shingle is its
+    * 64-bit xxhash: every shuffle, set array and intersection moves
     * fixed-width longs instead of strings (collision odds at 64 bits
     * are ~n²/2⁶⁵ — irrelevant next to the df-cap's own approximation).
-    * One shingle-set array per document, built once; the overlap stage
-    * intersects the two per-doc arrays of each candidate pair directly
-    * — no re-join of the full shingle relation (the round-2 plan
-    * joined it twice per pair and was the slowest query of the sweep).
-    * No cache: the distinct-Exchange and the docSets agg-Exchange are
-    * reused across branches by Spark's ReuseExchange rule, which
-    * survives executor loss at cluster scale where a cached RDD would
-    * not.
+    * The rare-shingle df count needs one row per distinct (doc,
+    * shingle), which exploding the already-distinct sets gives; the
+    * overlap stage then intersects the two per-doc arrays of each
+    * candidate pair directly, never re-joining the long form.
     */
-  /** Per-document distinct-shingle hash-set arrays (doc_id, shs, sz) —
-    * the verification substrate shared by d4/d9 (candidate overlap) and
-    * d7 (edge verification). Shingles are 64-bit xxhash longs, so the
-    * arrays shuffle as fixed-width values; Jaccard over the hashed sets
-    * equals Jaccard over the string sets up to ~n²/2⁶⁵ collision odds.
-    */
-  private[graft] def docShingleSets(docs: DataFrame): DataFrame =
-    docSetsOf(hashedShingles(docs))
-
-  /** (doc_id, xxhash64(shingle)) pairs, DUPLICATE-INCLUSIVE — r19:
-    * the downstream consumer is always [[docSetsOf]]'s collect_set,
-    * which dedups by definition, so the corpus-wide DISTINCT Exchange
-    * the old long form paid first was redundant (the [[minhashSig]]
-    * argument: explode keeps a doc's grams in one partition, so the
-    * set-union partial aggregate collapses to one row per doc before
-    * the shuffle). Consumers that need the distinct LONG form derive
-    * it by exploding [[docSetsOf]]'s arrays — distinct by
-    * construction, and sharing the aggregate's exchange. */
-  private[graft] def hashedShingles(docs: DataFrame): DataFrame =
-    shingles(docs).select(col("doc_id"), xxhash64(col("sh")).as("sh"))
-
-  /** [[docShingleSets]] built from an ALREADY-CONSTRUCTED hashed-shingle
-    * relation: a caller that also needs the long form (candidateOverlap
-    * joins rare shingles against it) shares ONE scan+aggregate subtree
-    * by construction, instead of re-deriving the pipeline and hoping
-    * AQE canonicalizes the two copies into one exchange. */
-  private[graft] def docSetsOf(sh: DataFrame): DataFrame =
-    sh.groupBy(col("doc_id"))
-      .agg(collect_set(col("sh")).as("shs"))
-      .select(col("doc_id"), col("shs"), size(col("shs")).cast("long").as("sz"))
-
-  private def candidateOverlap(s: SparkSession, d: String): DataFrame = {
-    val docSets = docSetsOf(hashedShingles(Tables.documents(s, d)))
-    // distinct (doc_id, sh) long form via the already-deduped sets —
-    // the rare-shingle df count needs one row per (doc, shingle)
-    val sh = docSets.select(col("doc_id"), explode(col("shs")).as("sh"))
+  private def candidateOverlap(docSets: DataFrame): DataFrame = {
+    // outer, though no set is empty: for a plain explode the optimizer
+    // infers `size(shs) > 0` and pushes it, sketch and all, below the
+    // spread (DedupPlanSpec pins where the sketch runs)
+    val sh = docSets.select(col("doc_id"), explode_outer(col("shs")).as("sh"))
     val rare = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= 10)
     val rareSh = sh.join(rare.select(col("sh")), Seq("sh"))
@@ -487,7 +439,7 @@ object Dedup {
   }
 
   private def d4(s: SparkSession, d: String): DataFrame =
-    candidateOverlap(s, d)
+    candidateOverlap(sketches(Tables.documents(s, d)))
       .select(col("da"), col("db"), col("n_common"),
         (col("n_common").cast("double") / (col("sza") + col("szb") - col("n_common"))).as("jaccard"))
       .orderBy(col("jaccard").desc, col("da"), col("db"))
@@ -532,16 +484,16 @@ object Dedup {
     * far beyond that means correlated shingle sets, not sketch noise).
     *
     * Everything is per-pair integer arithmetic over the candidate set
-    * (never quadratic); the signature join adds two map-side-partial
-    * aggregates reusing d2's exact signature pipeline — measuring the
-    * REAL production signatures, not a re-derivation.
+    * (never quadratic); the signatures joined to each pair are d2's own
+    * (the same [[sketches]] relation the truth sets come from) —
+    * measuring the REAL production signatures, not a re-derivation.
     */
   private def d15(s: SparkSession, d: String): DataFrame = {
-    val sig = minhashSig(shingles(Tables.documents(s, d)))
+    val sig = sketches(Tables.documents(s, d))
     val est = (0 until 8)
       .map(j => when(col(s"a.s$j") === col(s"b.s$j"), 1).otherwise(0))
       .reduce(_ + _)
-    candidateOverlap(s, d)
+    candidateOverlap(sig)
       .join(sig.as("a"), col("da") === col("a.doc_id"))
       .join(sig.as("b"), col("db") === col("b.doc_id"))
       .select(col("da"), col("db"),
@@ -621,8 +573,8 @@ object Dedup {
     * equality flags (eq0..eq7) — every banding layout over the 8
     * components is a boolean formula over these. */
   private def pairSigScored(s: SparkSession, d: String): DataFrame = {
-    val sig = minhashSig(shingles(Tables.documents(s, d)))
-    candidateOverlap(s, d)
+    val sig = sketches(Tables.documents(s, d))
+    candidateOverlap(sig)
       .join(sig.as("a"), col("da") === col("a.doc_id"))
       .join(sig.as("b"), col("db") === col("b.doc_id"))
       .select((col("n_common") +:
@@ -849,43 +801,44 @@ object Dedup {
       |ORDER BY sh.doc_id""".stripMargin
 
   /** d7: near-duplicate cluster assignment — connected components over
-    * the MinHash/LSH candidate graph (star-contracted per band bucket:
-    * same connectivity as the all-pairs band join d2 counts, linear
-    * edge count), via
-    * iterative min-label propagation to a fixpoint. Every document gets
+    * the verified MinHash/LSH candidate graph. Every document gets
     * `cluster_id` = min doc_id of its component (singletons keep their
     * own id) — the canonical-representative table a dedup pipeline
     * joins against to drop near-duplicates.
     *
-    * Scale: each iteration is one shuffle join + partial-agg over the
-    * EDGE set (banded candidates ≪ corpus), never over documents;
-    * iterations are bounded by component diameter — near-dup clusters
-    * are shallow, and the loop stops at the observed fixpoint (label
-    * sums are strictly decreasing until convergence, so one scalar agg
-    * per round detects it). Edges and labels are checkpointed per
-    * round to truncate lineage — on a cluster this is
-    * `spark.sparkContext.setCheckpointDir` + `checkpoint()`; in
-    * local mode `localCheckpoint()` is equivalent.
+    * Pipeline ([[clusterAssignmentsOf]]):
+    *   - SKETCH: one [[sketches]] row per document carries both the
+    *     MinHash signature and the hashed shingle set, computed in one
+    *     pass over its text — no per-gram rows, no aggregate over grams;
+    *   - EDGES ([[clusterEdges]]): star contraction per band bucket
+    *     ([[starEdges]]: same connectivity as the all-pairs band join d2
+    *     counts, linear edge count), each (root, member) edge VERIFIED
+    *     by exact Jaccard against the bucket root ([[verifyEdges]]),
+    *     materialized once;
+    *   - PROPAGATE ([[propagateMinLabels]]): min-label propagation to
+    *     the fixpoint, one job per round.
+    *
+    * Verification means a raw band collision (~2^-48 for unrelated
+    * docs, but a templated/adversarial corpus can manufacture them)
+    * cannot merge two genuinely dissimilar clusters. Verifying against
+    * the bucket ROOT only — not all co-bucketed pairs — keeps the
+    * linear edge count: Σ2(m−1) intersections, never m². The tradeoff:
+    * a true near-dup of a bucket MEMBER whose Jaccard to the bucket
+    * ROOT is below the threshold loses that edge (transitive families
+    * fray at the threshold boundary), the standard behavior of
+    * verified-LSH clustering.
+    *
+    * Scale: each round is one shuffle join + partial-agg over the EDGE
+    * set (banded candidates ≪ corpus), never over documents; rounds
+    * are bounded by component diameter, and near-dup clusters are
+    * shallow. Edges and labels are checkpointed to truncate lineage —
+    * on a cluster this is `spark.sparkContext.setCheckpointDir` +
+    * `checkpoint()`; in local mode `localCheckpoint()` is equivalent.
     *
     * Oracle note: the DuckDB check materializes the full transitive
     * closure (Σ|component|² rows) — exact but quadratic in component
-    * size, so it is practical only at the sf0.01 gate. The operator
-    * itself was validated at sf0.1 (finishes in seconds; the closure
-    * oracle does not).
-    *
-    * Edges are VERIFIED before propagation (round 6): each (root,
-    * member) star edge must pass d4's exact Jaccard against the bucket
-    * root ([[ClusterEdgeMinJaccard]]) — a raw band collision (~2^-48
-    * for unrelated docs, but a templated/adversarial corpus can
-    * manufacture them) can no longer merge two genuinely dissimilar
-    * clusters. Verifying against the bucket ROOT only — not all
-    * co-bucketed pairs — keeps the star contraction's linear edge
-    * count: the check joins one shingle-set array per edge endpoint,
-    * Σ2(m−1) intersections, never m². The documented tradeoff is the
-    * mirror image of the old one: a true near-dup of a bucket MEMBER
-    * whose Jaccard to the bucket ROOT is below the threshold loses
-    * that edge (transitive families fray at the threshold boundary),
-    * which is the standard behavior of verified-LSH clustering.
+    * size, so it is practical only at the sf0.01 gate; tools/parity.py
+    * swaps in iterative propagation for larger SFs.
     */
   /** Minimum exact Jaccard between a star edge's two endpoints for the
     * edge to enter d7's propagation graph. With r=2 rows per band a
@@ -895,9 +848,10 @@ object Dedup {
   private[graft] val ClusterEdgeMinJaccard = 0.5
 
   /** Jaccard gate for star edges: keep only (root, doc_id) pairs whose
-    * exact shingle-set Jaccard meets [[ClusterEdgeMinJaccard]]. One
-    * shingle-set array join per endpoint, one codegen'd array_intersect
-    * per edge — linear in edge count. */
+    * exact shingle-set Jaccard meets [[ClusterEdgeMinJaccard]], over a
+    * [[sketches]] relation's sorted distinct sets (`shs`, `sz`). One
+    * set-array join per endpoint, one codegen'd array_intersect per
+    * edge — linear in edge count. */
   private[graft] def verifyEdges(rooted: DataFrame, docSets: DataFrame): DataFrame =
     rooted
       .join(docSets.select(col("doc_id").as("root"), col("shs").as("shsr"), col("sz").as("szr")), Seq("root"))
@@ -907,36 +861,49 @@ object Dedup {
         >= ClusterEdgeMinJaccard)
       .select(col("root"), col("doc_id"))
 
-  /** Converged min-label cluster assignment (doc_id, cluster_id) over
-    * a documents relation — d7's propagation loop, factored out so
-    * d10's keep-best decision consumes the same clustering. d7/d10
-    * cluster the whole table, d13 the existing-corpus subset only. */
-  private def clusterAssignmentsOf(docs: DataFrame): DataFrame = {
-    val long = bandLong(minhashBandsFrom(shingles(docs)))
-    // Star contraction per band bucket: every member connects to the
-    // bucket's min doc_id, both directions. Connectivity-equivalent to
-    // the all-pairs band join (any two co-bucketed docs reach each
-    // other through the bucket root) but Σ2(m−1) edges instead of
-    // Σm(m−1) for an m-member bucket — the corpus's near-dup families
-    // make this the difference between ~40k and ~1.2M edges at sf0.1,
-    // and between linear and quadratic growth in family size at 100 TB.
-    // Roots via groupBy+join, not min().over(Window.partitionBy(bucket)):
-    // a window partition is a whole band bucket in one task — the very
-    // million-doc family the star contraction is defending against —
-    // while the min-aggregate does map-side partials and the join back
-    // is AQE-skew-splittable.
+  /** Star edges (root, doc_id) of a [[sketches]] relation: every
+    * member of an LSH band bucket connects to the bucket's min doc_id.
+    * Connectivity-equivalent to the all-pairs band join (any two
+    * co-bucketed docs reach each other through the bucket root) but
+    * Σ2(m−1) edges instead of Σm(m−1) for an m-member bucket — the
+    * corpus's near-dup families make this the difference between ~40k
+    * and ~1.2M edges at sf0.1, and between linear and quadratic growth
+    * in family size at 100 TB. Roots via groupBy+join, not
+    * min().over(Window.partitionBy(bucket)): a window partition is a
+    * whole band bucket in one task — the very million-doc family the
+    * star contraction is defending against — while the min-aggregate
+    * does map-side partials and the join back is AQE-skew-splittable. */
+  private def starEdges(sk: DataFrame): DataFrame = {
+    val long = bandLong(minhashBandsFrom(sk))
     val roots = long.groupBy(col("band_id"), col("bkey"))
       .agg(min(col("doc_id")).as("root"))
-    val rooted = long.join(roots, Seq("band_id", "bkey"))
+    long.join(roots, Seq("band_id", "bkey"))
       .filter(col("doc_id") =!= col("root"))
       .select(col("root"), col("doc_id"))
       .distinct()
-    val verified = verifyEdges(rooted, docShingleSets(docs))
-    val edges = verified.select(col("root").as("src"), col("doc_id").as("dst"))
+  }
+
+  /** d7's propagation graph over a documents relation: the verified
+    * star edges of [[starEdges]], both directions (src, dst). Bands
+    * and shingle sets come from ONE [[sketches]] relation, so the
+    * documents are read, spread and sketched without any per-gram row
+    * or aggregate. */
+  private[graft] def clusterEdges(docs: DataFrame): DataFrame = {
+    val sk = sketches(docs)
+    val verified = verifyEdges(starEdges(sk), sk)
+    verified.select(col("root").as("src"), col("doc_id").as("dst"))
       .unionAll(verified.select(col("doc_id").as("src"), col("root").as("dst")))
-      .localCheckpoint() // computed once, re-read every iteration
+  }
+
+  /** Converged min-label cluster assignment (doc_id, cluster_id) over
+    * a documents relation: [[propagateMinLabels]] over
+    * [[clusterEdges]], materialized once and re-read every round.
+    * Shared by d7/d10 (the whole table), d13 (the existing-corpus
+    * subset) and d20's sweep. */
+  private def clusterAssignmentsOf(docs: DataFrame): DataFrame = {
     val (labels, _) = propagateMinLabels(
-      docs.filter(col("doc_id").isNotNull).select(col("doc_id")), edges)
+      docs.filter(col("doc_id").isNotNull).select(col("doc_id")),
+      clusterEdges(docs).localCheckpoint())
     labels.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -950,55 +917,62 @@ object Dedup {
     * Seeded with the one-hop minimum: with initial labels = doc_id the
     * first propagation round needs no labels join at all — it is just
     * min(src) per dst — so the loop starts one round ahead. Each round
-    * is one shuffle join + partial-agg over the EDGE set, labels are
-    * localCheckpoint-ed per round to truncate lineage, and the label
-    * sum (strictly decreasing until fixpoint) detects convergence with
-    * one scalar agg per round. Near-dup components are shallow
-    * (fixpoint observed at round 1 on the corpus); from round 3 the
-    * loop additionally POINTER-JUMPS (see inline note), so even a
+    * is one shuffle join + partial-agg over the EDGE set, and ONE job:
+    * the labels are localCheckpoint-ed to truncate lineage, and that
+    * job also observes the label sum (strictly decreasing until
+    * fixpoint), which detects convergence. Near-dup components are
+    * shallow (fixpoint observed at round 1 on the corpus); from round 3
+    * the loop additionally POINTER-JUMPS (see inline note), so even a
     * pathological long-chain corpus converges in O(log diameter)
     * rounds — the 50-round loud cap then covers any physically
     * possible component, and tripping it means a logic bug, not a
     * deep graph; fail loudly rather than emit wrong cluster ids. */
   private[graft] def propagateMinLabels(nodes: DataFrame, edges: DataFrame): (DataFrame, Int) = {
+    // checkpoints a round's labels; the same job observes their sum,
+    // which is NULL only for an empty node set: that fails loudly
+    def materialize(df: DataFrame): (DataFrame, Long) = {
+      val o = Observation()
+      val cp = df.observe(o, sum(col("label")).as("s")).localCheckpoint()
+      (cp, Option(o.get("s")).fold(
+        throw new IllegalArgumentException("label propagation over an empty node set"))(
+        _.asInstanceOf[Long]))
+    }
     val seed = edges.groupBy(col("dst")).agg(min(col("src")).as("nlabel"))
-    var labels = nodes
+    var (labels, prevSum) = materialize(nodes
       .join(seed.select(col("dst").as("doc_id"), col("nlabel")), Seq("doc_id"), "left")
       .select(col("doc_id"),
-        least(col("doc_id"), coalesce(col("nlabel"), col("doc_id"))).as("label"))
-      .localCheckpoint()
-    var prevSum = labels.agg(sum(col("label"))).head().getLong(0)
+        least(col("doc_id"), coalesce(col("nlabel"), col("doc_id"))).as("label")))
     var converged = false
     var iter = 0
     while (!converged && iter < 50) {
       val nbrMin = edges
         .join(labels.select(col("doc_id").as("src"), col("label").as("slabel")), Seq("src"))
         .groupBy(col("dst")).agg(min(col("slabel")).as("nlabel"))
-      var next = labels
+      val stepped = labels
         .join(nbrMin.select(col("dst").as("doc_id"), col("nlabel")), Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .localCheckpoint()
-      if (iter >= 2) {
-        // POINTER JUMPING (path halving), engaged only once a graph
-        // has proven deeper than the near-dup norm (rounds 3+ — the
-        // r11 watch item: a long-chain corpus paid rounds × edge
-        // scan): each engaged round also replaces label with the
-        // LABEL OF THE LABEL, so label paths halve and deep chains
-        // converge in O(log diameter) rounds instead of O(diameter).
-        // Sound for min-label convergence: ll is the label of a node
-        // already known reachable, so labels still only ever decrease
-        // toward (never past) the true component minimum, and the
-        // label-sum fixpoint test is unchanged. The common shallow
-        // corpus (fixpoint by round 1–2) never pays the extra join.
-        next = next
-          .join(next.select(col("doc_id").as("label"), col("label").as("ll")),
-            Seq("label"), "left")
-          .select(col("doc_id"),
-            least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-          .localCheckpoint()
-      }
-      val curSum = next.agg(sum(col("label"))).head().getLong(0)
+      val (next, curSum) =
+        if (iter < 2) materialize(stepped)
+        else {
+          // POINTER JUMPING (path halving), engaged only once a graph
+          // has proven deeper than the near-dup norm (rounds 3+: a
+          // long-chain corpus would otherwise pay rounds × edge scan):
+          // each engaged round also replaces label with the LABEL OF
+          // THE LABEL, so label paths halve and deep chains converge in
+          // O(log diameter) rounds instead of O(diameter). Sound for
+          // min-label convergence: ll is the label of a node already
+          // known reachable, so labels still only ever decrease toward
+          // (never past) the true component minimum, and the label-sum
+          // fixpoint test is unchanged. The common shallow corpus
+          // (fixpoint by round 1–2) never pays the extra join.
+          val hop = stepped.localCheckpoint()
+          materialize(hop
+            .join(hop.select(col("doc_id").as("label"), col("label").as("ll")),
+              Seq("label"), "left")
+            .select(col("doc_id"),
+              least(col("label"), coalesce(col("ll"), col("label"))).as("label")))
+        }
       converged = curSum == prevSum
       prevSum = curSum
       labels = next
@@ -1668,7 +1642,7 @@ object Dedup {
     * Top-100 most-contained pairs.
     */
   private def d9(s: SparkSession, d: String): DataFrame =
-    candidateOverlap(s, d)
+    candidateOverlap(sketches(Tables.documents(s, d)))
       .withColumn("sz_min", least(col("sza"), col("szb")))
       .select(col("da"), col("db"), col("n_common"),
         (col("n_common").cast("double") / col("sz_min")).as("containment"))
@@ -2189,17 +2163,13 @@ object Dedup {
     }
     val oldLabels = s.read.parquet(dir.resolve("labels").toString)
     // new edges only: the union's star edges incident to a batch doc
-    val long = bandLong(minhashBandsFrom(shingles(docs)))
-    val roots = long.groupBy(col("band_id"), col("bkey"))
-      .agg(min(col("doc_id")).as("root"))
-    val newRooted = long.join(roots, Seq("band_id", "bkey"))
-      .filter(col("doc_id") =!= col("root"))
-      .select(col("root"), col("doc_id")).distinct()
+    val sk = sketches(docs)
+    val newRooted = starEdges(sk)
       .crossJoin(broadcast(mx))
       .filter(col("doc_id") > col("mx") - expr("mx div 5") ||
         col("root") > col("mx") - expr("mx div 5"))
       .select(col("root"), col("doc_id"))
-    val verified = verifyEdges(newRooted, docShingleSets(docs))
+    val verified = verifyEdges(newRooted, sk)
     // condense: old endpoints → persisted labels; new endpoints stay
     val lu = oldLabels.select(col("doc_id").as("u"), col("label").as("lu"))
     val lv = oldLabels.select(col("doc_id").as("v"), col("label").as("lv"))

@@ -65,7 +65,7 @@ class BenchHistorySpec extends AnyFunSuite {
     // to `off_pricing_trips` and a contended_note). Bench now skips
     // the gate off-pricing (`budget_gated`); this locks the invariant
     // so a mis-gated line can never again read as regression evidence.
-    nodes.filterNot(_.path("sf").asText("").endsWith("sf0.1")).foreach { n =>
+    nodes.filterNot(n => Bench.isPricingSf(n.path("sf").asText(""))).foreach { n =>
       assert(n.path("over_budget").size() == 0 && n.path("contended").size() == 0,
         s"ts ${n.path("ts")}: off-pricing sweep (sf ${n.path("sf")}) carries " +
           "budget trips — the sf0.1-priced gate must not apply")
@@ -73,6 +73,15 @@ class BenchHistorySpec extends AnyFunSuite {
         assert(n.path("contended_note").asText("").length > 40,
           s"ts ${n.path("ts")}: off_pricing_trips requires an evidence note")
     }
+  }
+
+  test("the pricing SF is the path's final component, not a suffix") {
+    assert(Bench.isPricingSf("/data/sf0.1"))
+    assert(Bench.isPricingSf("/data/sf0.1/"))
+    assert(Bench.isPricingSf("/data/x/../sf0.1"))
+    assert(!Bench.isPricingSf("/data/mysf0.1"), "a corpus whose name ends in sf0.1 is not a pricing sweep")
+    assert(!Bench.isPricingSf("/data/sf0.01"))
+    assert(!Bench.isPricingSf("/"))
   }
 
   test("contended runs are the known set or newer (no silent unflagging)") {

@@ -124,6 +124,31 @@ class DedupPlanSpec extends SparkSpec {
     assert(chainLabels.values.toSet == Set(10L), s"chain did not converge: $chainLabels")
   }
 
+  test("propagation runs one job per round: the label sum rides the checkpoint job") {
+    import spark.implicits._
+    // a 1-9-5 bridge converges in 2 rounds; a 6-node path needs 4, so
+    // its rounds 3-4 also pointer-jump (one more checkpoint each)
+    val bridge = Seq((1L, 9L), (9L, 1L), (5L, 9L), (9L, 5L)).toDF("src", "dst").localCheckpoint()
+    val path = (0 until 5).flatMap(i => Seq((i.toLong, i + 1L), (i + 1L, i.toLong)))
+      .toDF("src", "dst").localCheckpoint()
+    // AQE runs each shuffle stage as a job of its own, so a round is
+    // its checkpoint's map-stage jobs plus one result job. A separate
+    // sum per round cost two more (17 and 39 jobs here).
+    for ((edges, nodes, wantRounds, wantJobs) <- Seq(
+        (bridge, Seq(1L, 5L, 9L), 2, 11), (path, (0L to 5L), 4, 29))) {
+      val ((labels, rounds), jobs) =
+        jobsOf(dedup.Dedup.propagateMinLabels(nodes.toDF("doc_id"), edges))
+      assert(rounds == wantRounds)
+      assert(labels.collect().map(_.getLong(1)).toSet == Set(nodes.min))
+      assert(jobs.size == wantJobs, jobs.mkString("\n"))
+      assert(!jobs.exists(_.startsWith("head at")), jobs.mkString("\n"))
+    }
+    // an empty node set still fails loudly at the seed round
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst").localCheckpoint()
+    intercept[IllegalArgumentException](
+      dedup.Dedup.propagateMinLabels(Seq.empty[Long].toDF("doc_id"), none))
+  }
+
   test("propagation pointer-jumps deep chains: a 24-node path converges in O(log n) rounds") {
     import spark.implicits._
     // a pure path 0-1-2-...-23: plain one-hop propagation would need
@@ -229,6 +254,72 @@ class DedupPlanSpec extends SparkSpec {
     assert(rows.exists { case (doc, c) => c != doc }, "expected at least one non-singleton cluster")
   }
 
+  /** Nodes of an executed plan that evaluate [[functions.ShingleSketch]],
+    * each with whether a round-robin exchange runs below it. */
+  private def sketchSites(p: org.apache.spark.sql.execution.SparkPlan): Seq[(String, Boolean)] = {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    // a reused stage's exchange is its `child`, not one of its children
+    def spreadBelow(n: SparkPlan): Boolean = collectInPlan(n) {
+      case x: ShuffleExchangeExec if x.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => x
+      case r: ReusedExchangeExec if spreadBelow(r.child) => r
+    }.nonEmpty
+    collectInPlan(p) {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[functions.ShingleSketch])) =>
+        (n.nodeName, n.children.exists(spreadBelow))
+    }
+  }
+
+  /** sf0.001's documents rewritten as `n` parquet splits. */
+  private def splitCorpus(n: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("dedup_splits").toString
+    Tables.documents(spark, sf).repartition(n)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("d7's edges: no per-gram rows or sort/object aggregates; the sketch runs above the spread") {
+    import org.apache.spark.sql.catalyst.expressions.{CreateMap, Explode}
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    // several small splits: parallel, but narrower than the shuffle
+    // partitions, so spreadToCores still fans the scan out
+    val dir = splitCorpus(3)
+    val docs = Tables.documents(spark, dir)
+    assert(docs.rdd.getNumPartitions == 3)
+    val edges = dedup.Dedup.clusterEdges(docs)
+    edges.collect()
+    val p = edges.queryExecution.executedPlan
+    val generates = collectInPlan(p) { case g: GenerateExec => g.generator }
+    assert(generates.forall {
+      case Explode(_: CreateMap) => true // the 4-row band long form
+      case _ => false
+    }, s"a Generate other than the band explode:\n$p")
+    assert(collectInPlan(p) { case a: SortAggregateExec => a }.isEmpty, p)
+    assert(collectInPlan(p) { case a: ObjectHashAggregateExec => a }.isEmpty, p)
+    // once for the bands, once for the sets, and never below the
+    // round-robin exchange (a filter on the sketch would be pushed
+    // there and hash the corpus on the scan's few cores)
+    val sites = sketchSites(p)
+    assert(sites.nonEmpty && sites.forall(_._2), s"ShingleSketch evaluated below the spread: $sites\n$p")
+    assert(sites.size <= 2, s"$sites\n$p")
+    // the edges are d7's: same labels as the single-file corpus
+    val one = SparkEntry.queries("d7_cluster")(spark, sf).collect().map(_.toSeq).toSet
+    assert(SparkEntry.queries("d7_cluster")(spark, dir).collect().map(_.toSeq).toSet == one)
+  }
+
+  test("every sketch consumer evaluates the sketch above the spread") {
+    val dir = splitCorpus(3)
+    for (q <- Seq("d2_minhash_lsh", "d4_ngram_jaccard", "d9_containment", "d11_word_minhash",
+        "d15_minhash_accuracy", "d24_lsh_curve", "d25_band_sweep")) {
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val sites = sketchSites(df.queryExecution.executedPlan)
+      assert(sites.nonEmpty && sites.forall(_._2), s"$q: $sites")
+    }
+  }
+
   test("d7 edge verification drops an engineered band-collision edge between dissimilar docs") {
     import spark.implicits._
     // docs 1/2 share ZERO shingles — the fabricated (1,2) star edge
@@ -240,7 +331,7 @@ class DedupPlanSpec extends SparkSpec {
       (2L, "fffffggggghhhhhiiiiijjjjj"),
       (3L, "the quick brown fox jumps over the lazy dog again"),
       (4L, "the quick brown fox jumps over the lazy dog agaim")).toDF("doc_id", "text")
-    val sets = graft.dedup.Dedup.docShingleSets(docs)
+    val sets = graft.dedup.Dedup.sketches(docs)
     val rooted = Seq((1L, 2L), (3L, 4L)).toDF("root", "doc_id")
     val kept = graft.dedup.Dedup.verifyEdges(rooted, sets)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -358,13 +449,16 @@ class DedupPlanSpec extends SparkSpec {
       (3L, "  a   b c   d  "),            // ragged whitespace -> 2 shingles
       (4L, "x x x x")                     // repeated tokens -> 2 DISTINCT shingles
     ).toDF("doc_id", "text")
-    val sh = dedup.Dedup.wordShinglesDistinct(docs)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    // the word-mode sketch's set holds each distinct gram's xxhash64
+    val sh = dedup.Dedup.sketches(docs, words = true)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](r.fieldIndex("shs")).toSeq).toMap
+    def hashes(grams: String*): Seq[Long] =
+      grams.toDF("g").select(org.apache.spark.sql.functions.xxhash64($"g"))
+        .collect().map(_.getLong(0)).toSeq.sorted
     assert(!sh.contains(1L), "2-token doc must produce no shingles")
-    assert(sh(2L) === Set("alpha beta gamma"))
-    assert(sh(3L) === Set("a b c", "b c d"), "tokenization must drop empty split tokens")
-    assert(sh(4L) === Set("x x x"), "duplicate shingles must dedup")
+    assert(sh(2L) === hashes("alpha beta gamma"))
+    assert(sh(3L) === hashes("a b c", "b c d"), "tokenization must drop empty split tokens")
+    assert(sh(4L) === hashes("x x x"), "duplicate shingles must dedup")
   }
 
   test("char shingles of sub-5-character texts: none, as the oracles' generate_series") {

@@ -35,5 +35,9 @@ class DevSpec extends SparkSpec {
     assert(plan.contains("isFinalPlan=true"), plan)
     assert(log.exists(_.trim.startsWith("job ")), log.mkString("\n"))
     assert(log.exists(_.trim.startsWith("stage ")), log.mkString("\n"))
+    // stages name the operators they ran, not the pool thread's call site
+    val stages = log.filter(_.trim.startsWith("stage "))
+    assert(stages.forall(!_.contains("CompletableFuture")), stages.mkString("\n"))
+    assert(stages.exists(_.contains("Exchange")), stages.mkString("\n"))
   }
 }

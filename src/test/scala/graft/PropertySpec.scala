@@ -619,6 +619,70 @@ class PropertySpec extends SparkSpec {
     assert(nativeGrams(wide, 28) == refGrams(wide, 28))
   }
 
+  test("native ShingleSketch equals the declarative explode + aggregate form, char and word grams") {
+    import org.apache.spark.sql.DataFrame
+    // the reference: the form the sketch replaced, one row per gram
+    // (Dedup.shingles for char grams; the split/slice rule for words),
+    // then md5 slice minima and the collect_set of xxhash64 per doc
+    def wordGrams(docs: DataFrame): DataFrame = docs.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), filter(split(col("text"), "\\s+"), t => t =!= "").as("toks"))
+      .select(col("doc_id"), explode(
+        when(size(col("toks")) >= 3,
+          expr("transform(sequence(1, size(toks) - 2), i -> concat_ws(' ', slice(toks, i, 3)))"))
+          .otherwise(expr("CAST(array() AS array<string>)"))).as("sh"))
+    def reference(grams: DataFrame): Map[Long, (Seq[String], Seq[Long])] = {
+      val mins = (0 until 8).map { j =>
+        val h = if (j < 4) md5(col("sh")) else md5(concat(lit("x"), col("sh")))
+        min(substring(h, 1 + 8 * (j % 4), 8)).as(s"s$j")
+      }
+      grams.groupBy(col("doc_id"))
+        .agg(mins.head, (mins.tail :+ sort_array(collect_set(xxhash64(col("sh")))).as("shs")): _*)
+        .collect().map(r => r.getLong(0) ->
+          ((1 to 8).map(r.getString), r.getSeq[Long](9).toSeq)).toMap
+    }
+    def native(docs: DataFrame, words: Boolean): Map[Long, (Seq[String], Seq[Long])] =
+      dedup.Dedup.sketches(docs, words).collect().map { r =>
+        val shs = r.getSeq[Long](r.fieldIndex("shs")).toSeq
+        assert(r.getAs[Long]("sz") == shs.size.toLong)
+        r.getLong(0) -> ((1 to 8).map(r.getString), shs)
+      }.toMap
+    // combining marks, astral code points (surrogate pairs in Java),
+    // whitespace Java's \s does and does not split on, repeated grams
+    val charGen: Gen[String] = Gen.frequency(
+      (20, Gen.oneOf("a", "b", "c", "Z", "0")),
+      (6, Gen.oneOf(" ", "  ", "\t", "\n")),
+      (2, Gen.oneOf("é", "€", "中", "\u00a0", "\u2003")),
+      (2, Gen.oneOf("e\u0301", "\u0301")),
+      (2, Gen.oneOf(new String(Character.toChars(0x1F600)), new String(Character.toChars(0x10348)))))
+    val astral = new String(Character.toChars(0x1F600))
+    val fixed = Seq[String](null, "", "abc", "abcd", "abcde", "abcdef",
+      astral * 4, astral * 5, "e\u0301e\u0301e", "ababababababab", "aaaaaaaaaa",
+      "one two", "one two three", "  a \t b\nc  ", "x x x x x", "a\u00a0b c d")
+    val texts = fixed ++ (0 until 120).map { i =>
+      Gen.listOfN(i % 40 * 7, charGen).apply(Gen.Parameters.default, Seed(700L + i))
+        .map(_.mkString).getOrElse("")
+    }
+    val rows = texts.zipWithIndex.map { case (t, i) => (java.lang.Long.valueOf(i.toLong), t) } :+
+      ((null: java.lang.Long), "a null doc_id is dropped by both")
+    // a multi-partition input: four parquet splits
+    val dir = java.nio.file.Files.createTempDirectory("sketch_fuzz").toString
+    rows.toDF("doc_id", "text").repartition(4).write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    assert(docs.rdd.getNumPartitions > 1)
+    for (words <- Seq(false, true)) {
+      val ref = reference(if (words) wordGrams(docs) else dedup.Dedup.shingles(docs))
+      val got = native(docs, words)
+      assert(got.keySet == ref.keySet, s"words=$words: documents with grams differ")
+      for ((id, want) <- ref)
+        assert(got(id) == want, s"words=$words doc $id '${texts(id.toInt)}'")
+    }
+    // the corners are exercised, not skipped
+    val charDocs = native(docs, words = false).keySet
+    assert(!charDocs.contains(3L) && charDocs.contains(4L), "4 and 5 code points")
+    assert(!charDocs.contains(6L) && charDocs.contains(7L), "4 and 5 astral code points")
+    assert(native(docs, words = false)(10L)._2.size == 1, "repeated grams are one set member")
+  }
+
   test("t24 DSIR resampling moves the kept mixture toward the target distribution") {
     val rows = SparkEntry.queries("t24_dsir_resample")(spark, sf).collect()
       .map(r => (r.getString(1), r.getLong(3), r.getBoolean(5)))

@@ -16,11 +16,17 @@ per-query `counters`, each swing also shows its Spark job count a -> b:
 a wall swing with a job-count change is a plan change.
 """
 import json
+import os
 import sys
 
 def load(p):
     with open(p) as f:
         return json.load(f)
+
+def is_pricing_sf(sf):
+    """Bench.isPricingSf: the normalized path's final component is
+    sf0.1, so /data/mysf0.1 is not a pricing sweep."""
+    return os.path.basename(os.path.normpath(sf)) == "sf0.1"
 
 def history(n_back_a, n_back_b):
     with open("BENCH_HISTORY.jsonl") as f:
@@ -36,7 +42,7 @@ def history(n_back_a, n_back_b):
     # the round-over-round diff is an sf0.1-sweep comparison; sf0.001
     # smoke runs also append (they are honest full sweeps, just at the
     # wrong scale for budget comparison)
-    entries = [e for e in entries if e.get("sf", "").endswith("sf0.1")]
+    entries = [e for e in entries if is_pricing_sf(e.get("sf", ""))]
     if len(entries) < max(n_back_a, n_back_b):
         sys.exit(f"only {len(entries)} clean history entries")
     return entries[-n_back_a], entries[-n_back_b]
