@@ -915,58 +915,41 @@ object Analytics {
     * for its hot join keys; [[Q27Buckets]] documents the 100 TB
     * sizing rule.
     *
-    * Since round 13 the layout write is STAGED behind a `_src_meta`
-    * freshness marker (the d16 discipline): "written ONCE" is now
-    * literal — the first run on a corpus pays the bucketed write, and
-    * every later run attaches the existing layout as external tables
-    * (catalog-only, zero data IO) before the co-located join. The
-    * marker covers both source files, the layout version, and the
-    * bucket count; a corpus change, a version bump, or a different
-    * count forces the re-write. Re-runs stay idempotent either way
-    * (drop + overwrite / drop + re-attach).
+    * The layout is staged ([[graft.StagePath.staged]]): the first run
+    * on a corpus pays the bucketed write, and every run then attaches
+    * the staged layout as external bucketed tables (catalog-only, zero
+    * data IO) before the co-located join. The marker covers both
+    * source files, the layout version and the bucket count; a corpus
+    * change, a version bump or a different count forces the re-write.
     */
   private def q27(s: SparkSession, d: String): DataFrame = {
-    val stage = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_bucketed_" + graft.StagePath.corpusToken(d))
-    java.nio.file.Files.createDirectories(stage)
-    // the d16 staging discipline (r13): a production bucketed table is
-    // written ONCE and queried many times — re-writing both sides on
-    // every execution priced the layout into every query. The marker
-    // covers BOTH source files and the bucket count (a layout staged
-    // under another count is stale).
-    val marker = stage.resolve("_src_meta")
-    val ver = s"$Q27LayoutVersion:n$Q27Buckets"
-    val meta =
-      graft.StagePath.srcMeta(d, java.nio.file.Paths.get(d, "lineitem.parquet"), ver) +
-        "|" + graft.StagePath.srcMeta(d, java.nio.file.Paths.get(d, "orders.parquet"), ver)
     val specs = Seq(
       ("graft_q27_lineitem", "l_orderkey",
         () => Tables.lineitem(s, d).select("l_orderkey", "l_quantity", "l_extendedprice")),
       ("graft_q27_orders", "o_orderkey",
         () => Tables.orders(s, d).select("o_orderkey", "o_orderpriority")))
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      specs.forall(sp => java.nio.file.Files.exists(stage.resolve(sp._1)))
+    val stage = graft.StagePath.staged(s, "bucketed", d,
+        Seq("lineitem.parquet", "orders.parquet"), s"$Q27LayoutVersion:n$Q27Buckets",
+        specs.map(_._1)) { st =>
+      for ((table, key, dfF) <- specs) st.write(table) { p =>
+        // bucketBy writes only through the catalog; the table is
+        // external (it has a path), so dropping it keeps the files
+        s.sql(s"DROP TABLE IF EXISTS $table")
+        dfF().write.bucketBy(Q27Buckets, key).sortBy(key)
+          .option("path", p.toString).saveAsTable(table)
+        s.sql(s"DROP TABLE $table")
+      }
+    }
     for ((table, key, dfF) <- specs) {
       // always re-register: the catalog is per-session and a live
-      // entry may point at ANOTHER corpus's staging dir
+      // entry may point at ANOTHER corpus's staging dir. Bucket ids
+      // ride the standard part-file naming, so the join still reads
+      // co-located buckets (plan-pinned in PlanShapeSpec).
       s.sql(s"DROP TABLE IF EXISTS $table")
-      if (!fresh)
-        dfF().write.mode("overwrite")
-          .bucketBy(Q27Buckets, key).sortBy(key)
-          .option("path", stage.resolve(table).toString)
-          .saveAsTable(table)
-      else
-        // warm: attach the existing layout as an external bucketed
-        // table — catalog-only, zero data IO (bucket ids ride the
-        // standard part-file naming, so the join still reads
-        // co-located buckets; plan-pinned in PlanShapeSpec)
-        s.sql(s"CREATE TABLE $table (${dfF().schema.toDDL}) USING parquet " +
-          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Q27Buckets BUCKETS " +
-          s"LOCATION '${stage.resolve(table)}'")
+      s.sql(s"CREATE TABLE $table (${dfF().schema.toDDL}) USING parquet " +
+        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Q27Buckets BUCKETS " +
+        s"LOCATION '${stage.resolve(table)}'")
     }
-    if (!fresh) java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
     s.table("graft_q27_lineitem")
       .join(s.table("graft_q27_orders"), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
@@ -1053,10 +1036,10 @@ object Analytics {
     * the rest of the suite already verifies (PushedFilters prunes
     * WITHIN files; partition pruning prunes files away entirely).
     *
-    * The partitioned write is staged once per corpus state behind a
-    * `_src_meta` freshness marker (r19 — the q27/s11/d16 discipline;
-    * the first run per corpus pays the layout, every later run prices
-    * exactly the pruned read, which is the operator under test).
+    * The partitioned write is staged once per corpus state
+    * ([[graft.StagePath.staged]]): the first run per corpus pays the
+    * layout, every later run prices exactly the pruned read, which is
+    * the operator under test.
     * PlanShapeSpec pins the contract dynamically: the executed scan's
     * `numFiles` metric must be strictly smaller than the staged file
     * population — pruning observed at the physical plan, not assumed.
@@ -1066,45 +1049,27 @@ object Analytics {
     * ≈ 40 GB/day is the same math with a finer calendar).
     */
   /** Hand-bumped with any change to q29's staged layout (projection,
-    * partitioning column, file clustering) — the s11/d16 marker
-    * discipline. */
+    * partitioning column, file clustering). */
   private[graft] val Q29LayoutVersion = "q29s1"
 
   private def q29(s: SparkSession, d: String): DataFrame = {
-    val stage = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_partitioned_" + graft.StagePath.corpusToken(d))
-    // r19 (guide §6): the layout is STAGED behind a freshness marker —
-    // the q27/s11/d16 discipline. Previously every execution re-wrote
-    // the partitioned table, charging the one-time layout cost to each
-    // measurement of the pruned READ this query exists to demonstrate
-    // (2.9 s of a 2.9 s query at sf0.1). A corpus change or a
-    // Q29LayoutVersion bump re-stages. The write also clusters rows by
-    // the partition column first (repartition(ship_month) — the
-    // REBALANCE-before-write rule), so each month lands as ONE file
-    // instead of one per scan task per month (~32x fewer files: the
-    // small-files problem the guide's §6 calls out at both write and
-    // read). At 100 TB the same write adds a file-count dimension
-    // inside each month (~40 GB/month needs multiple target-size
-    // files); the clustering decision is unchanged.
-    val marker = stage.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(
-      d, java.nio.file.Paths.get(d, "lineitem.parquet"), Q29LayoutVersion)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta
-    if (!fresh) {
-      Tables.lineitem(s, d)
+    val stage = graft.StagePath.staged(s, "partitioned", d, Seq("lineitem.parquet"),
+        Q29LayoutVersion, Seq("layout")) { st =>
+      // rows are clustered by the partition column first, so each month
+      // lands as ONE file instead of one per scan task per month (the
+      // small-files problem at both write and read). At 100 TB the same
+      // write adds a file-count dimension inside each month (~40
+      // GB/month needs multiple target-size files); the clustering
+      // decision is unchanged.
+      st.write("layout")(p => Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"),
           date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
         .repartition(col("ship_month"))
-        .write.mode("overwrite").partitionBy("ship_month")
-        .parquet(stage.toString)
-      // marker written LAST — a crash mid-write leaves a stale marker
-      // absent and the next run re-stages
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
+        .write.partitionBy("ship_month")
+        .parquet(p.toString))
     }
-    s.read.parquet(stage.toString)
+    s.read.parquet(stage.resolve("layout").toString)
       .filter(col("ship_month") === "1997-03")
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_items"),
@@ -1382,41 +1347,24 @@ object Analytics {
     * executed scan's numFiles strictly below the staged population
     * (skipping OBSERVED, q29's discipline). Z-order math is
     * Spark-side-only layout (the oracle never sees it), so the
-    * interleave needs no cross-engine twin. Stage cost (write + stats
-    * pass) is priced in-query, idempotent via overwrite — the q27/q29
-    * discipline. At 100 TB the win multiplies with partition pruning:
+    * interleave needs no cross-engine twin. The layout AND its
+    * manifest are staged once per corpus state
+    * ([[graft.StagePath.staged]]), as a table format writes file-level
+    * stats once, at write time: each run prices manifest read → prune
+    * → pruned scan, the planner path this query demonstrates. At
+    * 100 TB the win multiplies with partition pruning:
     * q29 prunes the calendar, z-order prunes WITHIN each month across
     * a second dimension partitioning can't reach.
     */
   /** Hand-bumped with any change to q36's staged z-order layout or its
-    * manifest derivation — the q29/s11 marker discipline. */
+    * manifest derivation. */
   private[graft] val Q36LayoutVersion = "q36s1"
 
   private def q36(s: SparkSession, d: String): DataFrame = {
-    val stage = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_zorder_" + graft.StagePath.corpusToken(d))
-    // r19 (guide §6): layout AND manifest staged once per corpus state
-    // behind a freshness marker (the q29/q27/s11 discipline). The old
-    // form re-wrote the 64-file z-ordered layout and re-derived the
-    // per-file min/max manifest with a full data scan on EVERY
-    // execution — but a real table format writes file-level stats
-    // once, at write time, into table metadata; re-running the layout
-    // charges the one-time clustering cost to each measurement of the
-    // SKIPPING this query exists to demonstrate. Per-run cost is now
-    // manifest read → prune → pruned scan, the actual planner path.
     val mi = year(col("l_shipdate")) * 12 + month(col("l_shipdate"))
     val pb = pmod(col("l_partkey"), lit(128))
-    val dataDir = stage.resolve("data")
-    val manifestDir = stage.resolve("manifest")
-    val marker = stage.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(
-      d, java.nio.file.Paths.get(d, "lineitem.parquet"), Q36LayoutVersion)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      java.nio.file.Files.exists(dataDir) &&
-      java.nio.file.Files.exists(manifestDir)
-    if (!fresh) {
+    val stage = graft.StagePath.staged(s, "zorder", d, Seq("lineitem.parquet"),
+        Q36LayoutVersion, Seq("data", "manifest")) { st =>
       // 8-bit month index (clamped base-23900 window — layout-only:
       // the manifest stores the TRUE min/max, so clamping can cost
       // skipping quality, never correctness) interleaved with the
@@ -1426,23 +1374,23 @@ object Analytics {
         .reduce(_ + _)
         .plus((0 until 7).map(i => shiftleft(col("pb").bitwiseAND(lit(1 << i)), i + 1))
           .reduce(_ + _))
-      Tables.lineitem(s, d)
+      val dataDir = st.write("data")(p => Tables.lineitem(s, d)
         .select(col("l_partkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"), col("l_shipdate"))
         .withColumn("mi", mi).withColumn("pb", pb)
         .withColumn("zval", zval)
         .repartitionByRange(64, col("zval"))
-        .write.mode("overwrite").parquet(dataDir.toString)
-      s.read.parquet(dataDir.toString)
+        .write.parquet(p.toString))
+      // the manifest names the data files at their final paths, so it
+      // is derived after the data is in place
+      st.write("manifest")(p => s.read.parquet(dataDir.toString)
         .groupBy(input_file_name().as("f"))
         .agg(min(col("mi")).as("mi_lo"), max(col("mi")).as("mi_hi"),
           min(col("pb")).as("pb_lo"), max(col("pb")).as("pb_hi"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(manifestDir.toString)
-      // marker written LAST — a crash mid-stage re-stages next run
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
+        .write.parquet(p.toString))
     }
-    val manifest = s.read.parquet(manifestDir.toString)
+    val manifest = s.read.parquet(stage.resolve("manifest").toString)
     val (m, bLo, bHi) = (23967, 40, 47) // 1997-03 × buckets 40..47
     // metadata-sized collect: the pruned file list, exactly what a
     // table format's planner hands the scan

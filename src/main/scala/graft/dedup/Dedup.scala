@@ -1163,13 +1163,10 @@ object Dedup {
   }
 
   /** Version token for STAGED manifest state (st9's parquet staging,
-    * [[graft.streaming.StreamingOps]]): the `_src_meta` freshness
-    * marker folds this in so a change to the manifest-building logic
-    * invalidates previously staged manifests (ADVICE r9 — a marker
-    * keyed only on the source parquet's size:mtime silently reuses
-    * stale manifests after a logic change). The literal prefix is
-    * bumped by hand with any [[d12Manifests]]/split-rule change; the
-    * hash tracks the signature definition automatically. */
+    * [[graft.streaming.StreamingOps]]), so a change to the
+    * manifest-building logic re-stages the manifests. The literal
+    * prefix is bumped by hand with any [[d12Manifests]]/split-rule
+    * change; the hash tracks the signature definition automatically. */
   private[graft] def manifestLogicToken: String =
     // m3: staging gained the Bloom word manifest (st10)
     "m3:" + Integer.toHexString(RowSimhashSql.hashCode)
@@ -1353,14 +1350,10 @@ object Dedup {
     * streaming path; d16 is its batch sibling over the DEDUPED-corpus
     * state (VERDICT r9 #4).
     *
-    * The sweep is staged behind a `_src_meta` freshness marker
-    * (source size+mtime+path+[[D16SweepVersion]] — the s11/d20/bpe
-    * discipline, r12 verdict #4): the nightly sweep runs ONCE per
-    * corpus state, and every subsequent admission prices exactly the
-    * three admit joins — previously d16 re-clustered and re-wrote its
-    * manifests on every execution, making it the suite's most
-    * expensive query for work its own Scaladoc called "nightly". A
-    * stale marker (corpus changed, sweep logic bumped) forces the
+    * The sweep is staged ([[graft.StagePath.staged]], versioned by
+    * [[D16SweepVersion]]): the nightly sweep runs ONCE per corpus
+    * state, and every subsequent admission prices exactly the three
+    * admit joins. A corpus change or a sweep-logic bump forces the
     * full re-sweep (spec-pinned). At 100 TB the manifests are
     * corpus-keyed aggregated relations — parquet keeps them columnar
     * and equi-joinable with AQE skew splitting, never a broadcast.
@@ -1371,28 +1364,17 @@ object Dedup {
     * borrows from d12.
     */
   /** Hand-bumped with any change to d16's sweep logic (clustering
-    * chain, keeper argmax, manifest schema/aggregation) — the
-    * [[CbcVersion]] discipline for the manifest store. */
+    * chain, keeper argmax, manifest schema/aggregation). */
   private[graft] val D16SweepVersion = "d16s1"
 
   private def d16(s: SparkSession, d: String): DataFrame = {
-    val stage = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_d16_" + graft.StagePath.corpusToken(d))
-    java.nio.file.Files.createDirectories(stage)
-    val marker = stage.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(
-      d, java.nio.file.Paths.get(d, "documents.parquet"), D16SweepVersion)
     val all = Tables.documents(s, d).filter(col("doc_id").isNotNull)
     val mx = all.agg(max(col("doc_id")).as("mx"))
     val flagged = all.crossJoin(broadcast(mx))
     val newDocs = flagged.filter(col("doc_id") > col("mx") - expr("mx div 5"))
       .select(col("doc_id"), col("text"))
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      java.nio.file.Files.exists(stage.resolve("fp_manifest")) &&
-      java.nio.file.Files.exists(stage.resolve("sig_manifest"))
-    if (!fresh) {
+    val stage = graft.StagePath.staged(s, "d16", d, Seq("documents.parquet"),
+        D16SweepVersion, Seq("kept_corpus", "fp_manifest", "sig_manifest")) { st =>
       val existing = flagged.filter(col("doc_id") <= col("mx") - expr("mx div 5"))
         .select(col("doc_id"), col("text"))
       // sweep stage: cluster + keeper argmax ONCE, persist the deduped
@@ -1401,24 +1383,20 @@ object Dedup {
       // table the two manifest writes would each re-run the whole
       // clustering chain (measured 2x the sweep cost)
       val kept = existing.join(keeperIds(existing), Seq("doc_id"), "left_semi")
-      // write-to-temp + rename (ADVICE r13): a concurrent warm reader
-      // must never see a manifest dir mid-overwrite
-      graft.StagePath.atomicSwapDir(stage.resolve("kept_corpus")) { tmp =>
+      val keptT = graft.sources.TableSource.read(s, st.write("kept_corpus") { tmp =>
         graft.sources.TableSource.write(kept, tmp.toString)
-      }
-      val keptT = graft.sources.TableSource.read(s, stage.resolve("kept_corpus").toString)
-      graft.StagePath.atomicSwapDir(stage.resolve("fp_manifest")) { tmp =>
+      }.toString)
+      st.write("fp_manifest") { tmp =>
         graft.sources.TableSource.write(
           keptT.select(md5(col("text").cast("binary")).as("fp"))
             .groupBy(col("fp")).agg(lit(1).as("fp_hit")),
           tmp.toString)
       }
-      graft.StagePath.atomicSwapDir(stage.resolve("sig_manifest")) { tmp =>
+      st.write("sig_manifest") { tmp =>
         graft.sources.TableSource.write(
           simhashSigsOf(keptT).groupBy(col("simhash")).agg(lit(1).as("sig_hit")),
           tmp.toString)
       }
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
     }
     // admit stage: manifest sides are parquet scans — the only other
     // source in this plan is the new batch itself
@@ -1434,7 +1412,7 @@ object Dedup {
     * ~12 GiB — shipped once per executor, vs an equi-join probing the
     * full manifest for EVERY new document). Both the engine plan and
     * the oracle SQL are built from this one constant, and st9/st10's
-    * staged `bloom_manifest` carries it in its `_src_meta` marker.
+    * staged `bloom_manifest` carries it in its staging version.
     */
   private[graft] val BloomBitsLog2 = 14
 
@@ -2095,9 +2073,9 @@ object Dedup {
       |  COALESCE(a.cleaned, '') AS cleaned
       |FROM toks n LEFT JOIN agg a USING (doc_id)""".stripMargin
 
-  /** Version token baked into d20's persisted-label store (the
-    * s11/st9 freshness rule): labels laid out by an older clustering
-    * rule can never serve a newer incremental path. */
+  /** Version token of d20's persisted-label store: labels laid out by
+    * an older clustering rule can never serve a newer incremental
+    * path. */
   private[graft] val CbcVersion = "cbc1"
 
   /** d20: cross-batch INCREMENTAL cluster maintenance — the gap d12/
@@ -2108,8 +2086,8 @@ object Dedup {
     *
     *   - SWEEP (priced in-query on first run, then version-gated like
     *     s11): cluster the historical ~80% with d7's exact machinery,
-    *     persist (doc_id, label) to parquet beside a `_src_meta`
-    *     marker (source size+mtime+[[CbcVersion]]);
+    *     persist (doc_id, label) to parquet, staged by
+    *     [[graft.StagePath.staged]] under [[CbcVersion]];
     *   - INCREMENT: compute ONLY the new edges — star-contraction
     *     edges incident to a batch doc (batch ids are strictly above
     *     the historical max, so bucket roots and hence the historical
@@ -2140,26 +2118,16 @@ object Dedup {
     * difference between re-clustering 100 TB nightly and propagating
     * over the day's edges. */
   private def d20(s: SparkSession, d: String): DataFrame = {
-    val src = java.nio.file.Paths.get(d, "documents.parquet")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_cbc_" + graft.StagePath.corpusToken(d))
-    java.nio.file.Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(d, src, CbcVersion)
     val docs = Tables.documents(s, d).filter(col("doc_id").isNotNull)
     val mx = docs.agg(max(col("doc_id")).as("mx"))
     val isNewCol = col("doc_id") > col("mx") - expr("mx div 5")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      java.nio.file.Files.exists(dir.resolve("labels"))
-    if (!fresh) {
+    val dir = graft.StagePath.staged(s, "cbc", d, Seq("documents.parquet"), CbcVersion,
+        Seq("labels")) { st =>
       val hist = docs.crossJoin(broadcast(mx)).filter(!isNewCol)
         .select(docs.columns.map(col): _*)
-      clusterAssignmentsOf(hist)
+      st.write("labels")(p => clusterAssignmentsOf(hist)
         .select(col("doc_id"), col("cluster_id").as("label"))
-        .write.mode("overwrite").parquet(dir.resolve("labels").toString)
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
+        .write.parquet(p.toString))
     }
     val oldLabels = s.read.parquet(dir.resolve("labels").toString)
     // new edges only: the union's star edges incident to a batch doc

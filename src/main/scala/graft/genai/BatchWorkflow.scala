@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * result job) and the two saves: six jobs, plus the jobs the input
   * subtree plans inside the materialization (g14's initial run: 7 jobs;
   * its resume, with the anti-join against the saved JSONL: 9),
-  * independent of corpus size.
+  * independent of corpus size. Each action's jobs carry its name as
+  * their job description (`materialize requests`, `write input`,
+  * `write manifest`, `save results`, `save errors`).
   */
 object BatchWorkflow {
 
@@ -71,15 +73,16 @@ object BatchWorkflow {
     // the lowest doc_id, nulls first as orderBy(doc_id).limit(1) picks
     // it, ties going to an invalid row: a min over (has id, id, is_valid)
     // observed on the materializing job.
+    val spark = documents.sparkSession
     val preflight = Observation()
-    val requests = {
-      val reqs = Requests.chatRequests(documents)
-      if (!validate) reqs
+    val reqs = Requests.chatRequests(documents)
+    val requests = graft.withJobDescription(spark, "materialize requests") {
+      (if (!validate) reqs
       else Validation.validate(reqs)
         .observe(preflight, min(struct(col("doc_id").isNotNull, col("doc_id"),
           col("is_valid"))).as("sample"))
-        .select(reqs.columns.map(col): _*)
-    }.localCheckpoint()
+        .select(reqs.columns.map(col): _*)).localCheckpoint()
+    }
     def halted(status: String): BatchResult = {
       val empty = Responses.parse(Simulator.respond(requests.limit(0)))
       BatchResult(empty, empty, status)
@@ -93,7 +96,9 @@ object BatchWorkflow {
 
     // 1. prepare + "upload" the batch input files, sharded
     val sharded = Sharding.assign(requests, shardSize)
-    Jsonl.writeLines(Requests.toJsonLines(sharded), s"$outputPathPrefix/input")
+    graft.withJobDescription(spark, "write input") {
+      Jsonl.writeLines(Requests.toJsonLines(sharded), s"$outputPathPrefix/input")
+    }
 
     // 2a. batch-creation manifest — one record per shard with the
     // reference's `batches.create` arguments (endpoint,
@@ -112,7 +117,9 @@ object BatchWorkflow {
         lit(endpoint).as("endpoint"),
         lit(completionWindow).as("completion_window"),
         metaJson.as("metadata"))
-    Jsonl.write(manifest, s"$outputPathPrefix/batches")
+    graft.withJobDescription(spark, "write manifest") {
+      Jsonl.write(manifest, s"$outputPathPrefix/batches")
+    }
 
     // 2-3. create batch + monitor → terminal state. When the job is
     // external, poll it; a non-success terminal state or a timeout
@@ -129,9 +136,13 @@ object BatchWorkflow {
     val results = Responses.results(parsed)
     val errors = Responses.errors(parsed)
     val errorCount = Observation()
-    ResultSink.save(results, s"$outputPathPrefix/results.jsonl")
-    ResultSink.save(errors.observe(errorCount, count(lit(1)).as("n")),
-      s"$outputPathPrefix/errors.jsonl")
+    graft.withJobDescription(spark, "save results") {
+      ResultSink.save(results, s"$outputPathPrefix/results.jsonl")
+    }
+    graft.withJobDescription(spark, "save errors") {
+      ResultSink.save(errors.observe(errorCount, count(lit(1)).as("n")),
+        s"$outputPathPrefix/errors.jsonl")
+    }
 
     val status =
       if (errorCount.get("n").asInstanceOf[Long] == 0L) "completed" else "completed_with_errors"

@@ -389,12 +389,7 @@ object GenAI {
       "graft_g14_" + graft.StagePath.corpusToken(d))
     // clean slate: resume's anti-join must see exactly the initial
     // run's outputs, never files from an older logic version
-    if (java.nio.file.Files.exists(prefix)) {
-      val walk = java.nio.file.Files.walk(prefix)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    graft.StagePath.deleteRecursively(prefix)
     val docs = Tables.documents(s, d).filter(col("doc_id").isNotNull)
     // r20 (guide §2.4): the validation verdicts feed the valid-id
     // semi-join (which BOTH workflow runs re-read) and the rejected

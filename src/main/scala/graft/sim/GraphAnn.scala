@@ -210,55 +210,28 @@ object GraphAnn {
 
   /** Logic-version token for the staged graph index: bumped whenever
     * the build's parameters or algorithm change so a stale artifact
-    * re-stages instead of being silently served (the s11/ADVICE-r9
-    * freshness rule). Encodes T/G/S/B. graphann3: the index now also
-    * persists the PROVISIONAL graph g0 (s29's incremental maintenance
-    * composes through it), so older two-artifact stagings must
-    * re-stage. */
+    * re-stages instead of being served. Encodes T/G/S/B. graphann3:
+    * the index also persists the PROVISIONAL graph g0 (s29's
+    * incremental maintenance composes through it). */
   private val GraphIndexVersion = s"graphann3_t4_g${G}_s${S}_b$B"
 
-  /** Version token for s29's staged delta segment (keyed WITH the base
-    * index version — a base re-stage invalidates deltas computed
-    * against it, the s17 IvfDeltaVersion rule). */
+  /** Version token for s29's staged delta segment. Its marker also
+    * folds in the base index version: a base re-stage invalidates
+    * deltas computed against it. */
   private val GraphDeltaVersion = "graphdelta1"
 
-  /** The persisted graph index (the s11 discipline applied to the
-    * neighbor graph): the one-time build ([[graphEdges]]) lands as a
-    * parquet edge list under a corpus-token + freshness-marker staged
-    * dir, and every query run READS the index instead of rebuilding
-    * it — which is the entire economics of the graph family (build
-    * once, navigate cheaply forever). Marker written last; re-stages
-    * on source change or version bump. */
-  private def ensureGraphIndex(s: SparkSession, d: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(d, "embeddings.parquet")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_graphindex_" + graft.StagePath.corpusToken(d))
-    java.nio.file.Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(d, src, GraphIndexVersion)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      java.nio.file.Files.exists(dir.resolve("edges")) &&
-      java.nio.file.Files.exists(dir.resolve("g0"))
-    if (!fresh) {
-      // ADVICE r18: stage via write-to-temp + rename — an in-place
-      // mode("overwrite") write lets a concurrent warm reader (second
-      // bench/test process on the same corpus after a version bump)
-      // observe a half-written edges directory behind the old marker
-      // window; atomicSwapDir shrinks the exposure to the rename
-      // instant (the r13 dedup-manifest fix, applied here).
+  /** The persisted graph index: the one-time build ([[graphEdges]])
+    * lands as a parquet edge list, staged by [[graft.StagePath.staged]],
+    * and every query run READS the index instead of rebuilding it —
+    * which is the entire economics of the graph family (build once,
+    * navigate cheaply forever). */
+  private def ensureGraphIndex(s: SparkSession, d: String): java.nio.file.Path =
+    graft.StagePath.staged(s, "graphindex", d, Seq("embeddings.parquet"),
+        GraphIndexVersion, Seq("g0", "edges")) { st =>
       val (g0, edges) = graphStages(base(s, d))
-      graft.StagePath.atomicSwapDir(dir.resolve("g0")) { tmp =>
-        g0.write.mode("overwrite").parquet(tmp.toString)
-      }
-      graft.StagePath.atomicSwapDir(dir.resolve("edges")) { tmp =>
-        edges.write.mode("overwrite").parquet(tmp.toString)
-      }
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
+      st.write("g0")(p => g0.write.parquet(p.toString))
+      st.write("edges")(p => edges.write.parquet(p.toString))
     }
-    dir
-  }
 
   /** The graph walk over an arbitrary (corpus, edge list): seeds from
     * the query's forest buckets, two hops along out-edges, exact
@@ -455,22 +428,11 @@ object GraphAnn {
   /** Stages s29's delta segment beside (never inside) the immutable
     * base index: `replaced` — the touched node set T1 (one column,
     * src); `edges` — the recomputed final top-G for exactly those
-    * nodes. Marker keyed by base-index version + delta version. */
+    * nodes. */
   private def ensureGraphDelta(s: SparkSession, d: String,
-      idx: java.nio.file.Path): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(d, "embeddings.parquet")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_graphdelta_" + graft.StagePath.corpusToken(d))
-    java.nio.file.Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(d, src,
-      GraphIndexVersion + ":" + GraphDeltaVersion)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      java.nio.file.Files.exists(dir.resolve("replaced")) &&
-      java.nio.file.Files.exists(dir.resolve("edges"))
-    if (!fresh) {
+      idx: java.nio.file.Path): java.nio.file.Path =
+    graft.StagePath.staged(s, "graphdelta", d, Seq("embeddings.parquet"),
+        GraphIndexVersion + ":" + GraphDeltaVersion, Seq("replaced", "edges")) { st =>
       val bBase = base(s, d)
       val batch = plantedBatch(s, d)
       val bU = unionCorpus(s, d)
@@ -488,11 +450,8 @@ object GraphAnn {
           .select(col("vec_id"))
       }.reduce(_ union _)
       val t0 = batch.select(col("vec_id")).union(cohabitants).distinct()
-      stageDelta(s, idx, dir, meta, bU, t0,
-        drop = batch.select(col("vec_id")).limit(0))
+      stageDelta(s, idx, st, bU, t0, drop = batch.select(col("vec_id")).limit(0))
     }
-    dir
-  }
 
   /** The shared delta computation (s29 append / s30 delete): given the
     * post-change corpus `bU`, the first-order touched set `t0` (every
@@ -502,7 +461,7 @@ object GraphAnn {
     * recomputed final top-G for T1 over bU). Scoring and composition
     * run only for T0/T1 — the whole point of maintenance. */
   private def stageDelta(s: SparkSession, idx: java.nio.file.Path,
-      dir: java.nio.file.Path, meta: String,
+      st: graft.StagePath.Build,
       bU: DataFrame, t0: DataFrame, drop: DataFrame): Unit = {
     val g0Base = s.read.parquet(idx.resolve("g0").toString)
     // provisional graph over U: recompute for T0; reuse g0 elsewhere
@@ -539,18 +498,10 @@ object GraphAnn {
         .filter(col("cos").isNotNull && !isnan(col("cos"))),
       Seq("src"), "cos", "dst", G)
       .select(col("src"), col("dst"), col("cos"))
-    graft.StagePath.atomicSwapDir(dir.resolve("replaced")) { tmp =>
-      t1.union(drop).distinct().select(col("vec_id").as("src"))
-        .write.mode("overwrite").parquet(tmp.toString)
-    }
-    graft.StagePath.atomicSwapDir(dir.resolve("edges")) { tmp =>
-      edgesT1.write.mode("overwrite").parquet(tmp.toString)
-    }
-    java.nio.file.Files.write(marker(dir), meta.getBytes("UTF-8"))
+    st.write("replaced")(p => t1.union(drop).distinct().select(col("vec_id").as("src"))
+      .write.parquet(p.toString))
+    st.write("edges")(p => edgesT1.write.parquet(p.toString))
   }
-
-  private def marker(dir: java.nio.file.Path): java.nio.file.Path =
-    dir.resolve("_src_meta")
 
   /** The from-scratch comparator for GraphAnnSpec: one wholesale
     * [[graphStages]] build over the union corpus — no staging, no
@@ -611,20 +562,9 @@ object GraphAnn {
   }
 
   private def ensureGraphDeleteDelta(s: SparkSession, d: String,
-      idx: java.nio.file.Path): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(d, "embeddings.parquet")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_graphdeldelta_" + graft.StagePath.corpusToken(d))
-    java.nio.file.Files.createDirectories(dir)
-    val mk = marker(dir)
-    val meta = graft.StagePath.srcMeta(d, src,
-      GraphIndexVersion + ":" + GraphDeltaVersion + ":del")
-    val fresh = java.nio.file.Files.exists(mk) &&
-      new String(java.nio.file.Files.readAllBytes(mk), "UTF-8") == meta &&
-      java.nio.file.Files.exists(dir.resolve("replaced")) &&
-      java.nio.file.Files.exists(dir.resolve("edges"))
-    if (!fresh) {
+      idx: java.nio.file.Path): java.nio.file.Path =
+    graft.StagePath.staged(s, "graphdeldelta", d, Seq("embeddings.parquet"),
+        GraphIndexVersion + ":" + GraphDeltaVersion + ":del", Seq("replaced", "edges")) { st =>
       val bBase = base(s, d)
       val bU = survivorCorpus(s, d)
       val dropped = deletedIds(bBase)
@@ -641,10 +581,8 @@ object GraphAnn {
           .join(broadcast(lostPivotBuckets.filter(col("t") === t).select("bk")), Seq("bk"))
           .select(col("vec_id"))
       }.reduce(_ union _).distinct()
-      stageDelta(s, idx, dir, meta, bU, t0, drop = dropped)
+      stageDelta(s, idx, st, bU, t0, drop = dropped)
     }
-    dir
-  }
 
   /** From-scratch comparator: one wholesale build over the survivors. */
   private[graft] def s30FromScratchEdges(s: SparkSession, d: String): DataFrame =

@@ -1495,7 +1495,7 @@ object Knn {
 
   /** Index-logic version: bump when the persisted layout or the
     * centroid/assignment rule changes, so stale staged indexes can
-    * never serve a newer search path (the d16/st9 freshness rule). */
+    * never serve a newer search path. */
   private val IvfIndexVersion = "ivf1"
   private val IvfDeltaVersion = "ivfdelta1"
 
@@ -1512,7 +1512,7 @@ object Knn {
     * per query) do not: a nightly job writes the index ONCE, and
     * every search after that touches only index files.
     *
-    *   - BUILD (staged, freshness-markered like d16's manifests):
+    *   - BUILD (staged by [[graft.StagePath.staged]]):
     *     centroid arrays to `centroids/`, and the corpus as INVERTED
     *     LISTS — (vec_id, embedding, norm) PARTITIONED BY assigned
     *     cell. The inverted-list file layout IS Hive partitioning:
@@ -1533,47 +1533,27 @@ object Knn {
     * bound that I/O physically, not just logically.
     */
   /** Stage the persisted IVF index (centroids + cell-partitioned
-    * inverted lists) for corpus `d`, freshness-markered; returns the
-    * index directory. Shared by s11 (search) and s17 (incremental
-    * batch append — which treats this artifact as IMMUTABLE and adds
-    * a delta segment beside it).
+    * inverted lists) for corpus `d`; returns the index directory.
+    * Shared by s11 (search) and s17 (incremental batch append — which
+    * treats this artifact as IMMUTABLE and adds a delta segment beside
+    * it).
     */
-  private def ensureIvfIndex(s: SparkSession, d: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(d, "embeddings.parquet")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_ivfindex_" + graft.StagePath.corpusToken(d))
-    java.nio.file.Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(d, src, IvfIndexVersion)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      java.nio.file.Files.exists(dir.resolve("centroids")) &&
-      java.nio.file.Files.exists(dir.resolve("lists"))
-    if (!fresh) {
+  private def ensureIvfIndex(s: SparkSession, d: String): java.nio.file.Path =
+    graft.StagePath.staged(s, "ivfindex", d, Seq("embeddings.parquet"), IvfIndexVersion,
+        Seq("centroids", "lists")) { st =>
       val e = Tables.embeddings(s, d)
         .spreadToCores
       val centArr = centroidArrays(e)
-      // ADVICE r18: both artifacts stage via write-to-temp + rename
-      // (the r13 dedup-manifest discipline) — an in-place overwrite
-      // after a version bump let a concurrent warm reader observe a
-      // half-written directory behind the old marker window.
-      graft.StagePath.atomicSwapDir(dir.resolve("centroids")) { tmp =>
-        centArr.write.mode("overwrite").parquet(tmp.toString)
-      }
-      graft.StagePath.atomicSwapDir(dir.resolve("lists")) { tmp =>
+      st.write("centroids")(p => centArr.write.parquet(p.toString))
+      st.write("lists")(p =>
         assign(e.withColumn("norm_e", sqrt(VectorFunctions.dot("embedding", "embedding")))
             .filter(col("norm_e") > 0), // ANSI zero-norm guard (see s1)
             centArr, Seq("embedding", "norm_e"))
           .select(col("vec_id"), col("embedding"), col("norm_e"),
             col("cell").as("assigned_cell"))
-          .write.mode("overwrite").partitionBy("assigned_cell")
-          .parquet(tmp.toString)
-      }
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
+          .write.partitionBy("assigned_cell")
+          .parquet(p.toString))
     }
-    dir
-  }
 
   /** The persisted-index probe side: each query ranks the staged
     * centroids and keeps its 2 nearest cells (norm guard as in s1).
@@ -1650,39 +1630,27 @@ object Knn {
   private def s17(s: SparkSession, d: String): DataFrame = {
     val dir = ensureIvfIndex(s, d)
     val centArr = s.read.parquet(dir.resolve("centroids").toString)
-    // delta segment: staged beside (never inside) the base index
-    val src = java.nio.file.Paths.get(d, "embeddings.parquet")
-    val delta = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_ivfdelta_" + graft.StagePath.corpusToken(d))
-    java.nio.file.Files.createDirectories(delta)
-    val marker = delta.resolve("_src_meta")
-    // ADVICE r14: fold the BASE index version into the delta marker —
-    // the delta stores assignments computed against the persisted
-    // centroids, so a centroid/assignment-rule bump (IvfIndexVersion)
-    // must invalidate staged deltas too, or a warm tmpdir delta would
-    // silently mix old-rule assignments with a new-rule base.
-    val meta = graft.StagePath.srcMeta(d, src, IvfIndexVersion + ":" + IvfDeltaVersion)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      java.nio.file.Files.exists(delta.resolve("lists"))
-    if (!fresh) {
+    // delta segment: staged beside (never inside) the base index. Its
+    // version folds in the BASE index version: the delta stores
+    // assignments computed against the persisted centroids, so a
+    // centroid/assignment-rule bump must invalidate staged deltas too,
+    // or a warm delta would mix old-rule assignments with a new-rule
+    // base.
+    val delta = graft.StagePath.staged(s, "ivfdelta", d, Seq("embeddings.parquet"),
+        IvfIndexVersion + ":" + IvfDeltaVersion, Seq("lists")) { st =>
       val batch = Tables.embeddings(s, d).filter(col("vec_id") % 10 === 0)
         .select((col("vec_id") + lit(1000000L)).as("vec_id"),
           lit(null).cast("int").as("label"),
           expr(PerturbedBatchExpr).as("embedding"))
-      // ADVICE r18: staged via temp + rename like the base index
-      graft.StagePath.atomicSwapDir(delta.resolve("lists")) { tmp =>
+      st.write("lists")(p =>
         assign(batch
             .withColumn("norm_e", sqrt(VectorFunctions.dot("embedding", "embedding")))
             .filter(col("norm_e") > 0),
             centArr, Seq("embedding", "norm_e"))
           .select(col("vec_id"), col("embedding"), col("norm_e"),
             col("cell").as("assigned_cell"))
-          .write.mode("overwrite").partitionBy("assigned_cell")
-          .parquet(tmp.toString)
-      }
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
+          .write.partitionBy("assigned_cell")
+          .parquet(p.toString))
     }
     val probes = indexProbes(s, d, centArr)
     val probedCells = probes.select(col("probe_cell")).distinct()

@@ -23,96 +23,61 @@ object StreamingOps {
     StructField("value", DoubleType), StructField("props", StringType)))
 
   /** Bumped whenever [[stageEventSplits]]' output depends on new logic
-    * (e.g. the Tables.events ts-normalization): folded into the marker
-    * string so staged files from an older logic version re-stage
-    * instead of being silently served (the ADVICE-r9 freshness rule).
-    */
+    * (e.g. the Tables.events ts-normalization), so files staged by an
+    * older logic re-stage instead of being served. */
   private val StagedEventsVersion = "tsnanos2"
 
-  /** The shared split-write protocol of every stager in this file
-    * (events / time-ordered events / docs / admit docs / embeddings):
-    * wipe the stale staging, write each split as ONE parquet landing
-    * file with strictly increasing mtimes (the file source admits
-    * oldest-first, so admission order is pinned), clean up the
-    * `_work` scratch dir. The wipe is RECURSIVE (depth-first): a
-    * staging that crashed mid-write leaves a NON-EMPTY `_work`
-    * subdir, and the flat `deleteIfExists` this replaces threw
-    * DirectoryNotEmptyException on it — wedging every re-stage of
-    * that corpus until manual tmpdir surgery. */
-  private def writeLandingSplits(dir: java.nio.file.Path,
+  /** Writes the `landing` artifact every stager here shares: split k
+    * as ONE parquet file named `fileName(k)`, with strictly increasing
+    * mtimes (the file source admits oldest-first, so admission order
+    * is pinned). The directory is swapped in whole, so it holds exactly
+    * this staging's files, and the rename keeps their mtimes. */
+  private def writeLandingSplits(st: graft.StagePath.Build,
       src: java.nio.file.Path, nFiles: Int,
-      fileName: Int => String, split: Int => DataFrame): Unit = {
-    val stale = java.nio.file.Files.walk(dir)
-    try stale.sorted(java.util.Comparator.reverseOrder())
-      .filter(p => p != dir)
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally stale.close()
-    val work = dir.resolve("_work")
-    val baseMs = java.nio.file.Files.getLastModifiedTime(src).toMillis
-    for (k <- 0 until nFiles) {
-      split(k).coalesce(1).write.mode("overwrite").parquet(work.toString)
-      val partFile = {
-        val l = java.nio.file.Files.list(work)
-        try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally l.close()
+      fileName: Int => String, split: Int => DataFrame): Unit =
+    st.write("landing") { dir =>
+      val work = dir.resolve("_work")
+      val baseMs = java.nio.file.Files.getLastModifiedTime(src).toMillis
+      for (k <- 0 until nFiles) {
+        split(k).coalesce(1).write.mode("overwrite").parquet(work.toString)
+        val partFile = {
+          val l = java.nio.file.Files.list(work)
+          try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
+            .findFirst().get()
+          finally l.close()
+        }
+        val dst = dir.resolve(fileName(k))
+        java.nio.file.Files.move(partFile, dst)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(baseMs + k * 1000L))
       }
-      val dst = dir.resolve(fileName(k))
-      java.nio.file.Files.move(partFile, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(baseMs + k * 1000L))
+      graft.StagePath.deleteRecursively(work)
     }
-    if (java.nio.file.Files.exists(work)) {
-      val l = java.nio.file.Files.list(work)
-      try l.forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally l.close()
-      java.nio.file.Files.deleteIfExists(work)
-    }
-  }
+
+  /** Stages corpus table `source` as `nFiles` landing files named
+    * `b<k>.parquet` and returns the landing directory. The file count
+    * is part of the directory name: the reader admits every file in
+    * the directory, so a staging under another count must never share
+    * it. */
+  private def stageLanding(s: SparkSession, d: String, name: String,
+      source: String, version: String, nFiles: Int)(
+      split: Int => DataFrame): java.nio.file.Path =
+    graft.StagePath.staged(s, name, d, Seq(source), version, Seq("landing"),
+        s"_n$nFiles") { st =>
+      writeLandingSplits(st, java.nio.file.Paths.get(d, source), nFiles,
+        k => s"b$k.parquet", split)
+    }.resolve("landing")
 
   /** Stage the events table into a landing directory as `nFiles`
-    * parquet files split by `event_id % nFiles` (mtimes strictly
-    * increasing in split order — the file source admits oldest-first,
-    * so admission order is pinned). The write goes through
+    * parquet files split by `event_id % nFiles`. The write goes through
     * [[graft.Tables.events]], so the staged `ts` is the engine-wide
     * epoch-nanos Long whatever the source file's physical timestamp
-    * type, and matches [[eventsSchema]]. A `_src_meta` marker (source
-    * size:mtime + [[StagedEventsVersion]]) keeps re-staging idempotent
-    * and stale-proof.
+    * type, and matches [[eventsSchema]].
     */
   private def stageEventSplits(s: SparkSession, d: String,
-      prefix: String, nFiles: Int): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(d, "events.parquet")
-    // the file COUNT is part of the staged artifact's identity
-    // (stagedAdmitInputs' `_n` tag discipline): the glob reader admits
-    // every b*.parquet, so an 8-file staging sharing a 4-file dir
-    // would silently turn st8/st11 into 8-micro-batch queries (an
-    // 8-file run leaves b0..b7 behind, the b0..b3 freshness check
-    // passes, and st8 computes a different watermark trajectory at
-    // double the wall). Separate dirs per count, plus the exact-set
-    // check below as defense in depth.
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      prefix + graft.StagePath.corpusToken(d) + s"_n$nFiles")
-    java.nio.file.Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    // StagePath.srcMeta embeds the corpus path in the payload (ADVICE
-    // r13: the streaming stagers had adopted the MD5 directory token
-    // but kept size+mtime-only markers — the second half of the
-    // collision fix every batch-side stager already carries)
-    val meta = graft.StagePath.srcMeta(d, src, StagedEventsVersion)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      (0 until nFiles).forall(k => java.nio.file.Files.exists(dir.resolve(s"b$k.parquet"))) &&
-      !java.nio.file.Files.exists(dir.resolve(s"b$nFiles.parquet"))
-    if (!fresh) {
-      writeLandingSplits(dir, src, nFiles, k => s"b$k.parquet",
-        k => graft.Tables.events(s, d).filter(col("event_id") % nFiles === k))
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
-    }
-    dir
-  }
+      name: String, nFiles: Int): java.nio.file.Path =
+    stageLanding(s, d, name, "events.parquet", StagedEventsVersion, nFiles)(k =>
+      graft.Tables.events(s, d).filter(col("event_id") % nFiles === k))
 
   /** The bounded event stream, staged as EXACTLY ONE file so the whole
     * input lands in a single micro-batch. Several oracle equalities
@@ -120,16 +85,11 @@ object StreamingOps {
     * batch distinct only while the watermark never advances mid-run
     * (multi-batch staging could drop late rows or re-emit out-of-window
     * duplicates), and the append-mode queries emit their final window
-    * only because one batch closes it. [[stageEventSplits]] wipes stray
-    * files, preserving the single-batch invariant; the glob filter
-    * keeps the marker out of the stream.
+    * only because one batch closes it.
     */
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val dir = stageEventSplits(s, d, "graft_stream_", 1)
+  private def eventsStream(s: SparkSession, d: String): DataFrame =
     s.readStream.schema(eventsSchema)
-      .option("pathGlobFilter", "b*.parquet")
-      .parquet(dir.toString)
-  }
+      .parquet(stageEventSplits(s, d, "stream", 1).toString)
 
   /** The bounded event stream staged as FOUR files (split by
     * `event_id % 4`, mtimes strictly increasing in split order) read
@@ -139,14 +99,10 @@ object StreamingOps {
     * full time range) genuinely drop, and the drop/emit sequence — and
     * therefore st8's oracle — is deterministic.
     */
-  private def eventsStreamMulti(s: SparkSession, d: String, nFiles: Int): DataFrame = {
-    val dir = stageEventSplits(s, d, "graft_stream_multi_", nFiles)
+  private def eventsStreamMulti(s: SparkSession, d: String, nFiles: Int): DataFrame =
     s.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1")
-      // only the staged batch files — never the marker
-      .option("pathGlobFilter", "b*.parquet")
-      .parquet(dir.toString)
-  }
+      .parquet(stageEventSplits(s, d, "stream_multi", nFiles).toString)
 
   private val docsStreamSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType),
@@ -164,44 +120,23 @@ object StreamingOps {
     * `maxFilesPerTrigger=1` — the document-side twin of
     * [[eventsStreamMulti]], for stateless ingest-time transforms
     * (st12) whose oracle is the batch query over the whole table.
-    * Same `_src_meta` freshness discipline as every stager here.
     */
   private def docsStreamMulti(s: SparkSession, d: String, nFiles: Int): DataFrame = {
-    val src = java.nio.file.Paths.get(d, "documents.parquet")
-    // file count in the dir identity + exact-set check, like
-    // stageEventSplits (the glob reader admits every b*.parquet)
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_alldocs_" + graft.StagePath.corpusToken(d) + s"_n$nFiles")
-    java.nio.file.Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    // srcMeta (corpus path embedded) + a version token, per the ADVICE
-    // r13 marker-consistency fix
-    // version bump alldocs1 -> alldocs2: the staged rows gained `lang`
-    // (st13 derives chat requests, whose model policy reads it);
-    // alldocs2 -> alldocs3: gained `source` (st17's URL gate plants
-    // the provenance URL from it)
-    val meta = graft.StagePath.srcMeta(d, src, "alldocs3")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      (0 until nFiles).forall(k => java.nio.file.Files.exists(dir.resolve(s"b$k.parquet"))) &&
-      !java.nio.file.Files.exists(dir.resolve(s"b$nFiles.parquet"))
-    if (!fresh) {
-      writeLandingSplits(dir, src, nFiles, k => s"b$k.parquet",
-        k => graft.Tables.documents(s, d)
-          .filter(col("doc_id") % nFiles === k)
-          .select(col("doc_id"), col("text"), col("lang"), col("source")))
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
-    }
+    // alldocs2: the staged rows gained `lang` (st13 derives chat
+    // requests, whose model policy reads it); alldocs3: gained `source`
+    // (st17's URL gate plants the provenance URL from it)
+    val dir = stageLanding(s, d, "stream_alldocs", "documents.parquet", "alldocs3", nFiles)(k =>
+      graft.Tables.documents(s, d)
+        .filter(col("doc_id") % nFiles === k)
+        .select(col("doc_id"), col("text"), col("lang"), col("source")))
     s.readStream.schema(docsStreamFullSchema)
       .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "b*.parquet")
       .parquet(dir.toString)
   }
 
   /** st9's staged inputs: the "today's ingest" document stream (the
-    * newest ~20% by id — d12's split rule — as ONE parquet file in a
-    * landing directory) plus the two dedup manifests PERSISTED to
+    * newest ~20% by id — d12's split rule — as `nFiles` landing files)
+    * plus the two dedup manifests and the Bloom bitmap PERSISTED to
     * parquet, exactly the state a nightly sweep leaves behind for the
     * next day's continuous admission ([[graft.dedup.Dedup.d12Manifests]];
     * mirrors the reference's persisted-results resume,
@@ -210,95 +145,70 @@ object StreamingOps {
     * session's full parallelism, not the stream's reduced
     * [[StreamPartitions]] regime. The split scalar is a metadata-sized
     * driver aggregate (same class as t10's documented max-id scalar) —
-    * staging is an eager filesystem write anyway. A `_src_meta` marker
-    * keeps re-staging idempotent and stale-proof ([[eventsStreamMulti]]).
-    * Manifests live in a SIBLING directory so the file stream source
-    * can never admit them as stream input.
+    * staging is an eager filesystem write anyway. The manifests are
+    * siblings of `landing/`, so the file stream source never admits
+    * them. The marker's version folds in the manifest logic token (a
+    * d12Manifests/signature change must re-stage, or st9 fails its
+    * d12-verbatim oracle) and the Bloom width (st10 probing a bitmap of
+    * another width yields wrong bloom_maybe values, including Bloom
+    * FALSE NEGATIVES).
     */
   private def stagedAdmitInputs(s: SparkSession, d: String,
       nFiles: Int = 1, filesPerTrigger: Int = 1)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val src = java.nio.file.Paths.get(d, "documents.parquet")
-    val base = System.getProperty("java.io.tmpdir")
-    val tag = graft.StagePath.corpusToken(d) + (if (nFiles > 1) s"_n$nFiles" else "")
-    val dir = java.nio.file.Paths.get(base, "graft_stream_docs_" + tag)
-    val mdir = java.nio.file.Paths.get(base, "graft_stream_docs_" + tag + "_manifests")
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.createDirectories(mdir)
-    val marker = mdir.resolve("_src_meta")
-    // source identity PLUS manifest-logic version (ADVICE r9): without
-    // the token, a d12Manifests/signature change silently reuses stale
-    // staged manifests and st9 fails its d12-verbatim oracle confusingly.
-    // PLUS the Bloom width (ADVICE r10): a bloom_manifest staged under
-    // another width must force a re-stage — st10 probing a bitmap of
-    // the wrong width yields wrong bloom_maybe values, including Bloom
-    // FALSE NEGATIVES.
-    val meta = graft.StagePath.srcMeta(d, src,
-      graft.dedup.Dedup.manifestLogicToken + ":b" + graft.dedup.Dedup.BloomBitsLog2)
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      (0 until nFiles).forall(k => java.nio.file.Files.exists(dir.resolve(s"new_docs_$k.parquet"))) &&
-      !java.nio.file.Files.exists(dir.resolve(s"new_docs_$nFiles.parquet"))
-    if (!fresh) {
+    val manifests = Seq("fp_manifest", "sig_manifest", "bloom_manifest")
+    val dir = graft.StagePath.staged(s, "stream_docs", d, Seq("documents.parquet"),
+        graft.dedup.Dedup.manifestLogicToken + ":b" + graft.dedup.Dedup.BloomBitsLog2,
+        "landing" +: manifests, if (nFiles > 1) s"_n$nFiles" else "") { st =>
       val docs = graft.Tables.documents(s, d).filter(col("doc_id").isNotNull)
       val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
       // division-first split, matching d12's overflow-proof rule
-      writeLandingSplits(dir, src, nFiles, k => s"new_docs_$k.parquet",
+      writeLandingSplits(st, java.nio.file.Paths.get(d, "documents.parquet"), nFiles,
+        k => s"new_docs_$k.parquet",
         k => docs.filter(col("doc_id") > lit(mx - mx / 5))
           .filter(col("doc_id") % nFiles === k)
           .select(col("doc_id"), col("text")))
       val (fpM, sigM) = graft.dedup.Dedup.d12Manifests(s, d)
-      fpM.write.mode("overwrite").parquet(mdir.resolve("fp_manifest").toString)
-      sigM.write.mode("overwrite").parquet(mdir.resolve("sig_manifest").toString)
-      // the sweep also leaves the Bloom bitmap behind (st10's prefilter
-      // state — d17's build over the same fp manifest)
-      graft.dedup.Dedup.bloomWordsOf(fpM.select(col("fp")), graft.dedup.Dedup.BloomM)
-        .write.mode("overwrite").parquet(mdir.resolve("bloom_manifest").toString)
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
+      val written = Seq(
+        st.write("fp_manifest")(p => fpM.write.parquet(p.toString)),
+        st.write("sig_manifest")(p => sigM.write.parquet(p.toString)),
+        // the sweep also leaves the Bloom bitmap behind (st10's
+        // prefilter state — d17's build over the same fp manifest)
+        st.write("bloom_manifest")(p =>
+          graft.dedup.Dedup.bloomWordsOf(fpM.select(col("fp")), graft.dedup.Dedup.BloomM)
+            .write.parquet(p.toString)))
+      // a cached plan over the old manifests would serve them forever
+      // (a silent wrong answer): refreshByPath drops both the cached
+      // data and the file listing
+      written.foreach(p => s.catalog.refreshByPath(p.toString))
     }
     val reader = s.readStream.schema(docsStreamSchema)
-      .option("pathGlobFilter", "new_docs_*.parquet")
     // nFiles landing files drained filesPerTrigger at a time: the
     // default (1) is the multi-batch regime; filesPerTrigger > 1 is
     // the production landing shape — a trigger never sees exactly one
-    // file in a real landing dir (r12 verdict #7), and the stateless
-    // admission paths must be file-count-invariant per trigger too
+    // file in a real landing dir, and the stateless admission paths
+    // must be file-count-invariant per trigger too
     val multi =
       if (nFiles > 1) reader.option("maxFilesPerTrigger", filesPerTrigger.toString)
       else reader
-    // The manifest side is STATIC across the life of the stream (the
-    // freshness marker owns its identity), yet a stream-static join
-    // re-executes the batch side every micro-batch — at N landing
-    // files per day that is N parquet scans + decodes of the same
-    // manifests (VERDICT r13 #5: the measured st9/st10 per-batch
-    // floor). Persisting them amortizes the scan to once per process;
-    // MEMORY_AND_DISK because a production fp manifest is
-    // corpus-admitted-sized. A re-stage rewrote the files, so any
-    // previously cached plan over these paths must be invalidated
-    // FIRST (refreshByPath drops both the cached data and the file
-    // listing) — without it the cache would serve the pre-sweep
-    // manifests forever, a silent wrong-answer, not a perf bug.
-    if (!fresh)
-      for (mp <- Seq("fp_manifest", "sig_manifest", "bloom_manifest"))
-        s.catalog.refreshByPath(mdir.resolve(mp).toString)
-    // Persist is gated on the BATCHING REGIME (r15, VERDICT r14 #1):
-    // the cache amortizes the static-side scan across micro-batches,
-    // so with one staged file (= one data micro-batch) there is
-    // nothing to amortize and the persist is pure overhead — build the
-    // cache, read it once, release it. The r14 unconditional persist
-    // was the measured st9/st10 full-sweep regression (1.67x/1.52x vs
-    // a 1.22x host median); the isolated A/B confirmed on≈off at both
-    // sf0.1 and sf1 for the single-file regime. Multi-file runs
-    // (st9Multi/st10Multi, and any unbounded production landing dir)
-    // re-read the manifests every trigger and keep the persist.
+    // The manifest side is STATIC across the life of the stream, yet a
+    // stream-static join re-executes the batch side every micro-batch —
+    // at N landing files per day that is N parquet scans + decodes of
+    // the same manifests. With one staged file (= one data micro-batch)
+    // there is nothing to amortize and a persist is pure overhead
+    // (measured: st9/st10 1.67x/1.52x slower with it, on≈off at sf0.1
+    // and sf1 for the single-file regime). Multi-file runs (and any
+    // unbounded production landing dir) re-read the manifests every
+    // trigger and persist them, MEMORY_AND_DISK because a production
+    // fp manifest is corpus-admitted-sized.
     def manifest(name: String): DataFrame = {
-      val df = s.read.parquet(mdir.resolve(name).toString)
+      val df = s.read.parquet(dir.resolve(name).toString)
       if (nFiles > 1 &&
           df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df
     }
-    (multi.parquet(dir.toString),
+    (multi.parquet(dir.resolve("landing").toString),
       manifest("fp_manifest"), manifest("sig_manifest"), manifest("bloom_manifest"))
   }
 
@@ -657,30 +567,17 @@ object StreamingOps {
     * time-ordered from the bus anyway).
     */
   private def eventsStreamTimeOrdered(s: SparkSession, d: String, nFiles: Int): DataFrame = {
-    val src = java.nio.file.Paths.get(d, "events.parquet")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_torder_" + graft.StagePath.corpusToken(d) + s"_n$nFiles")
-    java.nio.file.Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(d, src, StagedEventsVersion + "_torder1")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      (0 until nFiles).forall(k => java.nio.file.Files.exists(dir.resolve(s"b$k.parquet"))) &&
-      !java.nio.file.Files.exists(dir.resolve(s"b$nFiles.parquet"))
-    if (!fresh) {
-      val ranked = graft.Tables.events(s, d).withColumn("_tile",
-        ntile(nFiles).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("event_id"))) - 1)
-      writeLandingSplits(dir, src, nFiles, k => s"b$k.parquet",
-        k => ranked.filter(col("_tile") === k).drop("_tile"))
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
-    }
+    lazy val ranked = graft.Tables.events(s, d).withColumn("_tile",
+      ntile(nFiles).over(org.apache.spark.sql.expressions.Window
+        .orderBy(col("ts"), col("event_id"))) - 1)
+    val dir = stageLanding(s, d, "stream_torder", "events.parquet",
+        StagedEventsVersion + "_torder1", nFiles)(k =>
+      ranked.filter(col("_tile") === k).drop("_tile"))
     s.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "b*.parquet")
       .parquet(dir.toString)
   }
+
 
   /** st19: stream-stream AS-OF join — each purchase matched to the
     * same user's LATEST click at-or-before it, the streaming analogue
@@ -1313,34 +1210,20 @@ object StreamingOps {
     StructField("label", IntegerType)))
 
   /** The embedding corpus staged as `nFiles` landing files (split by
-    * `vec_id % nFiles`, strictly increasing mtimes, `_src_meta`
-    * freshness marker) read with `maxFilesPerTrigger=1` — the
+    * `vec_id % nFiles`, strictly increasing mtimes) read with
+    * `maxFilesPerTrigger=1` — the
     * vector-side twin of [[eventsStreamMulti]]/[[docsStreamMulti]],
     * for st21's ingest-time index admission. */
   private def embeddingsStreamMulti(s: SparkSession, d: String, nFiles: Int): DataFrame = {
-    val src = java.nio.file.Paths.get(d, "embeddings.parquet")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_embed_" + graft.StagePath.corpusToken(d) + s"_n$nFiles")
-    java.nio.file.Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    val meta = graft.StagePath.srcMeta(d, src, "embed1")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta &&
-      (0 until nFiles).forall(k => java.nio.file.Files.exists(dir.resolve(s"b$k.parquet"))) &&
-      !java.nio.file.Files.exists(dir.resolve(s"b$nFiles.parquet"))
-    if (!fresh) {
-      writeLandingSplits(dir, src, nFiles, k => s"b$k.parquet",
-        k => graft.Tables.embeddings(s, d)
-          .filter(col("vec_id") % nFiles === k)
-          .select(col("vec_id"), col("embedding"), col("label")))
-      java.nio.file.Files.write(marker, meta.getBytes("UTF-8"))
-    }
+    val dir = stageLanding(s, d, "stream_embed", "embeddings.parquet", "embed1", nFiles)(k =>
+      graft.Tables.embeddings(s, d)
+        .filter(col("vec_id") % nFiles === k)
+        .select(col("vec_id"), col("embedding"), col("label")))
     s.readStream.schema(embeddingsStreamSchema)
       .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "b*.parquet")
       .parquet(dir.toString)
   }
+
 
   /** st21: STREAMING IVF admission — the online half of the persisted
     * vector-index lifecycle (s11 builds offline, s17 admits batches;

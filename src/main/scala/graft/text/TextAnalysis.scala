@@ -1676,42 +1676,23 @@ object TextAnalysis {
     merges.result()
   }
 
-  /** Version token for the staged merge table (s11's freshness rule). */
+  /** Version token for the staged merge table. */
   private[graft] val BpeVersion = "bpe2" // bpe1 -> bpe2: BpeTrainCap added
 
   /** The learned merge table for a corpus, staged once: a production
     * tokenizer is trained once and REUSED by every consumer, so t20
     * (the fertility report) and t22 (packing) share one training run
-    * through a persisted 8-row table behind a `_src_meta` marker
-    * (source size+mtime+[[BpeVersion]] — the s11/d16/d20 discipline;
-    * a stale marker retrains). Symbols contain no whitespace, so the
-    * TSV round-trip is exact. */
+    * through a persisted 8-row table. Symbols contain no whitespace,
+    * so the TSV round-trip is exact. */
   private[graft] def mergesFor(s: SparkSession, d: String): Seq[(String, String)] = {
-    import java.nio.file.Files
-    val src = java.nio.file.Paths.get(d, "documents.parquet")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_bpe_" + graft.StagePath.corpusToken(d))
-    Files.createDirectories(dir)
-    val marker = dir.resolve("_src_meta")
-    val table = dir.resolve("merges.tsv")
-    val meta = graft.StagePath.srcMeta(d, src, BpeVersion)
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == meta &&
-      Files.exists(table)
-    if (!fresh) {
+    val dir = graft.StagePath.staged(s, "bpe", d, Seq("documents.parquet"), BpeVersion,
+        Seq("merges.tsv")) { st =>
       val merges = bpeTrain(s, d)
-      // tmp + atomic rename (ADVICE r13's staging-race note): a
-      // concurrent reader sees the old table or the new one, never a
-      // torn write
-      val tmp = table.resolveSibling("merges.tsv.tmp")
-      Files.write(tmp,
-        merges.map { case (a, b) => s"$a\t$b" }.mkString("\n").getBytes("UTF-8"))
-      Files.move(tmp, table, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      Files.write(marker, meta.getBytes("UTF-8"))
+      st.write("merges.tsv")(p => java.nio.file.Files.write(p,
+        merges.map { case (a, b) => s"$a\t$b" }.mkString("\n").getBytes("UTF-8")))
     }
-    new String(Files.readAllBytes(table), "UTF-8").split("\n").toSeq
+    new String(java.nio.file.Files.readAllBytes(dir.resolve("merges.tsv")), "UTF-8")
+      .split("\n").toSeq
       .map { l => val Array(a, b) = l.split("\t", 2); (a, b) }
   }
 

@@ -42,6 +42,11 @@ class DedupPlanSpec extends SparkSpec {
     val after = java.nio.file.Files
       .getLastModifiedTime(dir.resolve("labels")).toMillis
     assert(after > before, "stale marker must rebuild the label store itself")
+    // a missing label store behind a current marker re-stages too
+    val restaged = withoutArtifact(dir, "labels")(
+      SparkEntry.queries("d20_cross_batch_cluster")(spark, sf).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))))
+    assert(restaged.toSeq == out.toSeq, "re-staging the label store changed the labels")
   }
 
   test("d23 token grams catch the 8-word plant d22 provably misses; d22 drops are a subset") {
@@ -557,6 +562,10 @@ class DedupPlanSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(probe), "stale marker did not force a re-sweep")
     assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == current)
     assert(rebuilt == out1, "re-sweep changed the admit verdicts")
+    // a missing manifest behind a current marker re-sweeps too
+    val restaged = withoutArtifact(stage, "fp_manifest")(
+      SparkEntry.queries("d16_manifest_admit")(spark, sf).collect().toSet)
+    assert(restaged == out1, "re-staging a missing manifest changed the admit verdicts")
   }
 
   test("d16 admit stage reads parquet manifests with zero re-clustering lineage") {
@@ -777,7 +786,7 @@ class DedupPlanSpec extends SparkSpec {
           ((r.getBoolean(2), r.getBoolean(3), r.getBoolean(4)))).toMap
     val marker = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
-      "graft_stream_docs_" + StagePath.corpusToken(dir) + "_manifests", "_src_meta")
+      "graft_stream_docs_" + StagePath.corpusToken(dir), "_src_meta")
     def meta(): String = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
     runBloom("st10_stream_bloom")
     // the srcMeta payload ends with the corpus path (ADVICE r13); the
@@ -787,6 +796,9 @@ class DedupPlanSpec extends SparkSpec {
     java.nio.file.Files.write(marker, meta().replace(s":b14:$dir", s":b6:$dir").getBytes("UTF-8"))
     val st10 = runBloom("st10_stream_bloom")
     assert(meta().endsWith(s":b14:$dir"), s"stale width did not force a re-stage: ${meta()}")
+    // a missing bitmap behind a current marker re-stages too
+    assert(withoutArtifact(marker.getParent, "bloom_manifest")(runBloom("st10_stream_bloom")) == st10,
+      "re-staging a missing Bloom bitmap changed st10")
     // the persisted bitmap st10 probes matches d17's live build
     val d17 = runBloom("d17_bloom_admit")
     assert(st10 == d17, s"st10 diverged from d17: $st10 vs $d17")

@@ -40,4 +40,12 @@ class DevSpec extends SparkSpec {
     assert(stages.forall(!_.contains("CompletableFuture")), stages.mkString("\n"))
     assert(stages.exists(_.contains("Exchange")), stages.mkString("\n"))
   }
+
+  test("the job log names g14's workflow actions by their job descriptions") {
+    val (_, log) = Dev.withJobLog(spark)(Dev.explain(SparkEntry.queries("g14_workflow_run")(spark, sf)))
+    val jobs = log.filter(_.trim.startsWith("job "))
+    for (action <- Seq("materialize requests", "write input", "write manifest",
+        "save results", "save errors"))
+      assert(jobs.exists(_.endsWith(s"ms  $action")), s"no '$action' job in:\n${jobs.mkString("\n")}")
+  }
 }

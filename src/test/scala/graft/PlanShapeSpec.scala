@@ -335,7 +335,7 @@ class PlanShapeSpec extends SparkSpec {
     // and the pruned layout genuinely has many partitions to skip
     val stage = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
-      "graft_partitioned_" + StagePath.corpusToken(sf))
+      "graft_partitioned_" + StagePath.corpusToken(sf), "layout")
     val listing = java.nio.file.Files.list(stage)
     val months =
       try listing.filter(x => x.getFileName.toString.startsWith("ship_month=")).count()
@@ -625,6 +625,10 @@ class PlanShapeSpec extends SparkSpec {
       "a marker with another bucket count did not force a layout re-write")
     assert(rebuilt == out1, "the re-written layout changed the RESULT")
     assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == meta)
+    // a missing bucketed table behind a current marker re-writes too
+    val restaged = withoutArtifact(stage, "graft_q27_orders")(
+      SparkEntry.queries("q27_bucketed_join")(spark, sf).collect().toSeq)
+    assert(restaged == out1, "re-staging a missing bucketed table changed the RESULT")
   }
 
   test("s12 range search is rank-free: no window, no top-k heap, broadcast probes") {
@@ -752,6 +756,10 @@ class PlanShapeSpec extends SparkSpec {
       s"stale marker must trigger an actual index rebuild " +
         s"(lists mtime $listsBefore -> $listsAfter)")
     assert(rows.nonEmpty)
+    // a missing centroid set behind a current marker re-stages too
+    val restaged = withoutArtifact(dir, "centroids")(
+      SparkEntry.queries("s11_ivf_persist")(spark, sf).collect())
+    assert(restaged.toSeq == rows.toSeq, "re-staging the centroids changed the search")
   }
 
   test("packing prefix sums plan NO unpartitioned window (t10/t15/m7, r11 verdict #4)") {

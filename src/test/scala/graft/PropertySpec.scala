@@ -200,6 +200,9 @@ class PropertySpec extends SparkSpec {
       .getLastModifiedTime(dir.resolve("merges.tsv")).toMillis
     assert(after > before, "stale marker must retrain the merge table")
     assert(again.size == text.TextAnalysis.BpeMerges)
+    // a missing merge table behind a current marker retrains too
+    assert(withoutArtifact(dir, "merges.tsv")(text.TextAnalysis.mergesFor(spark, sf)) == again,
+      "retraining a missing merge table changed it")
   }
 
   test("m8 interleaved packing conserves byte and token mass") {

@@ -49,6 +49,17 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(l)
   }
 
+  /** Deletes the staged artifact `name` under `dir`, keeping its
+    * marker, and runs `f`: the stager must rebuild what a marker alone
+    * cannot prove exists. */
+  def withoutArtifact[T](dir: java.nio.file.Path, name: String)(f: => T): T = {
+    assert(java.nio.file.Files.exists(dir.resolve("_src_meta")), s"no marker under $dir")
+    StagePath.deleteRecursively(dir.resolve(name))
+    val r = f
+    assert(java.nio.file.Files.exists(dir.resolve(name)), s"$name was not re-staged under $dir")
+    r
+  }
+
   /** Collect matching nodes from an executed plan, descending through
     * the AQE wrappers (AdaptiveSparkPlanExec / QueryStageExec are leaf
     * nodes to TreeNode.collect, hiding the real operators).
