@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -9,8 +10,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * narrows accordingly (verified via explain: PushedFilters/ReadSchema).
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Reads with the schema taken from one footer on the driver
+    * ([[ParquetSchemaBridge.inferredSchema]]), the schema inference
+    * would give, so loading a table runs no Spark job. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(ParquetSchemaBridge.inferredSchema(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -375,11 +375,13 @@ object GenAI {
     * end state relationally, so the driver literally checks
     * "run + resume over partial state ≡ one logical pass".
     *
-    * Scale: each run evaluates its input subtree once (see
-    * [[BatchWorkflow]]). The query runs 18 jobs while it is built —
-    * the corpus scan's schema read, the verdict materialization, the
-    * initial run's 7 and the resume's 9 — and 1 when executed; the
-    * resume anti-join is a doc_id equi-join against the
+    * Scale: each run evaluates its input subtree once, in its input
+    * write (see [[BatchWorkflow]]). The query runs 6 jobs while it is
+    * built — the verdict checkpoint, the initial run's 2 and the
+    * resume's 3 (its anti-join against the saved outputs adds one) —
+    * and 1 when executed. The valid documents are a per-row filter on
+    * the same validation rule, so neither run joins back to the
+    * verdicts; the resume anti-join is a doc_id equi-join against the
     * saved outputs, no driver-side id set. The staging write is priced
     * in-query (the q27 pattern).
     */
@@ -391,17 +393,16 @@ object GenAI {
     // run's outputs, never files from an older logic version
     graft.StagePath.deleteRecursively(prefix)
     val docs = Tables.documents(s, d).filter(col("doc_id").isNotNull)
-    // r20 (guide §2.4): the validation verdicts feed the valid-id
-    // semi-join (which BOTH workflow runs re-read) and the rejected
-    // tail — materialized once (doc-level verdict metadata). The corpus
-    // max id (one verdict per doc) is observed on the same job.
+    // The verdicts (doc-level metadata) feed the rejected tail and the
+    // corpus max id, observed on the one job that materializes them.
+    // The workflow runs select valid documents with a per-row filter
+    // on the same rule instead of joining back to them.
     val corpusMax = Observation()
     val validated = Validation.validate(Requests.chatRequests(docs))
       .select(col("doc_id"), col("is_valid"), col("reason"))
       .observe(corpusMax, max(col("doc_id")).as("mx"))
       .localCheckpoint()
-    val validDocs = docs.join(
-      validated.filter(col("is_valid")).select(col("doc_id")), Seq("doc_id"))
+    val validDocs = Validation.validDocuments(docs)
     // division-first split form cannot ANSI-overflow
     val mx = corpusMax.get("mx").asInstanceOf[Long]
     val initial = BatchWorkflow.run(
@@ -423,7 +424,7 @@ object GenAI {
         StructField("error_message", StringType),
         StructField("prompt_tokens", LongType),
         StructField("completion_tokens", LongType)))
-      Jsonl.read(s, path, schema)
+      Jsonl.read(s, schema, path)
         .select(col("doc_id"), col("content"), col("error_message"),
           col("prompt_tokens"), col("completion_tokens"))
         .withColumn("phase", lit(phase))

@@ -1,7 +1,8 @@
 package graft.genai
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Batch request construction — the Spark-native form of the
   * reference's `_create_request` (openai_batch_processor.py:79,
@@ -21,24 +22,37 @@ object Requests {
   def modelFor(lang: Column): Column =
     when(lang === "en", lit("gpt-4.1-nano")).otherwise(lit("gpt-4o-mini"))
 
+  private val CustomIdPrefix = "request-"
+
+  /** A request's `custom_id`: `request-<doc_id>`. */
+  def customId(docId: Column): Column = concat(lit(CustomIdPrefix), docId)
+
+  /** The inverse of [[customId]]: everything after the prefix, as a
+    * bigint, so a negative id (`request--5`) comes back whole. */
+  def docIdOf(customId: Column): Column =
+    substr(customId, lit(CustomIdPrefix.length + 1)).cast("long")
+
   /** documents → flat request records (one per row). Columns:
     * doc_id, custom_id, method, url, model, system_content,
     * user_content, max_tokens, temperature.
     */
   def chatRequests(documents: DataFrame): DataFrame =
-    documents.select(
-      col("doc_id"),
-      concat(lit("request-"), col("doc_id")).as("custom_id"),
-      lit("POST").as("method"),
-      lit("/v1/chat/completions").as("url"),
-      modelFor(col("lang")).as("model"),
-      lit(SystemPrompt).as("system_content"),
-      concat(lit("Classify the following sentence: '"), col("text"), lit("'")).as("user_content"),
-      // max_tokens=0 on a sliver of rows: a deterministic invalid-request
-      // population so the validation operator has something to reject
-      // (mirrors the reference's pre-flight failure path).
-      when(col("doc_id") % 97 === 0, lit(0)).otherwise(lit(10)).as("max_tokens"),
-      lit(0.1).as("temperature"))
+    documents.select(col("doc_id") +: chatFields: _*)
+
+  /** The fields [[chatRequests]] derives from a document row, as
+    * columns over the documents: custom_id through temperature. */
+  def chatFields: Seq[Column] = Seq(
+    customId(col("doc_id")).as("custom_id"),
+    lit("POST").as("method"),
+    lit("/v1/chat/completions").as("url"),
+    modelFor(col("lang")).as("model"),
+    lit(SystemPrompt).as("system_content"),
+    concat(lit("Classify the following sentence: '"), col("text"), lit("'")).as("user_content"),
+    // max_tokens=0 on a sliver of rows: a deterministic invalid-request
+    // population so the validation operator has something to reject
+    // (mirrors the reference's pre-flight failure path).
+    when(col("doc_id") % 97 === 0, lit(0)).otherwise(lit(10)).as("max_tokens"),
+    lit(0.1).as("temperature"))
 
   /** Pre-formatted-messages pass-through — the multiple-choice-exam
     * recipe (examples/openai/run_multichoice_exam.py:37-59): the caller
@@ -50,7 +64,7 @@ object Requests {
   def examRequests(items: DataFrame, model: String = "gpt-4.1-nano"): DataFrame =
     items.select(
       col("doc_id"),
-      concat(lit("request-"), col("doc_id")).as("custom_id"),
+      customId(col("doc_id")).as("custom_id"),
       lit("POST").as("method"),
       lit("/v1/chat/completions").as("url"),
       lit(model).as("model"),
@@ -84,7 +98,7 @@ object Requests {
   def visualRequests(items: DataFrame, model: String = "gpt-4.1-nano"): DataFrame =
     items.select(
       col("doc_id"),
-      concat(lit("request-"), col("doc_id")).as("custom_id"),
+      customId(col("doc_id")).as("custom_id"),
       lit("POST").as("method"),
       lit("/v1/chat/completions").as("url"),
       lit(model).as("model"),
@@ -149,4 +163,23 @@ object Requests {
           ).as("messages"),
           col("max_tokens"),
           col("temperature")).as("body"))).as("line"))
+
+  private val LineSchema = StructType.fromDDL("custom_id STRING, method STRING, url STRING, " +
+    "body STRUCT<model: STRING, messages: ARRAY<STRUCT<role: STRING, content: STRING>>, " +
+    "max_tokens: INT, temperature: DOUBLE>")
+
+  /** The inverse of [[toJsonLines]]: the flat request records of
+    * [[chatRequests]] read back from written JSONL, with an explicit
+    * schema (no inference job) and `doc_id` recovered by [[docIdOf]]. */
+  def fromJsonLines(spark: SparkSession, path: String): DataFrame = {
+    val messages = col("body.messages")
+    Jsonl.read(spark, LineSchema, path).select(
+      docIdOf(col("custom_id")).as("doc_id"),
+      col("custom_id"), col("method"), col("url"),
+      col("body.model").as("model"),
+      messages.getItem(0).getField("content").as("system_content"),
+      messages.getItem(1).getField("content").as("user_content"),
+      col("body.max_tokens").as("max_tokens"),
+      col("body.temperature").as("temperature"))
+  }
 }

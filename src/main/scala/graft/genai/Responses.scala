@@ -1,6 +1,6 @@
 package graft.genai
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Response parsing — the Spark-native form of the reference's
@@ -17,8 +17,7 @@ object Responses {
   def parse(responses: DataFrame): DataFrame =
     responses.select(
       col("custom_id"),
-      // "request-<id>" → <id>, the reference's custom_id.split('-')[1]
-      split(col("custom_id"), "-").getItem(1).cast("long").as("doc_id"),
+      Requests.docIdOf(col("custom_id")).as("doc_id"),
       col("status_code"),
       get_json_object(col("body_json"), "$.model").as("model"),
       get_json_object(col("body_json"), "$.choices[0].message.content").as("content"),
@@ -26,7 +25,10 @@ object Responses {
       get_json_object(col("body_json"), "$.usage.completion_tokens").cast("long").as("completion_tokens"),
       col("error_message"))
 
-  /** results/errors split, as the reference returns `(results, errors)`. */
-  def results(parsed: DataFrame): DataFrame = parsed.filter(col("status_code") === 200)
-  def errors(parsed: DataFrame): DataFrame = parsed.filter(col("status_code") =!= 200)
+  /** results/errors split, as the reference returns `(results, errors)`:
+    * status 200 is a result, any other status an error, and a NULL
+    * status neither. */
+  def isResult: Column = col("status_code") === 200
+  def results(parsed: DataFrame): DataFrame = parsed.filter(isResult)
+  def errors(parsed: DataFrame): DataFrame = parsed.filter(!isResult)
 }

@@ -42,6 +42,13 @@ object Validation {
       .withColumn("is_valid", col("reason").isNull)
       .drop("_val")
 
+  /** The rows of `documents`, with their own columns, whose chat
+    * request ([[Requests.chatRequests]]) passes [[validate]]: a per-row
+    * filter. */
+  def validDocuments(documents: DataFrame): DataFrame =
+    validate(documents.select(col("*") +: Requests.chatFields: _*))
+      .filter(col("is_valid")).select(documents.columns.map(col): _*)
+
   /** Adds is_valid + reason (first failing rule, else NULL). */
   def validate(requests: DataFrame): DataFrame =
     requests

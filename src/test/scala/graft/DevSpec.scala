@@ -44,8 +44,7 @@ class DevSpec extends SparkSpec {
   test("the job log names g14's workflow actions by their job descriptions") {
     val (_, log) = Dev.withJobLog(spark)(Dev.explain(SparkEntry.queries("g14_workflow_run")(spark, sf)))
     val jobs = log.filter(_.trim.startsWith("job "))
-    for (action <- Seq("materialize requests", "write input", "write manifest",
-        "save results", "save errors"))
+    for (action <- Seq("write input", "save results and errors"))
       assert(jobs.exists(_.endsWith(s"ms  $action")), s"no '$action' job in:\n${jobs.mkString("\n")}")
   }
 }

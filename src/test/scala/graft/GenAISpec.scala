@@ -79,6 +79,37 @@ class GenAISpec extends SparkSpec {
     assert(row.getAs[String]("completion_window") == "24h")
     assert(row.getAs[String]("metadata") == "{}")
     assert(manifest.agg(org.apache.spark.sql.functions.sum(col("n_requests"))).head().getLong(0) == 96)
+    assert(manifest.orderBy("shard_id").select("n_requests").collect().map(_.getLong(0)).toSeq ==
+      Seq(24, 25, 25, 22))
+  }
+
+  test("a local frame written by the driver has the json writer's lines and runs no job") {
+    import spark.implicits._
+    val local = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1L, "a \"quoted\" \\ value\n", null),
+      org.apache.spark.sql.Row(null, "", 2.5)),
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, s STRING, x DOUBLE"))
+      .withColumn("meta", to_json(map(lit("k\""), lit("v"))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_local").toString
+    val (_, jobs) = jobsOf(Jsonl.writeLocal(local, s"$dir/local"))
+    assert(jobs.isEmpty, jobs)
+    local.write.json(s"$dir/spark")
+    def lines(p: String) = spark.read.text(p).as[String].collect().sorted.toSeq
+    assert(lines(s"$dir/local") == lines(s"$dir/spark"))
+    assert(new java.io.File(s"$dir/local/_SUCCESS").isFile)
+  }
+
+  test("observed shard counts equal a groupBy count, NULL doc_id included") {
+    import spark.implicits._
+    val ids = Seq[java.lang.Long](-30L, -1L, 0L, 3L, 24L, 25L, 26L, null, null, Long.MaxValue)
+    val in = ids.toDF("doc_id").repartition(3)
+    val grouped = Sharding.assign(in, 25).groupBy("shard_id").count()
+      .as[(Option[Long], Long)].collect().toSet
+    val counted = in.agg(Sharding.counts(25)).head().getSeq[org.apache.spark.sql.Row](0)
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1))).toSet
+    assert(counted == grouped)
+    assert(spark.emptyDataFrame.withColumn("doc_id", lit(1L)).agg(Sharding.counts(25))
+      .head().getSeq[org.apache.spark.sql.Row](0).isEmpty)
   }
 
   test("resume processes only documents without a saved result or error") {
@@ -112,25 +143,140 @@ class GenAISpec extends SparkSpec {
     val r = BatchWorkflow.run(docs.filter(col("doc_id") < 10), base)
     assert(r.finalStatus == "validation_failed")
     assert(r.results.isEmpty && r.errors.isEmpty)
+    // the input is written under a staging name and deleted on a halt:
+    // nothing counts as submitted
+    assert(leftovers(base) == Seq.empty)
+    assert(!new java.io.File(s"$base/input").exists())
+  }
+
+  /** What a workflow run left under `base` besides its outputs: the
+    * input staging directory and temporary split directories, at any
+    * depth. */
+  private def leftovers(base: String): Seq[String] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(base))
+    try s.toArray.toSeq.map(_.toString)
+      .filter(p => p.endsWith("_input_pending") || p.contains("/_split_"))
+    finally s.close()
+  }
+
+  test("negative, zero and extreme doc_ids come back from run") {
+    import spark.implicits._
+    val ids = Seq(-5L, 0L, Long.MinValue, Long.MaxValue)
+    val in = ids.map(i => (i, "fast value", "en")).toDF("doc_id", "text", "lang")
+    val base = java.nio.file.Files.createTempDirectory("graft_wf_ids").toString
+    val r = BatchWorkflow.run(in, base, validate = false)
+    val back = r.results.unionByName(r.errors).select("doc_id").as[Long].collect()
+    assert(back.sorted.toSeq == ids.sorted, back.mkString(","))
+    // the request file reads back to the same ids
+    assert(Requests.fromJsonLines(spark, s"$base/input").select("doc_id").as[Long]
+      .collect().sorted.toSeq == ids.sorted)
+  }
+
+  test("written requests read back to the request records") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_req_back").toString
+    val some = reqs.filter(col("doc_id") < 120)
+    Jsonl.writeLines(Requests.toJsonLines(some), dir)
+    val back = Requests.fromJsonLines(spark, dir)
+    assert(back.columns.toSeq == some.columns.toSeq)
+    assert(back.schema.map(_.dataType) == some.schema.map(_.dataType))
+    assert(back.exceptAll(some).isEmpty && some.exceptAll(back).isEmpty)
+  }
+
+  test("one save splits results and errors for jsonl, csv and parquet") {
+    val parsed = Responses.parse(Simulator.respond(reqs.filter(col("doc_id").between(1, 60))))
+    // a NULL status is neither a result nor an error, as the two
+    // filters treat it
+    val withNull = parsed.withColumn("status_code",
+      when(col("doc_id") === 7, lit(null).cast("int")).otherwise(col("status_code")))
+    val noErrors = withNull.filter(col("doc_id") =!= 53)
+    for (ext <- Seq("jsonl", "csv", "parquet"); (in, nErrors) <- Seq(withNull -> 1L, noErrors -> 0L)) {
+      val base = java.nio.file.Files.createTempDirectory("graft_split").toString
+      val (res, err) = (s"$base/results.$ext", s"$base/errors.$ext")
+      val (_, jobs) = jobsOf(ResultSink.saveSplit(in, Responses.isResult, res, err))
+      // an empty side is a zero-row save of its own
+      assert(jobs.size == (if (nErrors == 0) 2 else 1), s"$ext: $jobs")
+      val reader = spark.read.schema(in.schema)
+      def read(p: String) = (ext match {
+        case "csv" => reader.option("header", "true").csv(p)
+        case "jsonl" => reader.json(p)
+        case "parquet" => reader.parquet(p)
+      }).select("doc_id", "status_code")
+      val (r, e) = (read(res), read(err))
+      assert(r.count() == Responses.results(in).count(), ext)
+      assert(r.filter(col("status_code") =!= 200 || col("doc_id") === 7).isEmpty, ext)
+      assert(e.count() == nErrors, ext)
+      assert(e.filter(col("status_code") === 200 || col("doc_id") === 7).isEmpty, ext)
+      assert(new java.io.File(err).isDirectory, ext)
+      for (side <- Seq(res, err)) assert(new java.io.File(s"$side/_SUCCESS").isFile, s"$side")
+      // both sides read back without a schema, as a plain save's output
+      // does, the empty one too
+      val plain = ext match {
+        case "csv" => spark.read.option("header", "true").csv(err)
+        case "jsonl" => spark.read.json(err)
+        case "parquet" => spark.read.parquet(err)
+      }
+      assert(plain.count() == nErrors, ext)
+      // JSON omits NULL fields and infers its columns in name order
+      if (ext != "jsonl")
+        assert(plain.columns.toSeq == in.columns.toSeq, s"$ext: ${plain.columns.mkString(",")}")
+      assert(leftovers(base) == Seq.empty, ext)
+    }
+  }
+
+  test("a run with no errors saves an empty errors.jsonl, and resuming it is a no-op") {
+    val base = java.nio.file.Files.createTempDirectory("graft_wf_noerr").toString
+    val in = docs.filter(col("doc_id").between(1, 40))
+    val r = BatchWorkflow.run(in, base)
+    assert(r.finalStatus == "completed")
+    assert(r.errors.isEmpty && r.results.count() == 40)
+    assert(new java.io.File(s"$base/errors.jsonl").isDirectory)
+    assert(Jsonl.read(spark, org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT"),
+      s"$base/errors.jsonl").isEmpty)
+    for (_ <- 1 to 2) {
+      val again = BatchWorkflow.resume(in, base)
+      assert(again.finalStatus == "completed")
+      assert(again.results.isEmpty && again.errors.isEmpty)
+    }
+    assert(leftovers(base) == Seq.empty)
+  }
+
+  test("no staging or split directory is left after a run, a halt or a throw") {
+    val base = java.nio.file.Files.createTempDirectory("graft_wf_left").toString
+    BatchWorkflow.run(docs.filter(col("doc_id").between(1, 30)), s"$base/ok")
+    BatchWorkflow.run(docs.filter(col("doc_id") < 10), s"$base/halt")
+    // the input write throws on one row
+    val throwing = docs.filter(col("doc_id").between(1, 30)).withColumn("text",
+      when(col("doc_id") === 7, raise_error(lit("boom"))).otherwise(col("text")))
+    intercept[Exception](BatchWorkflow.run(throwing, s"$base/throw"))
+    assert(!new java.io.File(s"$base/throw/input").exists())
+    // the split save throws on one row
+    val parsed = Responses.parse(Simulator.respond(reqs.filter(col("doc_id").between(1, 30))))
+      .withColumn("content", when(col("doc_id") === 7, raise_error(lit("boom")))
+        .otherwise(col("content")))
+    intercept[Exception](ResultSink.saveSplit(parsed, Responses.isResult,
+      s"$base/split/results.jsonl", s"$base/split/errors.jsonl"))
+    assert(leftovers(base) == Seq.empty, leftovers(base))
   }
 
   test("run and resume evaluate their input subtree once: pinned job counts") {
     val base = java.nio.file.Files.createTempDirectory("graft_wf_jobs").toString
-    // materialization + JSONL write + manifest (map, result) + two
-    // saves; the pre-flight verdict and the status ride as observed
-    // metrics, not jobs of their own
-    // built outside the count: the parquet scan's schema read is a job
+    // JSONL write + the one results/errors save; the pre-flight
+    // verdict, the requests per shard and the status ride as observed
+    // metrics, not jobs of their own, and the driver writes the
+    // manifest
     val (head, all) = (docs.filter(col("doc_id").between(1, 60)),
       docs.filter(col("doc_id").between(1, 96)))
     val (first, runJobs) = jobsOf(BatchWorkflow.run(head, base))
     assert(first.finalStatus == "completed_with_errors") // doc 53
-    assert(runJobs.size == 6, s"run: $runJobs")
-    // resume's input subtree adds the saved-JSONL scan, its distinct
-    // and the anti-join, all inside the one materialization
+    assert(runJobs.size == 2, s"run: $runJobs")
+    assert(runJobs.count(_ == "save results and errors") == 1, s"run: $runJobs")
+    // resume's input subtree adds the saved-JSONL scan and the
+    // anti-join, all inside the input write; its errors side is empty,
+    // which its zero-row save adds
     val (resumed, resumeJobs) = jobsOf(BatchWorkflow.resume(all, base))
     assert(resumed.finalStatus == "completed")
     assert(resumed.results.count() == 36)
-    assert(resumeJobs.size == 8, s"resume: $resumeJobs")
+    assert(resumeJobs.size == 4, s"resume: $resumeJobs")
   }
 
   test("pre-flight sample is the orderBy(doc_id).limit(1) row, nulls first") {
