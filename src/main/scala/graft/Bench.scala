@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.graftbridge.ListenerBusBridge
+import org.apache.spark.graftbridge.{CodegenBridge, ListenerBusBridge}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
@@ -35,7 +35,14 @@ import Json.{dec3, obj, render}
   *  - `build_s`: wall seconds inside `fn(spark, sf)`, building the
   *    DataFrame, part of the query's time;
   *  - `build_jobs`: jobs started while building (eager
-  *    materializations such as `localCheckpoint()`), part of `jobs`.
+  *    materializations such as `localCheckpoint()`), part of `jobs`;
+  *  - `compiles`: classes Janino compiled for the sample (whole-stage
+  *    and projection code), a miss in Spark's JVM-wide class cache
+  *    each ([[GraftSession]] sizes it). A warm sample compiles 0
+  *    unless the cache evicted its classes. Sweeps before this counter
+  *    existed ran with a 100-class cache, so their walls include the
+  *    recompile of any query whose classes an earlier query in the
+  *    pass had evicted; their lines carry no `compiles`.
   *
   * A query with no successful sample reports -1 for its time and for
   * every counter.
@@ -159,15 +166,16 @@ object Bench {
   /** One timed sample's counters; see the object doc for each one. */
   private[graft] final case class Counters(jobs: Long, stages: Long, tasks: Long,
       taskS: Double, gcS: Double, shuffleReadMb: Double, shuffleWriteMb: Double,
-      recordsRead: Long, buildS: Double, buildJobs: Long) {
+      recordsRead: Long, buildS: Double, buildJobs: Long, compiles: Long) {
     def fields: Seq[(String, Any)] = Seq("jobs" -> jobs, "stages" -> stages,
       "tasks" -> tasks, "task_s" -> dec3(taskS), "gc_s" -> dec3(gcS),
       "shuffle_read_mb" -> dec3(shuffleReadMb), "shuffle_write_mb" -> dec3(shuffleWriteMb),
-      "records_read" -> recordsRead, "build_s" -> dec3(buildS), "build_jobs" -> buildJobs)
+      "records_read" -> recordsRead, "build_s" -> dec3(buildS), "build_jobs" -> buildJobs,
+      "compiles" -> compiles)
   }
 
   private[graft] val CounterKeys: Seq[String] =
-    Counters(0, 0, 0, 0, 0, 0, 0, 0, 0, 0).fields.map(_._1)
+    Counters(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).fields.map(_._1)
 
   /** Local property that tags a timed sample's jobs: `<id>:build` while
     * `fn(spark, sf)` builds the DataFrame, `<id>:exec` while the sink
@@ -213,12 +221,12 @@ object Bench {
 
     /** Removes and returns sample `id`'s counters; call once the bus
       * is drained. */
-    def take(id: Long, buildS: Double): Counters = {
+    def take(id: Long, buildS: Double, compiles: Long): Counters = {
       val Seq(b, e) = Seq("build", "exec").map(p => Option(byTag.remove(s"$id:$p")).getOrElse(new Acc))
       def sum(f: Acc => AtomicLong): Long = f(b).get + f(e).get
       def mb(f: Acc => AtomicLong): Double = sum(f) / 1048576.0
       Counters(sum(_.jobs), sum(_.stages), sum(_.tasks), sum(_.taskMs) / 1e3, sum(_.gcMs) / 1e3,
-        mb(_.shuffleRead), mb(_.shuffleWrite), sum(_.records), buildS, b.jobs.get)
+        mb(_.shuffleRead), mb(_.shuffleWrite), sum(_.records), buildS, b.jobs.get, compiles)
     }
   }
 
@@ -229,6 +237,7 @@ object Bench {
       sfDir: String): (Double, Counters) = {
     val sc = spark.sparkContext
     val id = listener.nextId()
+    val compiled = CodegenBridge.compiles()
     val t0 = System.nanoTime()
     val buildNs =
       try {
@@ -240,8 +249,9 @@ object Bench {
         built
       } finally sc.setLocalProperty(PhaseKey, null)
     val seconds = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenBridge.compiles() - compiled
     ListenerBusBridge.drain(sc)
-    (seconds, listener.take(id, buildNs / 1e9))
+    (seconds, listener.take(id, buildNs / 1e9, compiles))
   }
 
   /** A query's best (minimum-wall) sample, with the calibration

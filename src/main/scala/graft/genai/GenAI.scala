@@ -367,13 +367,13 @@ object GenAI {
     * [[BatchWorkflow.resume]] over the FULL valid corpus, whose
     * anti-join on the SAVED results/errors skips everything the
     * initial run already processed. The output is the on-disk end
-    * state read back from the four saved JSONL files (not the
-    * returned frames — the save+read round-trip is part of the
-    * contract), one row per doc: its phase (initial/resume/preflight),
-    * disposition (result/error/rejected), parsed payload, and the
-    * phase's reported terminal status. The oracle recomputes the same
-    * end state relationally, so the driver literally checks
-    * "run + resume over partial state ≡ one logical pass".
+    * state read back from the four saved JSONL files (the returned
+    * [[BatchWorkflow.BatchResult]] frames read them, so the save+read
+    * round-trip is part of the contract), one row per doc: its phase
+    * (initial/resume/preflight), disposition (result/error/rejected),
+    * parsed payload, and the phase's reported terminal status. The
+    * oracle recomputes the same end state relationally, so the driver
+    * literally checks "run + resume over partial state ≡ one logical pass".
     *
     * Scale: each run evaluates its input subtree once, in its input
     * write (see [[BatchWorkflow]]). The query runs 6 jobs while it is
@@ -409,28 +409,16 @@ object GenAI {
       validDocs.filter(col("doc_id") <= lit(mx - mx / 5)), prefix.toString)
     val resumed = BatchWorkflow.resume(validDocs, prefix.toString)
 
-    // saved-file read-back: JSON writes omit all-null fields, so the
-    // results/errors files carry different column sets — an EXPLICIT
-    // read schema projects both onto the common shape with typed nulls
-    // (absent fields parse as null — the same values the old
-    // inspect-inferred-columns form produced) and skips the schema-
-    // inference pass, which was one extra whole-file Spark job per
-    // read, four reads per execution (r19, guide §1.2 per-task work)
-    def readBack(path: String, phase: String, disposition: String,
-        runStatus: String): DataFrame = {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("content", StringType),
-        StructField("error_message", StringType),
-        StructField("prompt_tokens", LongType),
-        StructField("completion_tokens", LongType)))
-      Jsonl.read(s, schema, path)
-        .select(col("doc_id"), col("content"), col("error_message"),
+    // the saved-file read-back: each run's BatchResult frames read the
+    // files it saved, with the parsed schema (absent fields read as
+    // typed nulls, no inference job), so no output is listed twice
+    def readBack(saved: DataFrame, phase: String, disposition: String,
+        runStatus: String): DataFrame =
+      saved.select(col("doc_id"), col("content"), col("error_message"),
           col("prompt_tokens"), col("completion_tokens"))
         .withColumn("phase", lit(phase))
         .withColumn("disposition", lit(disposition))
         .withColumn("run_status", lit(runStatus))
-    }
     val rejected = validated.filter(!col("is_valid"))
       .select(col("doc_id"), lit(null).cast("string").as("content"),
         col("reason").as("error_message"),
@@ -438,10 +426,10 @@ object GenAI {
         lit(null).cast("long").as("completion_tokens"),
         lit("preflight").as("phase"), lit("rejected").as("disposition"),
         lit("rejected_preflight").as("run_status"))
-    readBack(s"$prefix/results.jsonl", "initial", "result", initial.finalStatus)
-      .unionByName(readBack(s"$prefix/errors.jsonl", "initial", "error", initial.finalStatus))
-      .unionByName(readBack(s"$prefix/resume/results.jsonl", "resume", "result", resumed.finalStatus))
-      .unionByName(readBack(s"$prefix/resume/errors.jsonl", "resume", "error", resumed.finalStatus))
+    readBack(initial.results, "initial", "result", initial.finalStatus)
+      .unionByName(readBack(initial.errors, "initial", "error", initial.finalStatus))
+      .unionByName(readBack(resumed.results, "resume", "result", resumed.finalStatus))
+      .unionByName(readBack(resumed.errors, "resume", "error", resumed.finalStatus))
       .unionByName(rejected)
       .select(col("doc_id"), col("phase"), col("disposition"), col("content"),
         col("error_message"), col("prompt_tokens"), col("completion_tokens"),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.graftbridge.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Bench's per-query counters checked against known inputs. */
 class BenchCountersSpec extends SparkSpec {
@@ -51,5 +52,21 @@ class BenchCountersSpec extends SparkSpec {
     assert(c.buildJobs == atReturn - before, c)
     assert(c.jobs == started.get - before, c)
     assert(c.buildS > 0, c)
+  }
+
+  test("compiles: a query's first sample compiles its classes, an immediate repeat none") {
+    // a literal Spark inlines into the generated code, new to this
+    // JVM, so no earlier suite can have compiled these classes
+    val nonce = System.nanoTime()
+    val fn: QFn = (s, _) => s.range(1000)
+      .filter(col("id") % 7 =!= lit(nonce % 7))
+      .select((col("id") * 3 + lit(nonce)).as("x"))
+    val listener = new Bench.CounterListener
+    spark.sparkContext.addSparkListener(listener)
+    val Seq(first, repeat) =
+      try Seq.fill(2)(Bench.sample(spark, listener, fn, sf)._2)
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(first.compiles >= 1, first)
+    assert(repeat.compiles == 0, repeat)
   }
 }

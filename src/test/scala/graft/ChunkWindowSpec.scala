@@ -181,26 +181,27 @@ class ChunkWindowSpec extends SparkSpec {
     // chunk diverged the two. Corpus variant: an astral-plane char
     // prepended as token 0 of EVERY doc, so whatever s20 selects
     // carries it in its lead chunk.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-nonbmp").toString
-    Tables.documents(spark, sf)
-      .withColumn("text", concat(lit("😀 "), col("text")))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    Tables.embeddings(spark, sf)
-      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val rows = SparkEntry.queries("t27_context_pack")(spark, tmp).collect()
-    assert(rows.nonEmpty)
-    val texts = Tables.documents(spark, tmp).select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    rows.foreach { r =>
-      val ctx = r.getAs[String]("context_text")
-      assert(ctx.contains("😀"), "lead chunk lost the planted astral char")
-      assert(ctx.codePointCount(0, ctx.length) == r.getAs[Long]("char_alloc"),
-        s"doc ${r.getAs[Long]("doc_id")}: char_alloc is not a code-point count")
-      // reconstruction via code-point offsets — the mixed-unit span
-      // (UTF-16 alloc over code-point start) would break exactly here
-      val doc = texts(r.getAs[Long]("doc_id"))
-      val end = doc.offsetByCodePoints(0, r.getAs[Long]("char_alloc").toInt)
-      assert(doc.substring(0, end) == ctx)
+    withTempDir("graft-nonbmp") { tmp =>
+      Tables.documents(spark, sf)
+        .withColumn("text", concat(lit("😀 "), col("text")))
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      Tables.embeddings(spark, sf)
+        .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+      val rows = SparkEntry.queries("t27_context_pack")(spark, tmp).collect()
+      assert(rows.nonEmpty)
+      val texts = Tables.documents(spark, tmp).select("doc_id", "text").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      rows.foreach { r =>
+        val ctx = r.getAs[String]("context_text")
+        assert(ctx.contains("😀"), "lead chunk lost the planted astral char")
+        assert(ctx.codePointCount(0, ctx.length) == r.getAs[Long]("char_alloc"),
+          s"doc ${r.getAs[Long]("doc_id")}: char_alloc is not a code-point count")
+        // reconstruction via code-point offsets — the mixed-unit span
+        // (UTF-16 alloc over code-point start) would break exactly here
+        val doc = texts(r.getAs[Long]("doc_id"))
+        val end = doc.offsetByCodePoints(0, r.getAs[Long]("char_alloc").toInt)
+        assert(doc.substring(0, end) == ctx)
+      }
     }
   }
 

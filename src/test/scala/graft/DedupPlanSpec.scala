@@ -276,12 +276,11 @@ class DedupPlanSpec extends SparkSpec {
     }
   }
 
-  /** sf0.001's documents rewritten as `n` parquet splits. */
-  private def splitCorpus(n: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("dedup_splits").toString
+  /** Runs `f` on sf0.001's documents rewritten as `n` parquet splits. */
+  private def withSplitCorpus[T](n: Int)(f: String => T): T = withTempDir("dedup_splits") { dir =>
     Tables.documents(spark, sf).repartition(n)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
+    f(dir)
   }
 
   test("d7's edges: no per-gram rows or sort/object aggregates; the sketch runs above the spread") {
@@ -290,38 +289,40 @@ class DedupPlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
     // several small splits: parallel, but narrower than the shuffle
     // partitions, so spreadToCores still fans the scan out
-    val dir = splitCorpus(3)
-    val docs = Tables.documents(spark, dir)
-    assert(docs.rdd.getNumPartitions == 3)
-    val edges = dedup.Dedup.clusterEdges(docs)
-    edges.collect()
-    val p = edges.queryExecution.executedPlan
-    val generates = collectInPlan(p) { case g: GenerateExec => g.generator }
-    assert(generates.forall {
-      case Explode(_: CreateMap) => true // the 4-row band long form
-      case _ => false
-    }, s"a Generate other than the band explode:\n$p")
-    assert(collectInPlan(p) { case a: SortAggregateExec => a }.isEmpty, p)
-    assert(collectInPlan(p) { case a: ObjectHashAggregateExec => a }.isEmpty, p)
-    // once for the bands, once for the sets, and never below the
-    // round-robin exchange (a filter on the sketch would be pushed
-    // there and hash the corpus on the scan's few cores)
-    val sites = sketchSites(p)
-    assert(sites.nonEmpty && sites.forall(_._2), s"ShingleSketch evaluated below the spread: $sites\n$p")
-    assert(sites.size <= 2, s"$sites\n$p")
-    // the edges are d7's: same labels as the single-file corpus
-    val one = SparkEntry.queries("d7_cluster")(spark, sf).collect().map(_.toSeq).toSet
-    assert(SparkEntry.queries("d7_cluster")(spark, dir).collect().map(_.toSeq).toSet == one)
+    withSplitCorpus(3) { dir =>
+      val docs = Tables.documents(spark, dir)
+      assert(docs.rdd.getNumPartitions == 3)
+      val edges = dedup.Dedup.clusterEdges(docs)
+      edges.collect()
+      val p = edges.queryExecution.executedPlan
+      val generates = collectInPlan(p) { case g: GenerateExec => g.generator }
+      assert(generates.forall {
+        case Explode(_: CreateMap) => true // the 4-row band long form
+        case _ => false
+      }, s"a Generate other than the band explode:\n$p")
+      assert(collectInPlan(p) { case a: SortAggregateExec => a }.isEmpty, p)
+      assert(collectInPlan(p) { case a: ObjectHashAggregateExec => a }.isEmpty, p)
+      // once for the bands, once for the sets, and never below the
+      // round-robin exchange (a filter on the sketch would be pushed
+      // there and hash the corpus on the scan's few cores)
+      val sites = sketchSites(p)
+      assert(sites.nonEmpty && sites.forall(_._2), s"ShingleSketch evaluated below the spread: $sites\n$p")
+      assert(sites.size <= 2, s"$sites\n$p")
+      // the edges are d7's: same labels as the single-file corpus
+      val one = SparkEntry.queries("d7_cluster")(spark, sf).collect().map(_.toSeq).toSet
+      assert(SparkEntry.queries("d7_cluster")(spark, dir).collect().map(_.toSeq).toSet == one)
+    }
   }
 
   test("every sketch consumer evaluates the sketch above the spread") {
-    val dir = splitCorpus(3)
-    for (q <- Seq("d2_minhash_lsh", "d4_ngram_jaccard", "d9_containment", "d11_word_minhash",
-        "d15_minhash_accuracy", "d24_lsh_curve", "d25_band_sweep")) {
-      val df = SparkEntry.queries(q)(spark, dir)
-      df.collect()
-      val sites = sketchSites(df.queryExecution.executedPlan)
-      assert(sites.nonEmpty && sites.forall(_._2), s"$q: $sites")
+    withSplitCorpus(3) { dir =>
+      for (q <- Seq("d2_minhash_lsh", "d4_ngram_jaccard", "d9_containment", "d11_word_minhash",
+          "d15_minhash_accuracy", "d24_lsh_curve", "d25_band_sweep")) {
+        val df = SparkEntry.queries(q)(spark, dir)
+        df.collect()
+        val sites = sketchSites(df.queryExecution.executedPlan)
+        assert(sites.nonEmpty && sites.forall(_._2), s"$q: $sites")
+      }
     }
   }
 
@@ -402,21 +403,22 @@ class DedupPlanSpec extends SparkSpec {
       val words = (0 until 12).map(w => java.lang.Long.toString(i * 104729 + w * 7919, 36))
       (i, words.mkString(" "))
     }
-    val dir = java.nio.file.Files.createTempDirectory("d2cap").toString
-    (big ++ small ++ filler).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("d2_minhash_lsh")(spark, dir)
-      .select("doc_id", "n_candidates").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the round-5 per-DOCUMENT cap zeroed these (the whole bucket was
-    // skipped); the family-unit cap sees one row and keeps them all
-    big.foreach { case (id, _) =>
-      assert(out(id) == famSize - 1L,
-        s"doc $id of the $famSize-doc family: got ${out(id)}, want ${famSize - 1}")
+    withTempDir("d2cap") { dir =>
+      (big ++ small ++ filler).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("d2_minhash_lsh")(spark, dir)
+        .select("doc_id", "n_candidates").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // the round-5 per-DOCUMENT cap zeroed these (the whole bucket was
+      // skipped); the family-unit cap sees one row and keeps them all
+      big.foreach { case (id, _) =>
+        assert(out(id) == famSize - 1L,
+          s"doc $id of the $famSize-doc family: got ${out(id)}, want ${famSize - 1}")
+      }
+      assert(out(1000L) == 1L && out(1001L) == 1L,
+        s"small family keeps its candidates: ${out(1000L)}, ${out(1001L)}")
+      filler.foreach { case (id, _) => assert(out(id) == 0L) }
     }
-    assert(out(1000L) == 1L && out(1001L) == 1L,
-      s"small family keeps its candidates: ${out(1000L)}, ${out(1001L)}")
-    filler.foreach { case (id, _) => assert(out(id) == 0L) }
   }
 
   test("d2 bystander of a giant dup family keeps its cross-family candidates") {
@@ -431,19 +433,20 @@ class DedupPlanSpec extends SparkSpec {
     val famText = "the quick brown fox jumps over the lazy dog again and again"
     val big = (0L until dedup.Dedup.MaxBandBucket + 10L).map(i => (i, famText))
     val bystander = (5000L, famText + " nearby")
-    val dir = java.nio.file.Files.createTempDirectory("d2bystander").toString
-    (big :+ bystander).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = SparkEntry.queries("d2_minhash_lsh")(spark, dir).collect()
-      .map(r => r.getLong(0) -> (Seq(r.getString(1), r.getString(2), r.getString(3),
-        r.getString(4)), r.getLong(5))).toMap
-    val sharesBand = rows(5000L)._1.zip(rows(0L)._1).exists { case (a, b) => a == b }
-    assert(sharesBand,
-      "test corpus must make the bystander LSH-collide with the family (fixed md5 minhash)")
-    assert(rows(5000L)._2 == big.length.toLong,
-      s"bystander must count the whole family, got ${rows(5000L)._2}")
-    assert(rows(0L)._2 == big.length.toLong, // fsize-1 mates + the bystander's family
-      s"family member counts mates + bystander, got ${rows(0L)._2}")
+    withTempDir("d2bystander") { dir =>
+      (big :+ bystander).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = SparkEntry.queries("d2_minhash_lsh")(spark, dir).collect()
+        .map(r => r.getLong(0) -> (Seq(r.getString(1), r.getString(2), r.getString(3),
+          r.getString(4)), r.getLong(5))).toMap
+      val sharesBand = rows(5000L)._1.zip(rows(0L)._1).exists { case (a, b) => a == b }
+      assert(sharesBand,
+        "test corpus must make the bystander LSH-collide with the family (fixed md5 minhash)")
+      assert(rows(5000L)._2 == big.length.toLong,
+        s"bystander must count the whole family, got ${rows(5000L)._2}")
+      assert(rows(0L)._2 == big.length.toLong, // fsize-1 mates + the bystander's family
+        s"family member counts mates + bystander, got ${rows(0L)._2}")
+    }
   }
 
   test("word shingles: sub-3-token docs yield none, 3 tokens yield exactly one") {
@@ -615,17 +618,18 @@ class DedupPlanSpec extends SparkSpec {
       (2L, "a b c d e y1 y2 y3"),
       (3L, "u1 u2 u3 u4 u5 u1 u2 u3 u4 u5"),
       (4L, "t1 t2 t3 t4"))
-    val dir = java.nio.file.Files.createTempDirectory("d14span").toString
-    corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("d14_repeated_ngrams")(spark, dir)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)), r.getDouble(3))).toMap
-    assert(out.keySet == Set(1L, 2L, 3L), s"rows: ${out.keySet}")
-    assert(out(1L) == ((4L, 1L), 0.25), s"doc1: ${out(1L)}")
-    assert(out(2L) == ((4L, 1L), 0.25), s"doc2: ${out(2L)}")
-    // doc 3: 6 grams, all df=1 (within-doc repeats excluded), but note
-    // grams [u1..u5] at positions 1 and 6 are IDENTICAL strings — still
-    // df=1 because both are in doc 3
-    assert(out(3L)._1._1 == 6L && out(3L)._1._2 == 0L && out(3L)._2 == 0.0, s"doc3: ${out(3L)}")
+    withTempDir("d14span") { dir =>
+      corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("d14_repeated_ngrams")(spark, dir)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)), r.getDouble(3))).toMap
+      assert(out.keySet == Set(1L, 2L, 3L), s"rows: ${out.keySet}")
+      assert(out(1L) == ((4L, 1L), 0.25), s"doc1: ${out(1L)}")
+      assert(out(2L) == ((4L, 1L), 0.25), s"doc2: ${out(2L)}")
+      // doc 3: 6 grams, all df=1 (within-doc repeats excluded), but note
+      // grams [u1..u5] at positions 1 and 6 are IDENTICAL strings — still
+      // df=1 because both are in doc 3
+      assert(out(3L)._1._1 == 6L && out(3L)._1._2 == 0L && out(3L)._2 == 0.0, s"doc3: ${out(3L)}")
+    }
   }
 
   test("d17 Bloom prefilter: no false negatives; a tiny bitmap forces measurable FPs") {
@@ -639,32 +643,34 @@ class DedupPlanSpec extends SparkSpec {
     // fps × 4 slices into the 16 Ki-bit bitmap set ~86% of its bits
     // (1 − e^(−32000/16384)), so the false-positive path genuinely
     // fires (deterministic: md5 is fixed)
-    val full = java.nio.file.Files.createTempDirectory("d17fp").toString
-    spark.range(1L, 10001L).select(col("id").as("doc_id"),
-        when(col("id") === 8001L, lit("existing document body number 7"))
-          .when(col("id") <= 8000L, concat(lit("existing document body number "), col("id")))
-          .otherwise(concat(lit("genuinely new content "), col("id"))).as("text"))
-      .write.mode("overwrite").parquet(s"$full/documents.parquet")
-    val out = admit(full)
-    assert(out.keySet == (8001L to 10000L).toSet, s"new batch: ${out.size} rows")
-    // the Bloom guarantee: an exact dup can NEVER be bloom-negative
-    val (bm, ed, fp) = out(8001L)
-    assert(bm && ed && !fp, s"dup row: ${out(8001L)}")
-    // false_positive is definitionally bloom_maybe ∧ ¬exact_dup
-    for ((id, (bm, ed, fp)) <- out)
-      assert(fp == (bm && !ed), s"doc $id: bloom=$bm exact=$ed fp=$fp")
-    val fps = out.values.count(_._3)
-    assert(fps > 0, "expected false positives under a saturated bitmap")
-    // a 40-doc history at the same width has zero FPs (m = 16 Ki bits
-    // vs 160 set positions) — the sizing rule in action
-    val small = java.nio.file.Files.createTempDirectory("d17small").toString
-    ((1L to 40L).map(i => (i, s"existing document body number $i")) ++
-      Seq((41L, "existing document body number 7")) ++
-      (42L to 50L).map(i => (i, s"genuinely new content $i")))
-      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$small/documents.parquet")
-    val wide = admit(small)
-    assert(wide.keySet == (41L to 50L).toSet && wide.values.count(_._3) == 0,
-      s"small-history FPs: $wide")
+    withTempDir("d17fp") { full =>
+      spark.range(1L, 10001L).select(col("id").as("doc_id"),
+          when(col("id") === 8001L, lit("existing document body number 7"))
+            .when(col("id") <= 8000L, concat(lit("existing document body number "), col("id")))
+            .otherwise(concat(lit("genuinely new content "), col("id"))).as("text"))
+        .write.mode("overwrite").parquet(s"$full/documents.parquet")
+      val out = admit(full)
+      assert(out.keySet == (8001L to 10000L).toSet, s"new batch: ${out.size} rows")
+      // the Bloom guarantee: an exact dup can NEVER be bloom-negative
+      val (bm, ed, fp) = out(8001L)
+      assert(bm && ed && !fp, s"dup row: ${out(8001L)}")
+      // false_positive is definitionally bloom_maybe ∧ ¬exact_dup
+      for ((id, (bm, ed, fp)) <- out)
+        assert(fp == (bm && !ed), s"doc $id: bloom=$bm exact=$ed fp=$fp")
+      val fps = out.values.count(_._3)
+      assert(fps > 0, "expected false positives under a saturated bitmap")
+      // a 40-doc history at the same width has zero FPs (m = 16 Ki bits
+      // vs 160 set positions) — the sizing rule in action
+      withTempDir("d17small") { small =>
+        ((1L to 40L).map(i => (i, s"existing document body number $i")) ++
+          Seq((41L, "existing document body number 7")) ++
+          (42L to 50L).map(i => (i, s"genuinely new content $i")))
+          .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$small/documents.parquet")
+        val wide = admit(small)
+        assert(wide.keySet == (41L to 50L).toSet && wide.values.count(_._3) == 0,
+          s"small-history FPs: $wide")
+      }
+    }
   }
 
   test("per-row SimHash fold equals the batch explode signature on real corpus data") {
@@ -693,13 +699,14 @@ class DedupPlanSpec extends SparkSpec {
       (3L, "completely different corpus text"),
       (mx - 1, "alpha beta gamma"), // exact dup of existing doc 1
       (mx, "brand new content never seen"))
-    val dir = java.nio.file.Files.createTempDirectory("d12max").toString
-    docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("d12_incremental_dedup")(spark, dir)
-      .collect().map(r => r.getLong(0) -> (r.getBoolean(2), r.getString(3))).toMap
-    assert(out.keySet == Set(mx - 1, mx), s"new batch rows: ${out.keySet}")
-    assert(out(mx - 1) == (false, "exact_dup"), s"${out(mx - 1)}")
-    assert(out(mx) == (true, "admitted"), s"${out(mx)}")
+    withTempDir("d12max") { dir =>
+      docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("d12_incremental_dedup")(spark, dir)
+        .collect().map(r => r.getLong(0) -> (r.getBoolean(2), r.getString(3))).toMap
+      assert(out.keySet == Set(mx - 1, mx), s"new batch rows: ${out.keySet}")
+      assert(out(mx - 1) == (false, "exact_dup"), s"${out(mx - 1)}")
+      assert(out(mx) == (true, "admitted"), s"${out(mx)}")
+    }
   }
 
   test("d12/d13 fire all admit paths; a copy of a DROPPED near-dup splits them") {
@@ -730,45 +737,46 @@ class DedupPlanSpec extends SparkSpec {
       (18L, "eight seven six five four three two one"),
       (19L, "genuinely novel content never seen in the corpus before"),
       (20L, droppedText))
-    val dir = java.nio.file.Files.createTempDirectory("d12inc").toString
-    (existing ++ newBatch).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def run(q: String): Map[Long, (Boolean, String)] =
-      SparkEntry.queries(q)(spark, dir)
-        .collect().map(r => r.getLong(0) -> (r.getBoolean(2), r.getString(3))).toMap
-    val d12 = run("d12_incremental_dedup")
-    val d13 = run("d13_keeper_admit")
-    // the persisted-manifest batch admission must reproduce d13's
-    // decision byte-for-byte (same keepers, manifests via parquet)
-    val d16 = run("d16_manifest_admit")
-    assert(d16 == d13, s"d16 diverged from d13: $d16 vs $d13")
-    // the streaming admission must reproduce the batch d12 decision
-    // byte-for-byte (same manifests, per-row signature, same joins)
-    val st9 = run("st9_stream_admit")
-    assert(st9 == d12, s"st9 diverged from d12: $st9 vs $d12")
-    // the streaming Bloom prefilter must reproduce d17's decision
-    // byte-for-byte (persisted bitmap, per-row column probes)
-    def runBloom(q: String): Map[Long, (Boolean, Boolean, Boolean)] =
-      SparkEntry.queries(q)(spark, dir).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getBoolean(2), r.getBoolean(3), r.getBoolean(4)))).toMap
-    val d17o = runBloom("d17_bloom_admit")
-    val st10 = runBloom("st10_stream_bloom")
-    assert(st10 == d17o, s"st10 diverged from d17: $st10 vs $d17o")
-    // the verbatim copy (17) is exact-dup and MUST be bloom-positive
-    assert(d17o(17L)._1 && d17o(17L)._2 && !d17o(17L)._3, s"17: ${d17o(17L)}")
-    for ((name, out) <- Seq("d12" -> d12, "d13" -> d13)) {
-      assert(out.keySet == Set(17L, 18L, 19L, 20L), s"$name new batch rows: ${out.keySet}")
-      assert(out(17L) == (false, "exact_dup"), s"$name 17: ${out(17L)}")
-      assert(out(18L) == (false, "near_dup"), s"$name 18: ${out(18L)}")
-      assert(out(19L) == (true, "admitted"), s"$name 19: ${out(19L)}")
+    withTempDir("d12inc") { dir =>
+      (existing ++ newBatch).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      def run(q: String): Map[Long, (Boolean, String)] =
+        SparkEntry.queries(q)(spark, dir)
+          .collect().map(r => r.getLong(0) -> (r.getBoolean(2), r.getString(3))).toMap
+      val d12 = run("d12_incremental_dedup")
+      val d13 = run("d13_keeper_admit")
+      // the persisted-manifest batch admission must reproduce d13's
+      // decision byte-for-byte (same keepers, manifests via parquet)
+      val d16 = run("d16_manifest_admit")
+      assert(d16 == d13, s"d16 diverged from d13: $d16 vs $d13")
+      // the streaming admission must reproduce the batch d12 decision
+      // byte-for-byte (same manifests, per-row signature, same joins)
+      val st9 = run("st9_stream_admit")
+      assert(st9 == d12, s"st9 diverged from d12: $st9 vs $d12")
+      // the streaming Bloom prefilter must reproduce d17's decision
+      // byte-for-byte (persisted bitmap, per-row column probes)
+      def runBloom(q: String): Map[Long, (Boolean, Boolean, Boolean)] =
+        SparkEntry.queries(q)(spark, dir).collect()
+          .map(r => r.getLong(0) ->
+            ((r.getBoolean(2), r.getBoolean(3), r.getBoolean(4)))).toMap
+      val d17o = runBloom("d17_bloom_admit")
+      val st10 = runBloom("st10_stream_bloom")
+      assert(st10 == d17o, s"st10 diverged from d17: $st10 vs $d17o")
+      // the verbatim copy (17) is exact-dup and MUST be bloom-positive
+      assert(d17o(17L)._1 && d17o(17L)._2 && !d17o(17L)._3, s"17: ${d17o(17L)}")
+      for ((name, out) <- Seq("d12" -> d12, "d13" -> d13)) {
+        assert(out.keySet == Set(17L, 18L, 19L, 20L), s"$name new batch rows: ${out.keySet}")
+        assert(out(17L) == (false, "exact_dup"), s"$name 17: ${out(17L)}")
+        assert(out(18L) == (false, "near_dup"), s"$name 18: ${out(18L)}")
+        assert(out(19L) == (true, "admitted"), s"$name 19: ${out(19L)}")
+      }
+      // the split: d12's manifest is the FULL history (doc 6's fingerprint
+      // is in it → exact reject); d13's manifest is the deduped corpus
+      // (6 was dropped; 16 is neither doc 5's fingerprint nor its SimHash
+      // — the punctuation tokens change the distinct token set → admit)
+      assert(d12(20L) == (false, "exact_dup"), s"d12 20: ${d12(20L)}")
+      assert(d13(20L) == (true, "admitted"), s"d13 20: ${d13(20L)}")
     }
-    // the split: d12's manifest is the FULL history (doc 6's fingerprint
-    // is in it → exact reject); d13's manifest is the deduped corpus
-    // (6 was dropped; 16 is neither doc 5's fingerprint nor its SimHash
-    // — the punctuation tokens change the distinct token set → admit)
-    assert(d12(20L) == (false, "exact_dup"), s"d12 20: ${d12(20L)}")
-    assert(d13(20L) == (true, "admitted"), s"d13 20: ${d13(20L)}")
   }
 
   test("st10 re-stages a Bloom bitmap staged under another width") {
@@ -777,31 +785,32 @@ class DedupPlanSpec extends SparkSpec {
     // is reused and st10 probes at the wrong modulus (wrong
     // bloom_maybe, including Bloom FALSE NEGATIVES).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bloomw").toString
-    (1L to 20L).map(i => (i, s"bloom width regression doc $i body ${i * 17}"))
-      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def runBloom(q: String): Map[Long, (Boolean, Boolean, Boolean)] =
-      SparkEntry.queries(q)(spark, dir).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getBoolean(2), r.getBoolean(3), r.getBoolean(4)))).toMap
-    val marker = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_docs_" + StagePath.corpusToken(dir), "_src_meta")
-    def meta(): String = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-    runBloom("st10_stream_bloom")
-    // the srcMeta payload ends with the corpus path (ADVICE r13); the
-    // width token sits just before it
-    assert(meta().endsWith(s":b14:$dir"), s"marker must encode the width: ${meta()}")
-    // a marker left by a layout staged under another width is stale
-    java.nio.file.Files.write(marker, meta().replace(s":b14:$dir", s":b6:$dir").getBytes("UTF-8"))
-    val st10 = runBloom("st10_stream_bloom")
-    assert(meta().endsWith(s":b14:$dir"), s"stale width did not force a re-stage: ${meta()}")
-    // a missing bitmap behind a current marker re-stages too
-    assert(withoutArtifact(marker.getParent, "bloom_manifest")(runBloom("st10_stream_bloom")) == st10,
-      "re-staging a missing Bloom bitmap changed st10")
-    // the persisted bitmap st10 probes matches d17's live build
-    val d17 = runBloom("d17_bloom_admit")
-    assert(st10 == d17, s"st10 diverged from d17: $st10 vs $d17")
+    withTempDir("bloomw") { dir =>
+      (1L to 20L).map(i => (i, s"bloom width regression doc $i body ${i * 17}"))
+        .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      def runBloom(q: String): Map[Long, (Boolean, Boolean, Boolean)] =
+        SparkEntry.queries(q)(spark, dir).collect()
+          .map(r => r.getLong(0) ->
+            ((r.getBoolean(2), r.getBoolean(3), r.getBoolean(4)))).toMap
+      val marker = java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir"),
+        "graft_stream_docs_" + StagePath.corpusToken(dir), "_src_meta")
+      def meta(): String = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
+      runBloom("st10_stream_bloom")
+      // the srcMeta payload ends with the corpus path (ADVICE r13); the
+      // width token sits just before it
+      assert(meta().endsWith(s":b14:$dir"), s"marker must encode the width: ${meta()}")
+      // a marker left by a layout staged under another width is stale
+      java.nio.file.Files.write(marker, meta().replace(s":b14:$dir", s":b6:$dir").getBytes("UTF-8"))
+      val st10 = runBloom("st10_stream_bloom")
+      assert(meta().endsWith(s":b14:$dir"), s"stale width did not force a re-stage: ${meta()}")
+      // a missing bitmap behind a current marker re-stages too
+      assert(withoutArtifact(marker.getParent, "bloom_manifest")(runBloom("st10_stream_bloom")) == st10,
+        "re-staging a missing Bloom bitmap changed st10")
+      // the persisted bitmap st10 probes matches d17's live build
+      val d17 = runBloom("d17_bloom_admit")
+      assert(st10 == d17, s"st10 diverged from d17: $st10 vs $d17")
+    }
   }
 
   test("d18 semantic dedup: planted near-dups dominated by their source, blocked join, no window") {

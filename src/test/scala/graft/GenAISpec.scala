@@ -17,14 +17,15 @@ class GenAISpec extends SparkSpec {
   }
 
   test("jsonl round trip preserves request fields") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
-    Jsonl.writeLines(Requests.toJsonLines(reqs.limit(50)), dir)
-    val back = Jsonl.read(spark, dir)
-    assert(back.count() == 50)
-    val r = back.selectExpr("custom_id", "body.model",
-      "body.messages[0].role", "body.max_tokens").collect()
-    assert(r.forall(_.getString(2) == "system"))
-    assert(r.map(_.getString(0)).distinct.length == 50)
+    withTempDir("graft_jsonl") { dir =>
+      Jsonl.writeLines(Requests.toJsonLines(reqs.limit(50)), dir)
+      val back = Jsonl.read(spark, dir)
+      assert(back.count() == 50)
+      val r = back.selectExpr("custom_id", "body.model",
+        "body.messages[0].role", "body.max_tokens").collect()
+      assert(r.forall(_.getString(2) == "system"))
+      assert(r.map(_.getString(0)).distinct.length == 50)
+    }
   }
 
   test("response parse recovers doc_id and splits errors") {
@@ -64,23 +65,24 @@ class GenAISpec extends SparkSpec {
   }
 
   test("batch workflow runs end to end and saves outputs") {
-    val base = java.nio.file.Files.createTempDirectory("graft_wf").toString
-    // doc 0 is the planted-invalid row; exclude it so validation passes
-    val r = BatchWorkflow.run(docs.filter(col("doc_id").between(1, 96)), base, shardSize = 25)
-    assert(r.finalStatus == "completed_with_errors")  // doc 53 errors
-    assert(r.results.count() + r.errors.count() == 96)
-    assert(spark.read.json(s"$base/input").count() == 96)
-    assert(spark.read.json(s"$base/results.jsonl").count() == r.results.count())
-    // batch-creation manifest: one row per shard, create args recorded
-    val manifest = spark.read.json(s"$base/batches")
-    assert(manifest.count() == 4) // 96 docs / shardSize 25, doc_id div
-    val row = manifest.orderBy(col("shard_id")).head()
-    assert(row.getAs[String]("endpoint") == "/v1/chat/completions")
-    assert(row.getAs[String]("completion_window") == "24h")
-    assert(row.getAs[String]("metadata") == "{}")
-    assert(manifest.agg(org.apache.spark.sql.functions.sum(col("n_requests"))).head().getLong(0) == 96)
-    assert(manifest.orderBy("shard_id").select("n_requests").collect().map(_.getLong(0)).toSeq ==
-      Seq(24, 25, 25, 22))
+    withTempDir("graft_wf") { base =>
+      // doc 0 is the planted-invalid row; exclude it so validation passes
+      val r = BatchWorkflow.run(docs.filter(col("doc_id").between(1, 96)), base, shardSize = 25)
+      assert(r.finalStatus == "completed_with_errors")  // doc 53 errors
+      assert(r.results.count() + r.errors.count() == 96)
+      assert(spark.read.json(s"$base/input").count() == 96)
+      assert(spark.read.json(s"$base/results.jsonl").count() == r.results.count())
+      // batch-creation manifest: one row per shard, create args recorded
+      val manifest = spark.read.json(s"$base/batches")
+      assert(manifest.count() == 4) // 96 docs / shardSize 25, doc_id div
+      val row = manifest.orderBy(col("shard_id")).head()
+      assert(row.getAs[String]("endpoint") == "/v1/chat/completions")
+      assert(row.getAs[String]("completion_window") == "24h")
+      assert(row.getAs[String]("metadata") == "{}")
+      assert(manifest.agg(org.apache.spark.sql.functions.sum(col("n_requests"))).head().getLong(0) == 96)
+      assert(manifest.orderBy("shard_id").select("n_requests").collect().map(_.getLong(0)).toSeq ==
+        Seq(24, 25, 25, 22))
+    }
   }
 
   test("a local frame written by the driver has the json writer's lines and runs no job") {
@@ -90,13 +92,14 @@ class GenAISpec extends SparkSpec {
       org.apache.spark.sql.Row(null, "", 2.5)),
       org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, s STRING, x DOUBLE"))
       .withColumn("meta", to_json(map(lit("k\""), lit("v"))))
-    val dir = java.nio.file.Files.createTempDirectory("graft_local").toString
-    val (_, jobs) = jobsOf(Jsonl.writeLocal(local, s"$dir/local"))
-    assert(jobs.isEmpty, jobs)
-    local.write.json(s"$dir/spark")
-    def lines(p: String) = spark.read.text(p).as[String].collect().sorted.toSeq
-    assert(lines(s"$dir/local") == lines(s"$dir/spark"))
-    assert(new java.io.File(s"$dir/local/_SUCCESS").isFile)
+    withTempDir("graft_local") { dir =>
+      val (_, jobs) = jobsOf(Jsonl.writeLocal(local, s"$dir/local"))
+      assert(jobs.isEmpty, jobs)
+      local.write.json(s"$dir/spark")
+      def lines(p: String) = spark.read.text(p).as[String].collect().sorted.toSeq
+      assert(lines(s"$dir/local") == lines(s"$dir/spark"))
+      assert(new java.io.File(s"$dir/local/_SUCCESS").isFile)
+    }
   }
 
   test("observed shard counts equal a groupBy count, NULL doc_id included") {
@@ -113,40 +116,43 @@ class GenAISpec extends SparkSpec {
   }
 
   test("resume processes only documents without a saved result or error") {
-    val base = java.nio.file.Files.createTempDirectory("graft_resume").toString
-    // first (interrupted) run covers docs 1-50
-    BatchWorkflow.run(docs.filter(col("doc_id").between(1, 50)), base)
-    // resume over the full 1-96 population picks up only 51-96
-    val r = BatchWorkflow.resume(docs.filter(col("doc_id").between(1, 96)), base)
-    assert(r.results.count() + r.errors.count() == 46)
-    assert(spark.read.json(s"$base/resume/input").count() == 46)
-    assert(r.results.agg(org.apache.spark.sql.functions.min(col("doc_id"))).head().getLong(0) >= 51)
-    // resuming again is a no-op
-    val again = BatchWorkflow.resume(docs.filter(col("doc_id").between(1, 50)), base)
-    assert(again.results.count() + again.errors.count() == 0)
+    withTempDir("graft_resume") { base =>
+      // first (interrupted) run covers docs 1-50
+      BatchWorkflow.run(docs.filter(col("doc_id").between(1, 50)), base)
+      // resume over the full 1-96 population picks up only 51-96
+      val r = BatchWorkflow.resume(docs.filter(col("doc_id").between(1, 96)), base)
+      assert(r.results.count() + r.errors.count() == 46)
+      assert(spark.read.json(s"$base/resume/input").count() == 46)
+      assert(r.results.agg(org.apache.spark.sql.functions.min(col("doc_id"))).head().getLong(0) >= 51)
+      // resuming again is a no-op
+      val again = BatchWorkflow.resume(docs.filter(col("doc_id").between(1, 50)), base)
+      assert(again.results.count() + again.errors.count() == 0)
+    }
   }
 
   test("resume reads saved outputs under a prefix holding glob metacharacters") {
     // the writer takes the path literally and the reader globs it: a
     // saved output the read cannot resolve must not read as "nothing
     // saved" and reprocess every document
-    val base = java.nio.file.Files.createTempDirectory("graft_resume[1").toString
-    BatchWorkflow.run(docs.filter(col("doc_id").between(1, 50)), base)
-    val r = BatchWorkflow.resume(docs.filter(col("doc_id").between(1, 96)), base)
-    assert(r.results.count() + r.errors.count() == 46)
-    assert(r.results.agg(org.apache.spark.sql.functions.min(col("doc_id"))).head().getLong(0) >= 51)
+    withTempDir("graft_resume[1") { base =>
+      BatchWorkflow.run(docs.filter(col("doc_id").between(1, 50)), base)
+      val r = BatchWorkflow.resume(docs.filter(col("doc_id").between(1, 96)), base)
+      assert(r.results.count() + r.errors.count() == 46)
+      assert(r.results.agg(org.apache.spark.sql.functions.min(col("doc_id"))).head().getLong(0) >= 51)
+    }
   }
 
   test("batch workflow halts when the sample request fails validation") {
-    val base = java.nio.file.Files.createTempDirectory("graft_wf_halt").toString
-    // doc 0 has max_tokens=0 → pre-flight fails → halt, like the reference
-    val r = BatchWorkflow.run(docs.filter(col("doc_id") < 10), base)
-    assert(r.finalStatus == "validation_failed")
-    assert(r.results.isEmpty && r.errors.isEmpty)
-    // the input is written under a staging name and deleted on a halt:
-    // nothing counts as submitted
-    assert(leftovers(base) == Seq.empty)
-    assert(!new java.io.File(s"$base/input").exists())
+    withTempDir("graft_wf_halt") { base =>
+      // doc 0 has max_tokens=0 → pre-flight fails → halt, like the reference
+      val r = BatchWorkflow.run(docs.filter(col("doc_id") < 10), base)
+      assert(r.finalStatus == "validation_failed")
+      assert(r.results.isEmpty && r.errors.isEmpty)
+      // the input is written under a staging name and deleted on a halt:
+      // nothing counts as submitted
+      assert(leftovers(base) == Seq.empty)
+      assert(!new java.io.File(s"$base/input").exists())
+    }
   }
 
   /** What a workflow run left under `base` besides its outputs: the
@@ -163,23 +169,25 @@ class GenAISpec extends SparkSpec {
     import spark.implicits._
     val ids = Seq(-5L, 0L, Long.MinValue, Long.MaxValue)
     val in = ids.map(i => (i, "fast value", "en")).toDF("doc_id", "text", "lang")
-    val base = java.nio.file.Files.createTempDirectory("graft_wf_ids").toString
-    val r = BatchWorkflow.run(in, base, validate = false)
-    val back = r.results.unionByName(r.errors).select("doc_id").as[Long].collect()
-    assert(back.sorted.toSeq == ids.sorted, back.mkString(","))
-    // the request file reads back to the same ids
-    assert(Requests.fromJsonLines(spark, s"$base/input").select("doc_id").as[Long]
-      .collect().sorted.toSeq == ids.sorted)
+    withTempDir("graft_wf_ids") { base =>
+      val r = BatchWorkflow.run(in, base, validate = false)
+      val back = r.results.unionByName(r.errors).select("doc_id").as[Long].collect()
+      assert(back.sorted.toSeq == ids.sorted, back.mkString(","))
+      // the request file reads back to the same ids
+      assert(Requests.fromJsonLines(spark, s"$base/input").select("doc_id").as[Long]
+        .collect().sorted.toSeq == ids.sorted)
+    }
   }
 
   test("written requests read back to the request records") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_req_back").toString
-    val some = reqs.filter(col("doc_id") < 120)
-    Jsonl.writeLines(Requests.toJsonLines(some), dir)
-    val back = Requests.fromJsonLines(spark, dir)
-    assert(back.columns.toSeq == some.columns.toSeq)
-    assert(back.schema.map(_.dataType) == some.schema.map(_.dataType))
-    assert(back.exceptAll(some).isEmpty && some.exceptAll(back).isEmpty)
+    withTempDir("graft_req_back") { dir =>
+      val some = reqs.filter(col("doc_id") < 120)
+      Jsonl.writeLines(Requests.toJsonLines(some), dir)
+      val back = Requests.fromJsonLines(spark, dir)
+      assert(back.columns.toSeq == some.columns.toSeq)
+      assert(back.schema.map(_.dataType) == some.schema.map(_.dataType))
+      assert(back.exceptAll(some).isEmpty && some.exceptAll(back).isEmpty)
+    }
   }
 
   test("one save splits results and errors for jsonl, csv and parquet") {
@@ -190,93 +198,97 @@ class GenAISpec extends SparkSpec {
       when(col("doc_id") === 7, lit(null).cast("int")).otherwise(col("status_code")))
     val noErrors = withNull.filter(col("doc_id") =!= 53)
     for (ext <- Seq("jsonl", "csv", "parquet"); (in, nErrors) <- Seq(withNull -> 1L, noErrors -> 0L)) {
-      val base = java.nio.file.Files.createTempDirectory("graft_split").toString
-      val (res, err) = (s"$base/results.$ext", s"$base/errors.$ext")
-      val (_, jobs) = jobsOf(ResultSink.saveSplit(in, Responses.isResult, res, err))
-      // an empty side is a zero-row save of its own
-      assert(jobs.size == (if (nErrors == 0) 2 else 1), s"$ext: $jobs")
-      val reader = spark.read.schema(in.schema)
-      def read(p: String) = (ext match {
-        case "csv" => reader.option("header", "true").csv(p)
-        case "jsonl" => reader.json(p)
-        case "parquet" => reader.parquet(p)
-      }).select("doc_id", "status_code")
-      val (r, e) = (read(res), read(err))
-      assert(r.count() == Responses.results(in).count(), ext)
-      assert(r.filter(col("status_code") =!= 200 || col("doc_id") === 7).isEmpty, ext)
-      assert(e.count() == nErrors, ext)
-      assert(e.filter(col("status_code") === 200 || col("doc_id") === 7).isEmpty, ext)
-      assert(new java.io.File(err).isDirectory, ext)
-      for (side <- Seq(res, err)) assert(new java.io.File(s"$side/_SUCCESS").isFile, s"$side")
-      // both sides read back without a schema, as a plain save's output
-      // does, the empty one too
-      val plain = ext match {
-        case "csv" => spark.read.option("header", "true").csv(err)
-        case "jsonl" => spark.read.json(err)
-        case "parquet" => spark.read.parquet(err)
+      withTempDir("graft_split") { base =>
+        val (res, err) = (s"$base/results.$ext", s"$base/errors.$ext")
+        val (_, jobs) = jobsOf(ResultSink.saveSplit(in, Responses.isResult, res, err))
+        // an empty side is a zero-row save of its own
+        assert(jobs.size == (if (nErrors == 0) 2 else 1), s"$ext: $jobs")
+        val reader = spark.read.schema(in.schema)
+        def read(p: String) = (ext match {
+          case "csv" => reader.option("header", "true").csv(p)
+          case "jsonl" => reader.json(p)
+          case "parquet" => reader.parquet(p)
+        }).select("doc_id", "status_code")
+        val (r, e) = (read(res), read(err))
+        assert(r.count() == Responses.results(in).count(), ext)
+        assert(r.filter(col("status_code") =!= 200 || col("doc_id") === 7).isEmpty, ext)
+        assert(e.count() == nErrors, ext)
+        assert(e.filter(col("status_code") === 200 || col("doc_id") === 7).isEmpty, ext)
+        assert(new java.io.File(err).isDirectory, ext)
+        for (side <- Seq(res, err)) assert(new java.io.File(s"$side/_SUCCESS").isFile, s"$side")
+        // both sides read back without a schema, as a plain save's output
+        // does, the empty one too
+        val plain = ext match {
+          case "csv" => spark.read.option("header", "true").csv(err)
+          case "jsonl" => spark.read.json(err)
+          case "parquet" => spark.read.parquet(err)
+        }
+        assert(plain.count() == nErrors, ext)
+        // JSON omits NULL fields and infers its columns in name order
+        if (ext != "jsonl")
+          assert(plain.columns.toSeq == in.columns.toSeq, s"$ext: ${plain.columns.mkString(",")}")
+        assert(leftovers(base) == Seq.empty, ext)
       }
-      assert(plain.count() == nErrors, ext)
-      // JSON omits NULL fields and infers its columns in name order
-      if (ext != "jsonl")
-        assert(plain.columns.toSeq == in.columns.toSeq, s"$ext: ${plain.columns.mkString(",")}")
-      assert(leftovers(base) == Seq.empty, ext)
     }
   }
 
   test("a run with no errors saves an empty errors.jsonl, and resuming it is a no-op") {
-    val base = java.nio.file.Files.createTempDirectory("graft_wf_noerr").toString
-    val in = docs.filter(col("doc_id").between(1, 40))
-    val r = BatchWorkflow.run(in, base)
-    assert(r.finalStatus == "completed")
-    assert(r.errors.isEmpty && r.results.count() == 40)
-    assert(new java.io.File(s"$base/errors.jsonl").isDirectory)
-    assert(Jsonl.read(spark, org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT"),
-      s"$base/errors.jsonl").isEmpty)
-    for (_ <- 1 to 2) {
-      val again = BatchWorkflow.resume(in, base)
-      assert(again.finalStatus == "completed")
-      assert(again.results.isEmpty && again.errors.isEmpty)
+    withTempDir("graft_wf_noerr") { base =>
+      val in = docs.filter(col("doc_id").between(1, 40))
+      val r = BatchWorkflow.run(in, base)
+      assert(r.finalStatus == "completed")
+      assert(r.errors.isEmpty && r.results.count() == 40)
+      assert(new java.io.File(s"$base/errors.jsonl").isDirectory)
+      assert(Jsonl.read(spark, org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT"),
+        s"$base/errors.jsonl").isEmpty)
+      for (_ <- 1 to 2) {
+        val again = BatchWorkflow.resume(in, base)
+        assert(again.finalStatus == "completed")
+        assert(again.results.isEmpty && again.errors.isEmpty)
+      }
+      assert(leftovers(base) == Seq.empty)
     }
-    assert(leftovers(base) == Seq.empty)
   }
 
   test("no staging or split directory is left after a run, a halt or a throw") {
-    val base = java.nio.file.Files.createTempDirectory("graft_wf_left").toString
-    BatchWorkflow.run(docs.filter(col("doc_id").between(1, 30)), s"$base/ok")
-    BatchWorkflow.run(docs.filter(col("doc_id") < 10), s"$base/halt")
-    // the input write throws on one row
-    val throwing = docs.filter(col("doc_id").between(1, 30)).withColumn("text",
-      when(col("doc_id") === 7, raise_error(lit("boom"))).otherwise(col("text")))
-    intercept[Exception](BatchWorkflow.run(throwing, s"$base/throw"))
-    assert(!new java.io.File(s"$base/throw/input").exists())
-    // the split save throws on one row
-    val parsed = Responses.parse(Simulator.respond(reqs.filter(col("doc_id").between(1, 30))))
-      .withColumn("content", when(col("doc_id") === 7, raise_error(lit("boom")))
-        .otherwise(col("content")))
-    intercept[Exception](ResultSink.saveSplit(parsed, Responses.isResult,
-      s"$base/split/results.jsonl", s"$base/split/errors.jsonl"))
-    assert(leftovers(base) == Seq.empty, leftovers(base))
+    withTempDir("graft_wf_left") { base =>
+      BatchWorkflow.run(docs.filter(col("doc_id").between(1, 30)), s"$base/ok")
+      BatchWorkflow.run(docs.filter(col("doc_id") < 10), s"$base/halt")
+      // the input write throws on one row
+      val throwing = docs.filter(col("doc_id").between(1, 30)).withColumn("text",
+        when(col("doc_id") === 7, raise_error(lit("boom"))).otherwise(col("text")))
+      intercept[Exception](BatchWorkflow.run(throwing, s"$base/throw"))
+      assert(!new java.io.File(s"$base/throw/input").exists())
+      // the split save throws on one row
+      val parsed = Responses.parse(Simulator.respond(reqs.filter(col("doc_id").between(1, 30))))
+        .withColumn("content", when(col("doc_id") === 7, raise_error(lit("boom")))
+          .otherwise(col("content")))
+      intercept[Exception](ResultSink.saveSplit(parsed, Responses.isResult,
+        s"$base/split/results.jsonl", s"$base/split/errors.jsonl"))
+      assert(leftovers(base) == Seq.empty, leftovers(base))
+    }
   }
 
   test("run and resume evaluate their input subtree once: pinned job counts") {
-    val base = java.nio.file.Files.createTempDirectory("graft_wf_jobs").toString
-    // JSONL write + the one results/errors save; the pre-flight
-    // verdict, the requests per shard and the status ride as observed
-    // metrics, not jobs of their own, and the driver writes the
-    // manifest
-    val (head, all) = (docs.filter(col("doc_id").between(1, 60)),
-      docs.filter(col("doc_id").between(1, 96)))
-    val (first, runJobs) = jobsOf(BatchWorkflow.run(head, base))
-    assert(first.finalStatus == "completed_with_errors") // doc 53
-    assert(runJobs.size == 2, s"run: $runJobs")
-    assert(runJobs.count(_ == "save results and errors") == 1, s"run: $runJobs")
-    // resume's input subtree adds the saved-JSONL scan and the
-    // anti-join, all inside the input write; its errors side is empty,
-    // which its zero-row save adds
-    val (resumed, resumeJobs) = jobsOf(BatchWorkflow.resume(all, base))
-    assert(resumed.finalStatus == "completed")
-    assert(resumed.results.count() == 36)
-    assert(resumeJobs.size == 4, s"resume: $resumeJobs")
+    withTempDir("graft_wf_jobs") { base =>
+      // JSONL write + the one results/errors save; the pre-flight
+      // verdict, the requests per shard and the status ride as observed
+      // metrics, not jobs of their own, and the driver writes the
+      // manifest
+      val (head, all) = (docs.filter(col("doc_id").between(1, 60)),
+        docs.filter(col("doc_id").between(1, 96)))
+      val (first, runJobs) = jobsOf(BatchWorkflow.run(head, base))
+      assert(first.finalStatus == "completed_with_errors") // doc 53
+      assert(runJobs.size == 2, s"run: $runJobs")
+      assert(runJobs.count(_ == "save results and errors") == 1, s"run: $runJobs")
+      // resume's input subtree adds the saved-JSONL scan and the
+      // anti-join, all inside the input write; its errors side is empty,
+      // which its zero-row save adds
+      val (resumed, resumeJobs) = jobsOf(BatchWorkflow.resume(all, base))
+      assert(resumed.finalStatus == "completed")
+      assert(resumed.results.count() == 36)
+      assert(resumeJobs.size == 4, s"resume: $resumeJobs")
+    }
   }
 
   test("pre-flight sample is the orderBy(doc_id).limit(1) row, nulls first") {
@@ -295,10 +307,11 @@ class GenAISpec extends SparkSpec {
       val in = rows.toDF("doc_id", "text", "lang")
       val probe = Validation.validate(Requests.chatRequests(in).orderBy(col("doc_id")).limit(1))
       val sampleInvalid = probe.filter(!col("is_valid")).count() > 0
-      val base = java.nio.file.Files.createTempDirectory("graft_wf_sample").toString
-      val r = BatchWorkflow.run(in, base)
-      assert((r.finalStatus == "validation_failed") == sampleInvalid,
-        s"case $i: ${r.finalStatus}, sample invalid = $sampleInvalid")
+      withTempDir("graft_wf_sample") { base =>
+        val r = BatchWorkflow.run(in, base)
+        assert((r.finalStatus == "validation_failed") == sampleInvalid,
+          s"case $i: ${r.finalStatus}, sample invalid = $sampleInvalid")
+      }
     }
     assert(Seq(true, false, true, false) == cases.map { rows =>
       Validation.validate(Requests.chatRequests(rows.toDF("doc_id", "text", "lang"))
@@ -307,18 +320,19 @@ class GenAISpec extends SparkSpec {
   }
 
   test("the workflow's observations do not collide with the caller's own") {
-    val base = java.nio.file.Files.createTempDirectory("graft_wf_obs").toString
-    // a caller observing its input under the names a workflow would
-    // pick for its own probes
-    val mine = org.apache.spark.sql.Observation("sample")
-    val in = docs.filter(col("doc_id").between(1, 40))
-      .observe(mine, count(lit(1)).as("n"))
-      .observe("preflight", count(lit(1)).as("n"))
-    val r = BatchWorkflow.run(in, base)
-    assert(r.finalStatus == "completed")
-    assert(r.results.count() == 40)
-    // the input subtree ran once, inside the workflow's materialization
-    assert(mine.get("n") == 40L)
+    withTempDir("graft_wf_obs") { base =>
+      // a caller observing its input under the names a workflow would
+      // pick for its own probes
+      val mine = org.apache.spark.sql.Observation("sample")
+      val in = docs.filter(col("doc_id").between(1, 40))
+        .observe(mine, count(lit(1)).as("n"))
+        .observe("preflight", count(lit(1)).as("n"))
+      val r = BatchWorkflow.run(in, base)
+      assert(r.finalStatus == "completed")
+      assert(r.results.count() == 40)
+      // the input subtree ran once, inside the workflow's materialization
+      assert(mine.get("n") == 40L)
+    }
   }
 
   test("monitor polls to each terminal state and times out on a stuck job") {
@@ -353,25 +367,26 @@ class GenAISpec extends SparkSpec {
   }
 
   test("batch workflow reports failed and timeout jobs without retrieving") {
-    val base = java.nio.file.Files.createTempDirectory("graft_wf_mon").toString
-    val good = docs.filter(col("doc_id").between(1, 20))
-    val failed = BatchWorkflow.run(good, s"$base/f",
-      jobStatus = Some(() => "failed"))
-    assert(failed.finalStatus == "failed")
-    assert(failed.results.isEmpty && failed.errors.isEmpty)
+    withTempDir("graft_wf_mon") { base =>
+      val good = docs.filter(col("doc_id").between(1, 20))
+      val failed = BatchWorkflow.run(good, s"$base/f",
+        jobStatus = Some(() => "failed"))
+      assert(failed.finalStatus == "failed")
+      assert(failed.results.isEmpty && failed.errors.isEmpty)
 
-    var now = 0L
-    val timedOut = BatchWorkflow.run(good, s"$base/t",
-      jobStatus = Some(() => "in_progress"),
-      pollIntervalMs = 1000L, timeoutMs = 3000L,
-      clock = () => now, sleep = ms => now += ms)
-    assert(timedOut.finalStatus == "timeout")
-    assert(timedOut.results.isEmpty && timedOut.errors.isEmpty)
+      var now = 0L
+      val timedOut = BatchWorkflow.run(good, s"$base/t",
+        jobStatus = Some(() => "in_progress"),
+        pollIntervalMs = 1000L, timeoutMs = 3000L,
+        clock = () => now, sleep = ms => now += ms)
+      assert(timedOut.finalStatus == "timeout")
+      assert(timedOut.results.isEmpty && timedOut.errors.isEmpty)
 
-    val ok = BatchWorkflow.run(good, s"$base/ok",
-      jobStatus = Some(() => "completed"))
-    assert(ok.finalStatus == "completed")
-    assert(ok.results.count() == 20)
+      val ok = BatchWorkflow.run(good, s"$base/ok",
+        jobStatus = Some(() => "completed"))
+      assert(ok.finalStatus == "completed")
+      assert(ok.results.count() == 20)
+    }
   }
 
   test("visual requests carry image part, body params, and the o-series temperature rule") {
@@ -399,17 +414,18 @@ class GenAISpec extends SparkSpec {
   }
 
   test("result sink writes csv, jsonl and parquet") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val small = Responses.parse(Simulator.respond(reqs.limit(20)))
-    for (ext <- Seq("csv", "jsonl", "parquet")) {
-      val p = s"$base/out.$ext"
-      ResultSink.save(small, p)
-      val readBack = ext match {
-        case "csv" => spark.read.option("header", "true").csv(p)
-        case "jsonl" => spark.read.json(p)
-        case "parquet" => spark.read.parquet(p)
+    withTempDir("graft_sink") { base =>
+      val small = Responses.parse(Simulator.respond(reqs.limit(20)))
+      for (ext <- Seq("csv", "jsonl", "parquet")) {
+        val p = s"$base/out.$ext"
+        ResultSink.save(small, p)
+        val readBack = ext match {
+          case "csv" => spark.read.option("header", "true").csv(p)
+          case "jsonl" => spark.read.json(p)
+          case "parquet" => spark.read.parquet(p)
+        }
+        assert(readBack.count() == 20, s"sink $ext")
       }
-      assert(readBack.count() == 20, s"sink $ext")
     }
   }
 
@@ -479,14 +495,15 @@ class GenAISpec extends SparkSpec {
 
   test("vertex retrieval round-trips a GCS-style predictions directory") {
     val vreqs = VertexRequests.generateContentRequests(docs.limit(20))
-    val dir = java.nio.file.Files.createTempDirectory("graft_vertex").toString
-    // the reference's layout: {output_uri}/{job}/predictions.jsonl
-    Jsonl.writeLines(VertexResults.simulateLines(vreqs), s"$dir/job-0/predictions.jsonl")
-    val res = VertexResults.readOutputDir(spark, dir)
-    assert(res.count() == 20)
-    assert(res.filter(col("prediction").isin("positive", "negative")).count() == 20)
-    assert(res.filter(col("prompt_tokens").isNull || col("candidates_tokens") =!= 1L).count() == 0)
-    assert(res.filter(col("request_text").startsWith("Classify")).count() == 20)
+    withTempDir("graft_vertex") { dir =>
+      // the reference's layout: {output_uri}/{job}/predictions.jsonl
+      Jsonl.writeLines(VertexResults.simulateLines(vreqs), s"$dir/job-0/predictions.jsonl")
+      val res = VertexResults.readOutputDir(spark, dir)
+      assert(res.count() == 20)
+      assert(res.filter(col("prediction").isin("positive", "negative")).count() == 20)
+      assert(res.filter(col("prompt_tokens").isNull || col("candidates_tokens") =!= 1L).count() == 0)
+      assert(res.filter(col("request_text").startsWith("Classify")).count() == 20)
+    }
   }
 
   test("vertex retrieval from a BigQuery-shaped table matches the JSONL path") {
@@ -529,59 +546,63 @@ class GenAISpec extends SparkSpec {
   }
 
   test("cleanup manifest deletes registered artifacts and is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cleanup").toString
-    val m = new CleanupManifest(spark)
-    Jsonl.writeLines(Requests.toJsonLines(reqs.limit(5)), s"$dir/a")
-    Jsonl.writeLines(Requests.toJsonLines(reqs.limit(5)), s"$dir/b")
-    m.register(s"$dir/a"); m.register(s"$dir/b")
-    assert(m.registered.size == 2)
-    val r = m.cleanup()
-    assert(r.size == 2 && r.values.forall(identity), r.toString)
-    assert(!new java.io.File(s"$dir/a").exists && !new java.io.File(s"$dir/b").exists)
-    assert(m.registered.isEmpty)
-    // re-running cleanup on nothing (and on already-deleted paths) is a no-op
-    m.register(s"$dir/a")
-    assert(m.cleanup() == Map(s"$dir/a" -> true))
+    withTempDir("graft_cleanup") { dir =>
+      val m = new CleanupManifest(spark)
+      Jsonl.writeLines(Requests.toJsonLines(reqs.limit(5)), s"$dir/a")
+      Jsonl.writeLines(Requests.toJsonLines(reqs.limit(5)), s"$dir/b")
+      m.register(s"$dir/a"); m.register(s"$dir/b")
+      assert(m.registered.size == 2)
+      val r = m.cleanup()
+      assert(r.size == 2 && r.values.forall(identity), r.toString)
+      assert(!new java.io.File(s"$dir/a").exists && !new java.io.File(s"$dir/b").exists)
+      assert(m.registered.isEmpty)
+      // re-running cleanup on nothing (and on already-deleted paths) is a no-op
+      m.register(s"$dir/a")
+      assert(m.cleanup() == Map(s"$dir/a" -> true))
+    }
   }
 
   test("vertex workflow runs end-to-end over the JSONL input shape") {
-    val base = java.nio.file.Files.createTempDirectory("graft_vwf").toString
-    val r = VertexWorkflow.run(docs.limit(30), s"$base/input", s"$base/output",
-      localSavePath = Some(s"$base/local.parquet"))
-    assert(r.finalStatus == "completed")
-    assert(r.results.get.count() == 30)
-    assert(spark.read.parquet(s"$base/local.parquet").count() == 30)
-    // both the input artifact and the job output dir are registered
-    assert(r.cleanup.registered.toSet ==
-      Set(s"$base/input", s"$base/output/job-0"))
-    val outcome = r.cleanup.cleanup()
-    assert(outcome.values.forall(identity), outcome.toString)
-    assert(!new java.io.File(s"$base/input").exists)
-    assert(!new java.io.File(s"$base/output/job-0").exists)
+    withTempDir("graft_vwf") { base =>
+      val r = VertexWorkflow.run(docs.limit(30), s"$base/input", s"$base/output",
+        localSavePath = Some(s"$base/local.parquet"))
+      assert(r.finalStatus == "completed")
+      assert(r.results.get.count() == 30)
+      assert(spark.read.parquet(s"$base/local.parquet").count() == 30)
+      // both the input artifact and the job output dir are registered
+      assert(r.cleanup.registered.toSet ==
+        Set(s"$base/input", s"$base/output/job-0"))
+      val outcome = r.cleanup.cleanup()
+      assert(outcome.values.forall(identity), outcome.toString)
+      assert(!new java.io.File(s"$base/input").exists)
+      assert(!new java.io.File(s"$base/output/job-0").exists)
+    }
   }
 
   test("vertex workflow bq:// input writes the single-request-column table") {
-    val base = java.nio.file.Files.createTempDirectory("graft_vwf_bq").toString
-    val r = VertexWorkflow.run(docs.limit(10), s"bq://$base/reqtable", s"$base/output")
-    assert(r.finalStatus == "completed")
-    val table = spark.read.parquet(s"$base/reqtable")
-    assert(table.columns.toSeq == Seq("request"))
-    assert(table.count() == 10)
-    assert(r.cleanup.registered.contains(s"$base/reqtable"))
+    withTempDir("graft_vwf_bq") { base =>
+      val r = VertexWorkflow.run(docs.limit(10), s"bq://$base/reqtable", s"$base/output")
+      assert(r.finalStatus == "completed")
+      val table = spark.read.parquet(s"$base/reqtable")
+      assert(table.columns.toSeq == Seq("request"))
+      assert(table.count() == 10)
+      assert(r.cleanup.registered.contains(s"$base/reqtable"))
+    }
   }
 
   test("vertex workflow halts on validation failure and failed jobs") {
-    val base = java.nio.file.Files.createTempDirectory("graft_vwf_halt").toString
-    val bad = VertexWorkflow.run(docs.limit(5), s"$base/i1", s"$base/o1",
-      modelId = "not-a-gemini-model")
-    assert(bad.finalStatus == "validation_failed:unknown_model")
-    assert(bad.results.isEmpty && bad.cleanup.registered.isEmpty)
-    val failed = VertexWorkflow.run(docs.limit(5), s"$base/i2", s"$base/o2",
-      jobStatus = Some(() => "failed"))
-    assert(failed.finalStatus == "failed" && failed.results.isEmpty)
-    // the input was already uploaded when the job failed — it must be
-    // in the manifest so cleanup can reclaim it (reference behavior)
-    assert(failed.cleanup.registered == Seq(s"$base/i2"))
+    withTempDir("graft_vwf_halt") { base =>
+      val bad = VertexWorkflow.run(docs.limit(5), s"$base/i1", s"$base/o1",
+        modelId = "not-a-gemini-model")
+      assert(bad.finalStatus == "validation_failed:unknown_model")
+      assert(bad.results.isEmpty && bad.cleanup.registered.isEmpty)
+      val failed = VertexWorkflow.run(docs.limit(5), s"$base/i2", s"$base/o2",
+        jobStatus = Some(() => "failed"))
+      assert(failed.finalStatus == "failed" && failed.results.isEmpty)
+      // the input was already uploaded when the job failed — it must be
+      // in the manifest so cleanup can reclaim it (reference behavior)
+      assert(failed.cleanup.registered == Seq(s"$base/i2"))
+    }
   }
 
   test("g14 end state: every doc exactly once, resume touches only the unprocessed tail") {
@@ -617,16 +638,17 @@ class GenAISpec extends SparkSpec {
   }
 
   test("batch manifest metadata survives quotes and backslashes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_meta").toString
-    val raw = """has "quote" and \slash"""
-    BatchWorkflow.run(docs.filter(col("doc_id").between(1, 5)), dir,
-      metadata = Map("description" -> raw, "job" -> "exam"))
-    val metaStr = Jsonl.read(spark, s"$dir/batches").select("metadata").head().getString(0)
-    val back = spark.range(1)
-      .select(get_json_object(lit(metaStr), "$.description").as("d"),
-        get_json_object(lit(metaStr), "$.job").as("j")).head()
-    assert(back.getString(0) == raw, s"metadata JSON mangled: $metaStr")
-    assert(back.getString(1) == "exam")
+    withTempDir("graft_meta") { dir =>
+      val raw = """has "quote" and \slash"""
+      BatchWorkflow.run(docs.filter(col("doc_id").between(1, 5)), dir,
+        metadata = Map("description" -> raw, "job" -> "exam"))
+      val metaStr = Jsonl.read(spark, s"$dir/batches").select("metadata").head().getString(0)
+      val back = spark.range(1)
+        .select(get_json_object(lit(metaStr), "$.description").as("d"),
+          get_json_object(lit(metaStr), "$.job").as("j")).head()
+      assert(back.getString(0) == raw, s"metadata JSON mangled: $metaStr")
+      assert(back.getString(1) == "exam")
+    }
   }
 
   test("g16 budget shards partition the corpus in doc_id order with bounded overshoot") {

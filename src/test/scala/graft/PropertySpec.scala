@@ -100,12 +100,13 @@ class PropertySpec extends SparkSpec {
     // content-defined chunking exists.
     val base = (1 to 60).map(i => s"w${i * 7}").mkString(" ") // ~400 chars
     val corpus = Seq((1L, base), (2L, "INSERTED " + base))
-    val dir = java.nio.file.Files.createTempDirectory("m5cdc").toString
-    corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val cdcShared = SparkEntry.queries("m5_cdc_chunks")(spark, dir).count()
-    val fixedShared = SparkEntry.queries("m4_chunk_dedup")(spark, dir).count()
-    assert(cdcShared >= 2, s"CDC found only $cdcShared shared chunks after the insertion")
-    assert(fixedShared == 0, s"fixed-offset chunking unexpectedly survived: $fixedShared")
+    withTempDir("m5cdc") { dir =>
+      corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val cdcShared = SparkEntry.queries("m5_cdc_chunks")(spark, dir).count()
+      val fixedShared = SparkEntry.queries("m4_chunk_dedup")(spark, dir).count()
+      assert(cdcShared >= 2, s"CDC found only $cdcShared shared chunks after the insertion")
+      assert(fixedShared == 0, s"fixed-offset chunking unexpectedly survived: $fixedShared")
+    }
   }
 
   test("perceptual hash survives a byte edit that changes the md5 fingerprint") {
@@ -118,18 +119,19 @@ class PropertySpec extends SparkSpec {
     assert(base(0) != base(1))
     val swapped = "" + base(1) + base(0) + base.substring(2)
     val corpus = Seq((1L, base), (2L, swapped), (3L, "a completely different payload " * 5))
-    val dir = java.nio.file.Files.createTempDirectory("m6ph").toString
-    corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("m6_perceptual_hash")(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(3)))).toMap
-    assert(out(1L)._1 == out(2L)._1, s"aHash diverged under a span-local swap: $out")
-    assert(out(1L)._2 == 2L, s"exact-phash group should pair docs 1+2: $out")
-    assert(out(3L)._1 != out(1L)._1, s"unrelated doc collided: $out")
-    // and the byte-exact view really does see two different documents
-    val fps = Tables.documents(spark, dir)
-      .select(org.apache.spark.sql.functions.md5(
-        org.apache.spark.sql.functions.col("text").cast("binary"))).distinct().count()
-    assert(fps == 3L, s"expected 3 distinct md5s, got $fps")
+    withTempDir("m6ph") { dir =>
+      corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("m6_perceptual_hash")(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(3)))).toMap
+      assert(out(1L)._1 == out(2L)._1, s"aHash diverged under a span-local swap: $out")
+      assert(out(1L)._2 == 2L, s"exact-phash group should pair docs 1+2: $out")
+      assert(out(3L)._1 != out(1L)._1, s"unrelated doc collided: $out")
+      // and the byte-exact view really does see two different documents
+      val fps = Tables.documents(spark, dir)
+        .select(org.apache.spark.sql.functions.md5(
+          org.apache.spark.sql.functions.col("text").cast("binary"))).distinct().count()
+      assert(fps == 3L, s"expected 3 distinct md5s, got $fps")
+    }
   }
 
   test("PrefixOffsets equals the flat cumulative window for arbitrary grouped data") {
@@ -308,19 +310,20 @@ class PropertySpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog again and again", "xx"),
       (2L, "una frase corta para el corpus de referencia y sus pares", null.asInstanceOf[String]),
       (3L, "short", "en"))
-    val dir = java.nio.file.Files.createTempDirectory("t21lang").toString
-    corpus.toDF("doc_id", "text", "lang")
-      .withColumn("source", lit("s0")).withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("t21_perplexity_filter")(spark, dir).collect()
-    assert(out.length == corpus.length,
-      s"every doc must surface regardless of lang coverage, got ${out.length}")
-    val byId = out.map(r => r.getLong(0) -> r).toMap
-    assert(byId(1L).getAs[Boolean]("keep"), "uncalibrated lang must default to keep")
-    assert(byId(2L).getAs[Boolean]("keep"), "NULL lang must default to keep")
-    assert(byId(3L).getAs[Boolean]("keep"), "sub-2-word doc keeps by the no-evidence contract")
-    // calibrated docs still take the real verdict path (ppl populated)
-    assert(!byId(0L).isNullAt(byId(0L).fieldIndex("ppl_milli")))
+    withTempDir("t21lang") { dir =>
+      corpus.toDF("doc_id", "text", "lang")
+        .withColumn("source", lit("s0")).withColumn("n_chars", length(col("text")))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("t21_perplexity_filter")(spark, dir).collect()
+      assert(out.length == corpus.length,
+        s"every doc must surface regardless of lang coverage, got ${out.length}")
+      val byId = out.map(r => r.getLong(0) -> r).toMap
+      assert(byId(1L).getAs[Boolean]("keep"), "uncalibrated lang must default to keep")
+      assert(byId(2L).getAs[Boolean]("keep"), "NULL lang must default to keep")
+      assert(byId(3L).getAs[Boolean]("keep"), "sub-2-word doc keeps by the no-evidence contract")
+      // calibrated docs still take the real verdict path (ppl populated)
+      assert(!byId(0L).isNullAt(byId(0L).fieldIndex("ppl_milli")))
+    }
   }
 
   test("t23 terciles are exact per-lang order statistics with the no-evidence bucket") {
@@ -432,32 +435,33 @@ class PropertySpec extends SparkSpec {
     // corpus; the absolute cap (s8's KmeansTrainCap rule) must bound
     // it. 12005 docs -> 2401 pass the %5 modulus > BpeTrainCap.
     import text.TextAnalysis.{BpeSampleMod, BpeTrainCap}
-    val dir = java.nio.file.Files.createTempDirectory("bpecap").toString
-    spark.range(0, 12005).toDF("doc_id")
-      .withColumn("text", concat(lit("aa bb ab"), lit(" w"), col("doc_id") % 17))
-      .withColumn("lang", lit("en")).withColumn("source", lit("s0"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val sample = text.TextAnalysis.bpeSampleDocs(spark, dir)
-    val ids = sample.select("doc_id").as[Long].collect()
-    assert(ids.length == BpeTrainCap, s"cap did not bind: ${ids.length}")
-    assert(ids.forall(_ % BpeSampleMod == 0), "cap must apply AFTER the modulus")
-    // the kept set is exactly the md5-smallest slice of the modulus
-    // rows — deterministic hash order, no id-prefix bias, and stable
-    // across physical plans (re-run with a different partitioning)
-    val md5Rank = spark.range(0, 12005).filter(col("id") % BpeSampleMod === 0)
-      .select(col("id"), md5(col("id").cast("string")).as("h"))
-      .orderBy(col("h"), col("id")).limit(BpeTrainCap)
-      .select("id").as[Long].collect().toSet
-    assert(ids.toSet == md5Rank, "sample is not the md5-smallest slice")
-    val again = text.TextAnalysis.bpeSampleDocs(spark, dir)
-      .repartition(7).select("doc_id").as[Long].collect().toSet
-    assert(again == ids.toSet, "capped sample changed across runs")
-    // and the trainer still converges on the capped sample: the
-    // planted pair dominates, so round 1 must merge ('a','a')-family
-    // pairs rather than fail on a degenerate sample
-    val merges = text.TextAnalysis.bpeTrain(spark, dir)
-    assert(merges.length == text.TextAnalysis.BpeMerges)
+    withTempDir("bpecap") { dir =>
+      spark.range(0, 12005).toDF("doc_id")
+        .withColumn("text", concat(lit("aa bb ab"), lit(" w"), col("doc_id") % 17))
+        .withColumn("lang", lit("en")).withColumn("source", lit("s0"))
+        .withColumn("n_chars", length(col("text")))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val sample = text.TextAnalysis.bpeSampleDocs(spark, dir)
+      val ids = sample.select("doc_id").as[Long].collect()
+      assert(ids.length == BpeTrainCap, s"cap did not bind: ${ids.length}")
+      assert(ids.forall(_ % BpeSampleMod == 0), "cap must apply AFTER the modulus")
+      // the kept set is exactly the md5-smallest slice of the modulus
+      // rows — deterministic hash order, no id-prefix bias, and stable
+      // across physical plans (re-run with a different partitioning)
+      val md5Rank = spark.range(0, 12005).filter(col("id") % BpeSampleMod === 0)
+        .select(col("id"), md5(col("id").cast("string")).as("h"))
+        .orderBy(col("h"), col("id")).limit(BpeTrainCap)
+        .select("id").as[Long].collect().toSet
+      assert(ids.toSet == md5Rank, "sample is not the md5-smallest slice")
+      val again = text.TextAnalysis.bpeSampleDocs(spark, dir)
+        .repartition(7).select("doc_id").as[Long].collect().toSet
+      assert(again == ids.toSet, "capped sample changed across runs")
+      // and the trainer still converges on the capped sample: the
+      // planted pair dominates, so round 1 must merge ('a','a')-family
+      // pairs rather than fail on a degenerate sample
+      val merges = text.TextAnalysis.bpeTrain(spark, dir)
+      assert(merges.length == text.TextAnalysis.BpeMerges)
+    }
   }
 
   test("t20 learned BPE: double-replace equals the sequential greedy fold on real corpus words") {
@@ -544,16 +548,17 @@ class PropertySpec extends SparkSpec {
       (2L, "common mid pair"),
       (3L, "common mid only3"),
       (4L, "common  common PAIR only4"))
-    val dir = java.nio.file.Files.createTempDirectory("t12df").toString
-    corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = SparkEntry.queries("t12_doc_frequency")(spark, dir)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)), r.getDouble(5))).toMap
-    // (n_distinct, min_df, max_df, n_niche) per doc
-    assert(got(1L) == ((3L, 3L, 4L, 0L), 0.0))
-    assert(got(2L) == ((3L, 3L, 4L, 0L), 0.0))
-    assert(got(3L) == ((3L, 1L, 4L, 1L), 1.0 / 3))
-    assert(got(4L) == ((3L, 1L, 4L, 1L), 1.0 / 3))
+    withTempDir("t12df") { dir =>
+      corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = SparkEntry.queries("t12_doc_frequency")(spark, dir)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)), r.getDouble(5))).toMap
+      // (n_distinct, min_df, max_df, n_niche) per doc
+      assert(got(1L) == ((3L, 3L, 4L, 0L), 0.0))
+      assert(got(2L) == ((3L, 3L, 4L, 0L), 0.0))
+      assert(got(3L) == ((3L, 1L, 4L, 1L), 1.0 / 3))
+      assert(got(4L) == ((3L, 1L, 4L, 1L), 1.0 / 3))
+    }
   }
 
   test("t10 hierarchical prefix sum equals the flat single-window cumsum") {
@@ -668,22 +673,23 @@ class PropertySpec extends SparkSpec {
     val rows = texts.zipWithIndex.map { case (t, i) => (java.lang.Long.valueOf(i.toLong), t) } :+
       ((null: java.lang.Long), "a null doc_id is dropped by both")
     // a multi-partition input: four parquet splits
-    val dir = java.nio.file.Files.createTempDirectory("sketch_fuzz").toString
-    rows.toDF("doc_id", "text").repartition(4).write.mode("overwrite").parquet(dir)
-    val docs = spark.read.parquet(dir)
-    assert(docs.rdd.getNumPartitions > 1)
-    for (words <- Seq(false, true)) {
-      val ref = reference(if (words) wordGrams(docs) else dedup.Dedup.shingles(docs))
-      val got = native(docs, words)
-      assert(got.keySet == ref.keySet, s"words=$words: documents with grams differ")
-      for ((id, want) <- ref)
-        assert(got(id) == want, s"words=$words doc $id '${texts(id.toInt)}'")
+    withTempDir("sketch_fuzz") { dir =>
+      rows.toDF("doc_id", "text").repartition(4).write.mode("overwrite").parquet(dir)
+      val docs = spark.read.parquet(dir)
+      assert(docs.rdd.getNumPartitions > 1)
+      for (words <- Seq(false, true)) {
+        val ref = reference(if (words) wordGrams(docs) else dedup.Dedup.shingles(docs))
+        val got = native(docs, words)
+        assert(got.keySet == ref.keySet, s"words=$words: documents with grams differ")
+        for ((id, want) <- ref)
+          assert(got(id) == want, s"words=$words doc $id '${texts(id.toInt)}'")
+      }
+      // the corners are exercised, not skipped
+      val charDocs = native(docs, words = false).keySet
+      assert(!charDocs.contains(3L) && charDocs.contains(4L), "4 and 5 code points")
+      assert(!charDocs.contains(6L) && charDocs.contains(7L), "4 and 5 astral code points")
+      assert(native(docs, words = false)(10L)._2.size == 1, "repeated grams are one set member")
     }
-    // the corners are exercised, not skipped
-    val charDocs = native(docs, words = false).keySet
-    assert(!charDocs.contains(3L) && charDocs.contains(4L), "4 and 5 code points")
-    assert(!charDocs.contains(6L) && charDocs.contains(7L), "4 and 5 astral code points")
-    assert(native(docs, words = false)(10L)._2.size == 1, "repeated grams are one set member")
   }
 
   test("t24 DSIR resampling moves the kept mixture toward the target distribution") {

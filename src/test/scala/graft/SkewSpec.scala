@@ -63,7 +63,7 @@ class SkewSpec extends SparkSpec {
     * not just feed the hot one.) */
   private lazy val skewDir: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = suiteTempDir("graft_skew")
     val hot = Array.fill(60)("the").mkString(" ") // 56 identical 5-grams/doc
     val docs = (1L to 10000L).map(i => (i, hot)) ++
       (10001L to 10003L).map(i =>
@@ -76,7 +76,7 @@ class SkewSpec extends SparkSpec {
   /** t14's tf/df relations STAGED to parquet — the same data in the
     * scan-level join shape where both sides are bare shuffle stages. */
   private lazy val stagedDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew_staged").toString
+    val dir = suiteTempDir("graft_skew_staged")
     val toks = Tables.documents(spark, skewDir)
       .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("tok"))
       .filter(col("tok") =!= "").select(col("doc_id"), lower(col("tok")).as("tok"))
@@ -208,42 +208,43 @@ class SkewSpec extends SparkSpec {
     // "structural regression" without flaky micro-timing: CI noise
     // lives inside the slack, blanket replication far outside it.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew_flat").toString
-    spark.range(200000)
-      .select((col("id") % 5000).as("tok"), col("id").as("doc_id"))
-      .write.mode("overwrite").parquet(s"$dir/tf")
-    val f = spark.read.parquet(s"$dir/tf")
-    f.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$dir/dfreq")
-    val dd = spark.read.parquet(s"$dir/dfreq")
-    val total = f.select(countDistinct(col("doc_id")).as("n_docs"))
-    // precondition, structural: NOTHING is hot here (40 rows per key
-    // vs a 10k hot threshold), so the salted path must replicate zero
-    // dictionary rows — if this count is ever > 0 the hot predicate
-    // itself regressed
-    val replicated = dd.crossJoin(broadcast(total))
-      .filter(col("df") * 20 >= col("n_docs")).count()
-    assert(replicated == 0, s"unskewed corpus found $replicated hot keys")
-    def bestOf3(df: => org.apache.spark.sql.DataFrame): Double =
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    bestOf3(f.join(dd, Seq("tok"))) // warm-up: pays codegen/JIT once
-    val tPlain = bestOf3(f.join(dd, Seq("tok")))
-    val tSalted = bestOf3(Salted.hotLookupJoin(f, dd, "tok", "df",
-      total, "n_docs", saltBy = col("doc_id")))
-    // ADVICE r14: floor the plain side at 0.5 s before applying the 2x
-    // band — when tPlain is tens of milliseconds the bound used to be
-    // dominated by the 0.5 s constant, and a GC/JIT hiccup landing on
-    // all three salted passes of a loaded CI host could trip it. With
-    // the floor, the structural 2x term dominates and scheduler noise
-    // lives well inside the slack; blanket replication (measured >= 3x
-    // on real corpora) still lands far outside.
-    assert(tSalted <= math.max(tPlain, 0.5) * 2 + 0.5,
-      f"salted join-back cost $tSalted%.2fs vs plain $tPlain%.2fs — " +
-        "past the insurance band, check for blanket replication")
+    withTempDir("graft_skew_flat") { dir =>
+      spark.range(200000)
+        .select((col("id") % 5000).as("tok"), col("id").as("doc_id"))
+        .write.mode("overwrite").parquet(s"$dir/tf")
+      val f = spark.read.parquet(s"$dir/tf")
+      f.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(s"$dir/dfreq")
+      val dd = spark.read.parquet(s"$dir/dfreq")
+      val total = f.select(countDistinct(col("doc_id")).as("n_docs"))
+      // precondition, structural: NOTHING is hot here (40 rows per key
+      // vs a 10k hot threshold), so the salted path must replicate zero
+      // dictionary rows — if this count is ever > 0 the hot predicate
+      // itself regressed
+      val replicated = dd.crossJoin(broadcast(total))
+        .filter(col("df") * 20 >= col("n_docs")).count()
+      assert(replicated == 0, s"unskewed corpus found $replicated hot keys")
+      def bestOf3(df: => org.apache.spark.sql.DataFrame): Double =
+        (1 to 3).map { _ =>
+          val t0 = System.nanoTime()
+          df.write.mode("overwrite").format("noop").save()
+          (System.nanoTime() - t0) / 1e9
+        }.min
+      bestOf3(f.join(dd, Seq("tok"))) // warm-up: pays codegen/JIT once
+      val tPlain = bestOf3(f.join(dd, Seq("tok")))
+      val tSalted = bestOf3(Salted.hotLookupJoin(f, dd, "tok", "df",
+        total, "n_docs", saltBy = col("doc_id")))
+      // ADVICE r14: floor the plain side at 0.5 s before applying the 2x
+      // band — when tPlain is tens of milliseconds the bound used to be
+      // dominated by the 0.5 s constant, and a GC/JIT hiccup landing on
+      // all three salted passes of a loaded CI host could trip it. With
+      // the floor, the structural 2x term dominates and scheduler noise
+      // lives well inside the slack; blanket replication (measured >= 3x
+      // on real corpora) still lands far outside.
+      assert(tSalted <= math.max(tPlain, 0.5) * 2 + 0.5,
+        f"salted join-back cost $tSalted%.2fs vs plain $tPlain%.2fs — " +
+          "past the insurance band, check for blanket replication")
+    }
   }
 
   test("skew-split results equal the unsplit plan's results") {

@@ -1,12 +1,50 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local SparkSession per suite. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `f` on a new temporary directory, then deletes it however
+    * `f` ends, together with whatever was staged for a corpus at it or
+    * under it: the `graft_*` directories of `java.io.tmpdir` named by
+    * such a path's `StagePath.corpusToken`. */
+  def withTempDir[T](prefix: String)(f: String => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir.toString) finally deleteTempDir(dir)
+  }
+
+  private val suiteDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A temporary directory the suite's tests share, deleted as
+    * [[withTempDir]] deletes its own once the suite has run. */
+  def suiteTempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    suiteDirs.add(dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try suiteDirs.forEach(d => deleteTempDir(d)) finally super.afterAll()
+
+  private def deleteTempDir(dir: Path): Unit = {
+    val tokens = if (!Files.exists(dir)) Seq(StagePath.corpusToken(dir.toString)) else {
+      val corpora = Files.walk(dir)
+      try corpora.filter(p => Files.isDirectory(p)).toArray.toSeq
+        .map(p => StagePath.corpusToken(p.toString)) finally corpora.close()
+    }
+    val tmp = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    val staged = try tmp.toArray.toSeq.map(_.asInstanceOf[Path]).filter { p =>
+      val name = p.getFileName.toString
+      name.startsWith("graft_") && tokens.exists(name.contains)
+    } finally tmp.close()
+    (staged :+ dir).foreach(StagePath.deleteRecursively)
+  }
 
   /** The Spark jobs `f` submits, each named by the call site of its
     * SQL execution (adaptive stages are submitted from a pool thread),

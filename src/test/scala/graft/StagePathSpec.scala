@@ -8,17 +8,9 @@ class StagePathSpec extends SparkSpec {
 
   /** Runs `f` on a fresh one-table corpus, so every test stages under
     * its own token, then deletes the corpus and what was staged for it. */
-  private def withCorpus(f: String => Unit): Unit = {
-    val d = Files.createTempDirectory("graft_stagepath_corpus").toString
-    try {
-      spark.range(3).write.parquet(s"$d/t.parquet")
-      f(d)
-    } finally {
-      val tmp = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
-      val staged = try tmp.toArray.toSeq.map(_.asInstanceOf[Path])
-        .filter(_.getFileName.toString.contains(StagePath.corpusToken(d))) finally tmp.close()
-      (staged :+ Paths.get(d)).foreach(StagePath.deleteRecursively)
-    }
+  private def withCorpus(f: String => Unit): Unit = withTempDir("graft_stagepath_corpus") { d =>
+    spark.range(3).write.parquet(s"$d/t.parquet")
+    f(d)
   }
 
   private def marker(dir: Path): Option[String] = {

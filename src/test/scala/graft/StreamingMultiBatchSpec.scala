@@ -22,44 +22,47 @@ class StreamingMultiBatchSpec extends SparkSpec {
     // split the corpus into two files by event_id parity — both halves
     // span the full time range, so batch 2 contains rows that are LATE
     // relative to batch 1's high-water mark
-    val dir = java.nio.file.Files.createTempDirectory("graft_multibatch").toString
-    events.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("overwrite").parquet(dir + "/a")
-    events.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("overwrite").parquet(dir + "/b")
-    val staged = java.nio.file.Files.createTempDirectory("graft_multibatch_in")
-    for ((sub, name) <- Seq("a" -> "part0.parquet", "b" -> "part1.parquet")) {
-      val f = new java.io.File(dir + "/" + sub).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(f.toPath, staged.resolve(name))
+    withTempDir("graft_multibatch") { dir =>
+      events.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("overwrite").parquet(dir + "/a")
+      events.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("overwrite").parquet(dir + "/b")
+      withTempDir("graft_multibatch_in") { stagedDir =>
+        val staged = java.nio.file.Paths.get(stagedDir)
+        for ((sub, name) <- Seq("a" -> "part0.parquet", "b" -> "part1.parquet")) {
+          val f = new java.io.File(dir + "/" + sub).listFiles()
+            .filter(_.getName.endsWith(".parquet")).head
+          java.nio.file.Files.copy(f.toPath, staged.resolve(name))
+        }
+        val schema = StructType(Seq(
+          StructField("event_id", LongType), StructField("ts", LongType),
+          StructField("user_id", LongType), StructField("event_type", StringType),
+          StructField("value", DoubleType)))
+        val agg = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1") // force TWO micro-batches
+          .parquet(staged.toString)
+          .withColumn("ets", timestamp_micros(expr("ts div 1000")))
+          .withWatermark("ets", "10 minutes")
+          .groupBy(window(col("ets"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"), Exact.dsum2(col("value")).as("sum_value"))
+          .select(col("window.start").cast("long").as("hour_s"),
+            col("event_type"), col("n"), col("sum_value"))
+        val q = agg.writeStream.outputMode("complete")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .format("memory").queryName("graft_multibatch").start()
+        q.awaitTermination()
+        assert(q.recentProgress.count(_.numInputRows > 0) == 2,
+          "input must actually arrive as two data micro-batches")
+        val got = s.table("graft_multibatch")
+          .orderBy(col("hour_s"), col("event_type")).collect().toSeq
+        val expected = events
+          .withColumn("ets", timestamp_micros(expr("ts div 1000")))
+          .groupBy(window(col("ets"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"), Exact.dsum2(col("value")).as("sum_value"))
+          .select(col("window.start").cast("long").as("hour_s"),
+            col("event_type"), col("n"), col("sum_value"))
+          .orderBy(col("hour_s"), col("event_type")).collect().toSeq
+        assert(got == expected, "multi-batch complete-mode result diverged from batch")
+      }
     }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val agg = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1") // force TWO micro-batches
-      .parquet(staged.toString)
-      .withColumn("ets", timestamp_micros(expr("ts div 1000")))
-      .withWatermark("ets", "10 minutes")
-      .groupBy(window(col("ets"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), Exact.dsum2(col("value")).as("sum_value"))
-      .select(col("window.start").cast("long").as("hour_s"),
-        col("event_type"), col("n"), col("sum_value"))
-    val q = agg.writeStream.outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .format("memory").queryName("graft_multibatch").start()
-    q.awaitTermination()
-    assert(q.recentProgress.count(_.numInputRows > 0) == 2,
-      "input must actually arrive as two data micro-batches")
-    val got = s.table("graft_multibatch")
-      .orderBy(col("hour_s"), col("event_type")).collect().toSeq
-    val expected = events
-      .withColumn("ets", timestamp_micros(expr("ts div 1000")))
-      .groupBy(window(col("ets"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), Exact.dsum2(col("value")).as("sum_value"))
-      .select(col("window.start").cast("long").as("hour_s"),
-        col("event_type"), col("n"), col("sum_value"))
-      .orderBy(col("hour_s"), col("event_type")).collect().toSeq
-    assert(got == expected, "multi-batch complete-mode result diverged from batch")
   }
 
   test("st8 runs >= 3 real data micro-batches and actually drops late rows") {

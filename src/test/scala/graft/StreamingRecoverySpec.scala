@@ -19,7 +19,7 @@ import graft.streaming.{SessionEvent, Sessionizer}
   */
 class StreamingRecoverySpec extends SparkSpec {
 
-  private val base = java.nio.file.Files.createTempDirectory("graft_recovery").toString
+  private val base = suiteTempDir("graft_recovery")
 
   /** The staged event splits: event_id % 4 → b0..b3, one parquet FILE
     * each (each split interleaves the full time range, so most

@@ -7,25 +7,27 @@ class TableSourceSpec extends SparkSpec {
 
   test("round trip preserves rows across formats") {
     val docs = Tables.documents(spark, sf).select("doc_id", "lang", "source", "n_chars")
-    val base = java.nio.file.Files.createTempDirectory("graft_src").toString
-    for (fmt <- Seq("parquet", "csv", "json", "orc")) {
-      TableSource.write(docs, s"$base/$fmt", fmt)
-      val back = TableSource.read(spark, s"$base/$fmt", fmt)
-      assert(back.count() == docs.count(), fmt)
-      assert(back.agg(sum("n_chars")).head().getLong(0) ==
-        docs.agg(sum("n_chars")).head().getLong(0), fmt)
+    withTempDir("graft_src") { base =>
+      for (fmt <- Seq("parquet", "csv", "json", "orc")) {
+        TableSource.write(docs, s"$base/$fmt", fmt)
+        val back = TableSource.read(spark, s"$base/$fmt", fmt)
+        assert(back.count() == docs.count(), fmt)
+        assert(back.agg(sum("n_chars")).head().getLong(0) ==
+          docs.agg(sum("n_chars")).head().getLong(0), fmt)
+      }
     }
   }
 
   test("partitioned parquet write prunes partitions on read") {
     val docs = Tables.documents(spark, sf)
-    val base = java.nio.file.Files.createTempDirectory("graft_part").toString
-    TableSource.write(docs, s"$base/by_lang", "parquet", partitionBy = Seq("lang"))
-    val en = TableSource.read(spark, s"$base/by_lang").filter(col("lang") === "en")
-    val plan = en.queryExecution.executedPlan.toString
-    assert(en.count() == docs.filter(col("lang") === "en").count())
-    // partition filter must reach the scan, not a post-filter
-    assert(plan.contains("PartitionFilters") || !plan.contains("Filter isnotnull(lang"))
+    withTempDir("graft_part") { base =>
+      TableSource.write(docs, s"$base/by_lang", "parquet", partitionBy = Seq("lang"))
+      val en = TableSource.read(spark, s"$base/by_lang").filter(col("lang") === "en")
+      val plan = en.queryExecution.executedPlan.toString
+      assert(en.count() == docs.filter(col("lang") === "en").count())
+      // partition filter must reach the scan, not a post-filter
+      assert(plan.contains("PartitionFilters") || !plan.contains("Filter isnotnull(lang"))
+    }
   }
 
   test("Tables.events NTZ conversion refuses a non-UTC session") {

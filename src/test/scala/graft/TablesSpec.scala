@@ -18,21 +18,23 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a multi-part table loads with the inferred schema and all its rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    docs.repartition(8).write.parquet(s"$dir/documents.parquet")
-    val parts = new java.io.File(s"$dir/documents.parquet").list().count(_.startsWith("part-"))
-    assert(parts == 8, parts)
-    val (df, jobs) = jobsOf(Tables.documents(spark, dir))
-    assert(jobs.isEmpty, jobs)
-    assert(df.schema == spark.read.parquet(s"$dir/documents.parquet").schema)
-    assert(df.count() == docs.count())
+    withTempDir("graft_tables") { dir =>
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      docs.repartition(8).write.parquet(s"$dir/documents.parquet")
+      val parts = new java.io.File(s"$dir/documents.parquet").list().count(_.startsWith("part-"))
+      assert(parts == 8, parts)
+      val (df, jobs) = jobsOf(Tables.documents(spark, dir))
+      assert(jobs.isEmpty, jobs)
+      assert(df.schema == spark.read.parquet(s"$dir/documents.parquet").schema)
+      assert(df.count() == docs.count())
+    }
   }
 
   test("an empty table directory fails naming its path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables_empty").toString
-    val path = java.nio.file.Files.createDirectory(java.nio.file.Paths.get(dir, "documents.parquet"))
-    val e = intercept[IllegalArgumentException](Tables.documents(spark, dir))
-    assert(e.getMessage.contains(path.toString), e.getMessage)
+    withTempDir("graft_tables_empty") { dir =>
+      val path = java.nio.file.Files.createDirectory(java.nio.file.Paths.get(dir, "documents.parquet"))
+      val e = intercept[IllegalArgumentException](Tables.documents(spark, dir))
+      assert(e.getMessage.contains(path.toString), e.getMessage)
+    }
   }
 }

@@ -13,7 +13,10 @@ Prints total ratio and the top-N per-query swings — the first thing to
 check when a sweep regresses: a uniform swing is host contention, a
 single-query swing is a plan regression. When both lines carry
 per-query `counters`, each swing also shows its Spark job count a -> b:
-a wall swing with a job-count change is a plan change.
+a wall swing with a job-count change is a plan change. When both also
+carry `compiles` (classes Janino compiled for the sample; lines before
+it lack the key), the swing shows that count a -> b too: a warm sample
+that compiles is paying for classes the codegen cache evicted.
 """
 import json
 import os
@@ -69,6 +72,8 @@ def main():
         jobs = ""
         if k in ca and k in cb:
             jobs = f"  jobs {ca[k]['jobs']} -> {cb[k]['jobs']}"
+            if "compiles" in ca[k] and "compiles" in cb[k]:
+                jobs += f"  compiles {ca[k]['compiles']} -> {cb[k]['compiles']}"
         print(f"  {k:28s} {va:6.2f} -> {vb:6.2f}  ({r:.1f}x){jobs}")
 
 if __name__ == "__main__":
